@@ -119,18 +119,19 @@ def run(spark, work_dir: str, blocks_per_window: int = 2) -> dict:
     t0 = time.perf_counter()
     tiles = rp.seed_tiles(spark, grid)
     catalog = rp.file_catalog(spark, files)
-    pruned = rp.prune_tiles(tiles, catalog, subset=list(TILE_IDS))
-    windows = rp.plan_windows(rp.tile_files(pruned, catalog), grid,
+    selected = rp.select_tiles(tiles, subset=list(TILE_IDS))
+    windows = rp.plan_windows(rp.tile_files(selected, catalog), grid,
                               blocks_per_window)
     payloads = pipe.transform_windows(windows)
 
     def measure(batches):
         for pdf in batches:
+            # empty-window marker rows carry no payload and are not windows
+            sizes = [len(p) for p in pdf["payload"] if p is not None]
             yield pd.DataFrame({
-                "batch_bytes": [int(sum(len(p) for p in pdf["payload"]))],
-                "n_rows": [len(pdf)],
-                "max_payload": [int(max((len(p) for p in pdf["payload"]),
-                                        default=0))],
+                "batch_bytes": [int(sum(sizes))],
+                "n_rows": [len(sizes)],
+                "max_payload": [int(max(sizes, default=0))],
             })
 
     stats = (

@@ -408,8 +408,9 @@ def _q71_source_file() -> str:
     return p
 
 
-@register("q71_raster_tile_job", oracle=None)
-def q71(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q71_statuses(spark: SparkSession) -> DataFrame:
+    """The q71 raster tile job's per-tile status frame, unfiltered (q71
+    itself keeps only the processed tiles)."""
     import tempfile
 
     from ..grids import LatLngGrid
@@ -433,7 +434,12 @@ def q71(spark: SparkSession, sf_dir: str) -> DataFrame:
     left, bottom, right, top = _Q71_FOOTPRINT
     files = [{"uri": src, "band": 1,
               "left": left, "bottom": bottom, "right": right, "top": top}]
-    return _tile_value_summary(pipe.run(spark, files))
+    return pipe.run(spark, files)
+
+
+@register("q71_raster_tile_job", oracle=None)
+def q71(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _tile_value_summary(q71_statuses(spark))
 
 
 _Q72_FEATURES = [

@@ -2,13 +2,14 @@
 ``RasterPipe`` (``gfw_pixetl/pipes/raster_pipe.py:15-83``, lifecycle
 SURVEY §3.1/§3.4).
 
-Dataflow (one Spark job, lazy until the final status collect):
+Dataflow (one linear plan, lazy until the status frame is consumed):
 
-    seed tiles (F1)  ->  subset filter (F2)  ->  source-intersects
-    broadcast spatial prune (F3/F6)  ->  target-exists anti-join (F5)
-    ->  windows explode (block-aligned, P5 replaced by fixed sizing)
-    ->  mapInPandas kernel {read S4, calc C1, cast+nodata C3, empty-block
-    filter F8}  ->  groupBy(tile_id) writer sink (S8)  ->  status DF
+    seed tiles (F1)  ->  subset filter (F2)  ->  target-exists anti-join
+    (F5)  ->  broadcast join to the intersecting source files, which is
+    also the source-intersects prune (F3/F6)  ->  windows explode
+    (block-aligned, P5 replaced by fixed sizing)  ->  mapInPandas kernel
+    {read S4, calc C1, cast+nodata C3, empty-block marker F8}  ->
+    groupBy(tile_id) writer sink (S8), which decides every tile's status
     (F9/F10)  ->  manifest aggregation (S10)
 
 Scale notes. Tiles and windows are metadata rows (a few dozen bytes);
@@ -136,45 +137,40 @@ def file_catalog(spark: SparkSession, files: list[dict]) -> DataFrame:
     )
 
 
-def prune_tiles(
-    tiles: DataFrame,
-    catalog: DataFrame,
-    subset: list[str] | None = None,
-    existing: DataFrame | None = None,
-) -> DataFrame:
-    """F2 subset + F3/F6 source-intersects + F5 target-exists pruning.
-
-    The spatial predicate is strict interior overlap (intersects and not
-    merely touches, ``tiles/raster_src_tile.py:155-161``) — pure column
-    comparisons, so Catalyst keeps it inside codegen; the catalog side is
-    broadcast, so pruning is map-only over the tile set.
-    """
-    out = tiles
-    if subset:
-        out = out.filter(F.col("tile_id").isin(subset))
-    overlap = (
+def _overlap():
+    """Strict interior overlap of a tile and a catalog footprint
+    (intersects and not merely touches, ``tiles/raster_src_tile.py:155-161``)
+    — pure column comparisons, so Catalyst keeps it inside codegen."""
+    return (
         (F.col("tile_left") < F.col("f_right"))
         & (F.col("tile_right") > F.col("f_left"))
         & (F.col("tile_bottom") < F.col("f_top"))
         & (F.col("tile_top") > F.col("f_bottom"))
     )
-    out = out.join(F.broadcast(catalog), overlap, "left_semi")
+
+
+def select_tiles(tiles: DataFrame, subset: list[str] | None = None,
+                 existing: DataFrame | None = None) -> DataFrame:
+    """F2 subset + F5 target-exists filters."""
+    if subset:
+        tiles = tiles.filter(F.col("tile_id").isin(subset))
     if existing is not None:
-        out = out.join(existing, "tile_id", "left_anti")
-    return out
+        tiles = tiles.join(existing, "tile_id", "left_anti")
+    return tiles
+
+
+def prune_tiles(tiles: DataFrame, catalog: DataFrame) -> DataFrame:
+    """F3 source-intersects pruning; the catalog side is broadcast, so
+    pruning is map-only over the tile set."""
+    return tiles.join(F.broadcast(catalog), _overlap(), "left_semi")
 
 
 def tile_files(tiles: DataFrame, catalog: DataFrame) -> DataFrame:
     """F6: per-tile list of intersecting source uris, ordered by catalog
-    order (the VRT first-wins merge order, S5)."""
-    overlap = (
-        (F.col("tile_left") < F.col("f_right"))
-        & (F.col("tile_right") > F.col("f_left"))
-        & (F.col("tile_bottom") < F.col("f_top"))
-        & (F.col("tile_top") > F.col("f_bottom"))
-    )
+    order (the VRT first-wins merge order, S5). The inner join drops a
+    tile no file overlaps, so it also prunes like F3."""
     return (
-        tiles.join(F.broadcast(catalog), overlap)
+        tiles.join(F.broadcast(catalog), _overlap())
         .groupBy(
             "tile_id", "tile_left", "tile_bottom", "tile_right", "tile_top"
         )
@@ -221,6 +217,8 @@ def write_tiles(
     ``sources/geotiff.py``); shared by the raster and vector pipes.
     groupBy(tile_id) + applyInPandas = the single-writer-per-tile
     invariant; windowed assembly keeps peak memory at one tile per task.
+    Empty-window markers (``bands == 0``) are dropped on arrival; a tile
+    with only markers is ``skipped (has no data)`` (F9), nothing written.
     The profile mirrors ``gfw_pixetl/tiles/tile.py:54-97`` (tiled layout,
     block size, compression, CRS, nodata, photometric, NBITS) and the
     write is atomic (tmp + rename), matching the reference's
@@ -247,14 +245,20 @@ def write_tiles(
 
     def writer(pdf: pd.DataFrame) -> pd.DataFrame:
         tile_id = pdf["tile_id"].iloc[0]
+        pdf = pdf[pdf["bands"] != 0]  # drop empty-window (F8) markers
+
+        def status(text, path=None):
+            return pd.DataFrame(
+                [(tile_id, text, len(pdf), path)],
+                columns=["tile_id", "status", "n_windows", "out_path"],
+            )
+
+        if pdf.empty:
+            return status("skipped (has no data)")  # F9: nothing written
         errors = pdf[pdf["bands"] < 0]
         if len(errors):
             # any failed window fails the tile; nothing is written (F10)
-            msg = errors["dtype"].iloc[0]
-            return pd.DataFrame(
-                [(tile_id, f"failed - {msg}", int(len(pdf)), None)],
-                columns=["tile_id", "status", "n_windows", "out_path"],
-            )
+            return status(f"failed - {errors['dtype'].iloc[0]}")
         bands = int(pdf["bands"].iloc[0])
         dtype = pdf["dtype"].iloc[0]
         fill = 0 if nodata is None else (
@@ -317,10 +321,7 @@ def write_tiles(
                 compute_histogram=compute_histogram,
             )
             write_stats_sidecar(path, md)
-        return pd.DataFrame(
-            [(tile_id, "processed", len(pdf), path)],
-            columns=["tile_id", "status", "n_windows", "out_path"],
-        )
+        return status("processed", path)
 
     return payloads.groupBy("tile_id").applyInPandas(writer, STATUS_SCHEMA)
 
@@ -349,8 +350,9 @@ class RasterPipe:
         (``tiles/utils/transform.py:15-68``) as a mapInPandas stage.
 
         Arrow moves each batch once; all math is NumPy over whole windows
-        (the reference's vectorization, preserved). Empty windows (F8) are
-        dropped here so they never shuffle.
+        (the reference's vectorization, preserved). An empty window (F8)
+        leaves as a marker row (``bands = 0``, null payload, no valid
+        pixels), so its pixels never shuffle but the writer sees the tile.
         """
         layer = self.layer
         reader = self.reader
@@ -388,8 +390,10 @@ class RasterPipe:
                         arr = reader(
                             list(r.uris), bounds, (r.height, r.width), band_count
                         )
-                        if not block_has_data(arr):
-                            continue  # F8: empty-block short-circuit
+                        if not block_has_data(arr):  # F8 marker row
+                            out.append((r.tile_id, r.row_off, r.col_off,
+                                        r.height, r.width, 0, np_dtype, 0, None))
+                            continue
                         arr = apply_calc(arr, calc_expr, band_count)
                         valid = int(
                             (~np.ma.getmaskarray(arr)).sum()
@@ -432,7 +436,9 @@ class RasterPipe:
         """Full pipeline; returns the per-tile status DataFrame (F10).
 
         Statuses mirror ``pipes/pipe.py:137-162``: processed / skipped
-        (no data / subset) / existing. ``existing`` takes a tile_id
+        (has no data) / failed, all decided by the tile writer. Tiles
+        outside ``subset`` and ``existing`` tiles are filtered out before
+        any work and get no status row. ``existing`` takes a tile_id
         DataFrame directly (e.g. ``object_store.existing_tiles``);
         ``existing_tile_ids`` is the list-literal convenience.
         """
@@ -443,21 +449,12 @@ class RasterPipe:
             existing = spark.createDataFrame(
                 [(t,) for t in existing_tile_ids], "tile_id string"
             )
-        pruned = prune_tiles(tiles, catalog, subset=subset, existing=existing)
-        withf = tile_files(pruned, catalog)
-        windows = plan_windows(withf, grid, self.blocks_per_window)
-        payloads = self.transform_windows(windows)
-        statuses = self.write_tiles(payloads)
-        # F9: tiles that survived pruning but produced no data windows
-        skipped = (
-            pruned.select("tile_id")
-            .join(statuses.select("tile_id"), "tile_id", "left_anti")
-            .select(
-                "tile_id", F.lit("skipped (has no data)").alias("status"),
-                F.lit(0).alias("n_windows"), F.lit(None).cast("string").alias("out_path"),
-            )
-        )
-        return statuses.unionByName(skipped)
+        # tile_files' inner join is the F3 prune; a semi join ahead of it
+        # would only add a broadcast job
+        windows = plan_windows(
+            tile_files(select_tiles(tiles, subset, existing), catalog),
+            grid, self.blocks_per_window)
+        return self.write_tiles(self.transform_windows(windows))
 
     def publish(
         self,

@@ -177,6 +177,11 @@ def _zz_dec(v: int) -> int:
     return (v >> 1) ^ -(v & 1)
 
 
+def _wrap64(v: int) -> int:
+    """``v`` modulo 2^64 as a signed int64 (numpy's overflow result)."""
+    return ((v + (1 << 63)) & ((1 << 64) - 1)) - (1 << 63)
+
+
 def _delta_binary_packed(data: bytes, pos: int, n: int,
                          ) -> tuple[list[int], int]:
     block_size, pos = _read_varint(data, pos)
@@ -207,17 +212,17 @@ def _delta_binary_packed(data: bytes, pos: int, n: int,
                 # every true value fits the column's physical type
                 import numpy as np
 
-                md = ((min_delta + (1 << 63)) & ((1 << 64) - 1)) - (1 << 63)
-                prev = ((out[-1] + (1 << 63)) & ((1 << 64) - 1)) - (1 << 63)
+                md = _wrap64(min_delta)
+                prev = _wrap64(out[-1])
                 with np.errstate(over="ignore"):
                     vals = (np.asarray(deltas[:take], dtype=np.int64)
                             + np.int64(md)).cumsum() + np.int64(prev)
                 out.extend(vals.tolist())
             else:
-                for d in deltas:
-                    if len(out) >= total:
-                        break
-                    out.append(out[-1] + min_delta + d)
+                # same int64 wraparound as the vector path, so invalid
+                # (overflowing) streams decode identically on both
+                for d in deltas[:take]:
+                    out.append(_wrap64(out[-1] + min_delta + d))
     return out[:n], pos
 
 

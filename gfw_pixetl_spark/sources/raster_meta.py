@@ -19,6 +19,8 @@ pixels are already in memory there), never as a second read pass over
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 
 from .geotiff import GeoTiff
@@ -176,6 +178,8 @@ def write_stats_sidecar(path: str, metadata: dict) -> str | None:
     if not wrote:
         return None
     sidecar = path + ".aux.xml"
-    with open(sidecar, "w") as f:
+    tmp = f"{sidecar}.tmp{os.getpid()}"
+    with open(tmp, "w") as f:
         f.write("\n".join(parts) + "\n")
+    os.replace(tmp, sidecar)  # atomic publish, as write_cog does
     return sidecar

@@ -353,6 +353,9 @@ def _huf_decode_stream(stream: bytes, table, max_bits: int,
     bits instead of slicing + int.from_bytes per symbol — measured ~4x
     on the literals sections that dominate pure-Python zstd decode.
     """
+    # the window math needs max_bits <= 17 (p - lo_bits can reach 47);
+    # _huf_build refuses tables wider than 11 bits
+    assert max_bits <= 17, max_bits
     if not stream or stream[-1] == 0:
         raise ValueError("zstd: corrupt bitstream (no sentinel bit)")
     pos = (len(stream) - 1) * 8 + stream[-1].bit_length() - 1

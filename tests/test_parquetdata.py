@@ -206,3 +206,46 @@ def test_writer_empty_and_bad_codec(tmp_path):
         write_parquet(p, _W_COLS, _W_ROWS, codec="LZO")
     with pytest.raises(ValueError, match="type"):
         PColumn("x", "INT96")
+
+
+# ------------------------------------------------- DELTA overflow parity
+
+def _uvarint(v: int) -> bytes:
+    out = bytearray()
+    while v >= 0x80:
+        out.append((v & 0x7F) | 0x80)
+        v >>= 7
+    out.append(v)
+    return bytes(out)
+
+
+def _delta_stream(first: int, min_delta: int, deltas: list[int],
+                  n_mini: int) -> bytes:
+    """One DELTA_BINARY_PACKED block of 8-bit miniblocks; ``first`` and
+    ``min_delta`` are non-negative, so their zigzag code is ``2 * v``."""
+    out = (_uvarint(len(deltas)) + _uvarint(n_mini)
+           + _uvarint(len(deltas) + 1) + _uvarint(2 * first)
+           + _uvarint(2 * min_delta) + bytes([8] * n_mini))
+    return out + bytes(deltas)  # width 8: one byte per delta
+
+
+def test_delta_overflow_same_on_vector_and_scalar_paths():
+    """A stream whose running sum leaves int64 decodes to the same
+    values whether a miniblock takes the vectorised prefix sum
+    (take >= 16) or the scalar loop (take < 16): both wrap mod 2^64."""
+    from gfw_pixetl_spark.sources.parquetdata import _delta_binary_packed
+
+    deltas = [(37 * i + 11) % 256 for i in range(32)]
+    first, min_delta = (1 << 62) + 5, (1 << 62) - 3
+    vec = _delta_stream(first, min_delta, deltas, n_mini=1)  # take 32
+    sca = _delta_stream(first, min_delta, deltas, n_mini=4)  # take 8
+    got_vec, end_vec = _delta_binary_packed(vec, 0, 33)
+    got_sca, end_sca = _delta_binary_packed(sca, 0, 33)
+    assert (end_vec, end_sca) == (len(vec), len(sca))
+    assert got_vec == got_sca
+    want, v = [first], first
+    for d in deltas:
+        v += min_delta + d
+        want.append(((v + (1 << 63)) % (1 << 64)) - (1 << 63))
+    assert got_vec == want
+    assert max(abs(x) for x in got_sca) < 1 << 63

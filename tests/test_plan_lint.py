@@ -28,3 +28,28 @@ def test_plan_is_clean(name, spark):
     exempt = EXEMPTIONS.get(name, {})
     bad = {rule: msg for rule, msg in flags.items() if rule not in exempt}
     assert not bad, f"{name}: {bad} (add a justified exemption or fix the plan)"
+
+
+def test_tile_status_frame_has_one_sink(spark):
+    """The raster tile job's unfiltered status frame (q71 filters it to
+    processed tiles, which can prune a duplicated status branch) holds
+    the tile writer once."""
+    from gfw_pixetl_spark.harness.tileops import q71_statuses
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        q71_statuses(spark).explain("formatted")
+    assert lint_plan("q71_raster_tile_job:statuses", buf.getvalue()) == {}
+
+
+def test_sink_twice_rule_fires_on_two_writers():
+    node = ("({n}) FlatMapGroupsInPandas\n"
+            "Input [2]: [tile_id#1, payload#2]\n"
+            "Arguments: [tile_id#1], {udf}(tile_id#1, payload#2)#3, "
+            "[tile_id#4, status#5]")
+    one = "\n\n".join([node.format(n=5, udf="writer"),
+                       node.format(n=9, udf="merge")])
+    two = "\n\n".join([node.format(n=5, udf="writer"),
+                       node.format(n=9, udf="writer")])
+    assert "SINK_TWICE" not in lint_plan("x", one)
+    assert "SINK_TWICE" in lint_plan("x", two)

@@ -72,6 +72,46 @@ def test_stats_sidecar_pam_roundtrip(tmp_path):
     assert "<HistCounts>" in xml and "<BucketCount>256</BucketCount>" in xml
 
 
+def test_sidecar_write_is_atomic_and_unchanged(tmp_path):
+    """The sidecar is published by tmp + rename: no ``.tmp*`` file is
+    left beside it, an existing sidecar is replaced whole, and the PAM
+    text is exactly the layout GDAL reads."""
+    path = str(tmp_path / "t.tif")
+    md = {"bands": [
+        {"stats": {"min": 1.0, "max": 4.0, "mean": 2.5,
+                   "std_dev": 1.118033988749895},
+         "histogram": {"min": 0.5, "max": 4.5, "count": 4,
+                       "buckets": [1, 1, 1, 1]}},
+        {},
+    ]}
+    with open(path + ".aux.xml", "w") as f:
+        f.write("stale sidecar from an earlier attempt, longer than new\n" * 50)
+    assert write_stats_sidecar(path, md) == path + ".aux.xml"
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["t.tif.aux.xml"]
+    assert open(path + ".aux.xml").read() == (
+        '<PAMDataset>\n'
+        '  <PAMRasterBand band="1">\n'
+        '    <Histograms>\n'
+        '      <HistItem>\n'
+        '        <HistMin>0.5</HistMin>\n'
+        '        <HistMax>4.5</HistMax>\n'
+        '        <BucketCount>4</BucketCount>\n'
+        '        <IncludeOutOfRange>1</IncludeOutOfRange>\n'
+        '        <Approximate>0</Approximate>\n'
+        '        <HistCounts>1|1|1|1</HistCounts>\n'
+        '      </HistItem>\n'
+        '    </Histograms>\n'
+        '    <Metadata>\n'
+        '      <MDI key="STATISTICS_MINIMUM">1</MDI>\n'
+        '      <MDI key="STATISTICS_MAXIMUM">4</MDI>\n'
+        '      <MDI key="STATISTICS_MEAN">2.5</MDI>\n'
+        '      <MDI key="STATISTICS_STDDEV">1.1180339887499</MDI>\n'
+        '    </Metadata>\n'
+        '  </PAMRasterBand>\n'
+        '</PAMDataset>\n'
+    )
+
+
 def test_sidecar_skipped_when_empty(tmp_path):
     data = np.zeros((1, 2, 2), dtype="uint8")
     path = str(tmp_path / "e.tif")

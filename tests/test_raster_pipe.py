@@ -6,6 +6,8 @@ and status accounting."""
 from __future__ import annotations
 
 import json
+import os
+from dataclasses import dataclass
 
 import numpy as np
 import pytest
@@ -34,6 +36,31 @@ def make_pipe(tmp_path, grid, **layer_overrides) -> rp.RasterPipe:
         work_dir=str(tmp_path),
         grid=grid,
     )
+
+
+@dataclass
+class ProbeReader(SyntheticReader):
+    """SyntheticReader that reads fully masked windows west of
+    ``empty_west_of``, raises on the window whose top-left corner is
+    ``fail_at`` and, given ``span_dir``, appends one line per call to a
+    per-process file there (reader calls happen in Python workers)."""
+
+    empty_west_of: float = -180.0
+    fail_at: tuple[float, float] | None = None
+    span_dir: str | None = None
+
+    def __call__(self, uris, bounds, shape, band_count):
+        if self.span_dir:
+            with open(os.path.join(self.span_dir, f"{os.getpid()}.txt"),
+                      "a") as fh:
+                fh.write(f"{bounds}\n")
+        left, _, _, top = bounds
+        if self.fail_at and np.allclose((left, top), self.fail_at):
+            raise IOError("synthetic read failure")
+        arr = super().__call__(uris, bounds, shape, band_count)
+        if left < self.empty_west_of - 1e-9:
+            arr.mask = True
+        return arr
 
 
 def expected_tile(bounds, grid, band_count=1):
@@ -225,3 +252,60 @@ def test_boolean_layer_writes_real_ccittfax4(tmp_path, spark):
     arr, profile = read_tile(rows[0].out_path)
     assert profile["compress"] == "CCITTFAX4"
     assert set(np.unique(np.ma.getdata(arr))) <= {0, 1}
+
+
+def test_tile_with_only_empty_windows_is_skipped(spark, tmp_path):
+    """F9: a tile that intersects the catalog but reads only masked
+    pixels gets one ``skipped (has no data)`` row and no file."""
+    grid = LatLngGrid(10, 544)  # 2x2 windows of 272 px
+    pipe = make_pipe(tmp_path, grid)
+    pipe.reader = ProbeReader(xres=grid.xres, yres=grid.yres,
+                              empty_west_of=0.0)
+    files = [{"uri": "m://a", "band": 1,
+              "left": -10.0, "bottom": 0.0, "right": 10.0, "top": 10.0}]
+    rows = pipe.run(spark, files, subset=["10N_000E", "10N_010W"]).collect()
+    assert sorted(r.tile_id for r in rows) == ["10N_000E", "10N_010W"]
+    rows = {r.tile_id: r for r in rows}
+    skipped = rows["10N_010W"]
+    assert skipped.status == "skipped (has no data)"
+    assert skipped.n_windows == 0 and skipped.out_path is None
+    tif_dir = tmp_path / pipe.layer.prefix / "geotiff"
+    assert not (tif_dir / "10N_010W.tif").exists()
+    assert rows["10N_000E"].status == "processed"
+    assert rows["10N_000E"].n_windows == 4
+
+
+def test_failed_tile_counts_data_and_error_windows(spark, tmp_path):
+    """F10 next to F8: one failing window, two empty ones and one data
+    window fail the tile; ``n_windows`` counts the data and error windows
+    only, and nothing is written."""
+    grid = LatLngGrid(10, 544)
+    pipe = make_pipe(tmp_path, grid)
+    pipe.reader = ProbeReader(xres=grid.xres, yres=grid.yres,
+                              empty_west_of=-5.0, fail_at=(-5.0, 10.0))
+    files = [{"uri": "m://a", "band": 1,
+              "left": -10.0, "bottom": 0.0, "right": 0.0, "top": 10.0}]
+    [row] = pipe.run(spark, files, subset=["10N_010W"]).collect()
+    assert row.status.startswith("failed - OSError: synthetic read failure")
+    assert row.n_windows == 2 and row.out_path is None
+    assert not (tmp_path / pipe.layer.prefix / "geotiff").exists()
+
+
+def test_each_window_read_once_and_one_writer(spark, tmp_path):
+    """The status frame is one linear plan: the reader runs once per
+    planned window, and the executed plan holds a single tile writer."""
+    grid = LatLngGrid(10, 544)
+    spans = tmp_path / "spans"
+    spans.mkdir()
+    pipe = make_pipe(tmp_path, grid)
+    pipe.reader = ProbeReader(xres=grid.xres, yres=grid.yres,
+                              empty_west_of=0.0, span_dir=str(spans))
+    files = [{"uri": "m://a", "band": 1,
+              "left": -10.0, "bottom": -10.0, "right": 10.0, "top": 10.0}]
+    status = pipe.run(spark, files)
+    rows = status.collect()
+    assert len(rows) == 4  # 2 processed + 2 skipped tiles, 4 windows each
+    calls = sum(len(f.read_text().splitlines()) for f in spans.iterdir())
+    assert calls == 16
+    plan = status._jdf.queryExecution().executedPlan().executedPlan()
+    assert plan.toString().count("FlatMapGroupsInPandas") == 1

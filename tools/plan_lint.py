@@ -11,6 +11,13 @@ a documented design decision, not a silence):
 * SINGLE_PART — `Exchange SinglePartition` feeding real work: a global
                 window/sort funneling fact-scale rows through one task.
                 Legitimate on dimension-sized inputs only.
+* SINK_TWICE  — the tile-writer UDF (`writer`) in more than one
+                `FlatMapGroupsInPandas` node: a second copy of the sink
+                encodes, profiles and writes every tile again.
+
+Besides every registered query, the sweep lints the raster tile job's
+unfiltered status frame: q71 keeps only processed tiles, and that filter
+lets Catalyst prune a status branch that could hide a second sink.
 
 Usage: python tools/plan_lint.py [sf_dir]     (default sf0.001)
 Exit code 1 if any non-exempt flag fires; used by tests/test_plan_lint.
@@ -169,18 +176,26 @@ def lint_plan(name: str, plan: str) -> dict[str, str]:
         flags["SINGLE_PART"] = (
             f"single-partition exchange consumed by {sorted(set(bad))}"
         )
+    writers = sum(
+        1 for block in plan.split("\n\n")
+        if re.match(r"\(\d+\) FlatMapGroupsInPandas\b", block.strip())
+        and re.search(r"^Arguments: \[[^\]]*\], writer\(", block, re.M)
+    )
+    if writers > 1:
+        flags["SINK_TWICE"] = (
+            f"tile writer in {writers} FlatMapGroupsInPandas nodes"
+        )
     return flags
 
 
 def run(sf_dir: str = "/root/testdata/sf0.001") -> int:
-    from gfw_pixetl_spark import harness
     from gfw_pixetl_spark.session import get_spark
 
     spark = get_spark("plan_lint")
     failures = []
-    for name in sorted(harness.QUERIES):
+    for name, build in lint_targets():
         try:
-            df = harness.QUERIES[name](spark, sf_dir)
+            df = build(spark, sf_dir)
         except Exception as e:  # noqa: BLE001
             failures.append((name, "BUILD", str(e)[:120]))
             print(f"ERR  {name}: {e}")
@@ -200,6 +215,17 @@ def run(sf_dir: str = "/root/testdata/sf0.001") -> int:
     for name, rule, msg in failures:
         print(f"  {name}: {rule}")
     return 1 if failures else 0
+
+
+def lint_targets() -> list[tuple[str, object]]:
+    """(name, build(spark, sf_dir) -> DataFrame) for every plan the
+    sweep lints."""
+    from gfw_pixetl_spark import harness
+    from gfw_pixetl_spark.harness.tileops import q71_statuses
+
+    return sorted(harness.QUERIES.items()) + [
+        ("q71_raster_tile_job:statuses", lambda spark, _sf: q71_statuses(spark)),
+    ]
 
 
 if __name__ == "__main__":
