@@ -46,12 +46,3 @@ def minhash_coeffs(k: int, seed: int = 42) -> list[tuple[int, int]]:
         b = state
         coeffs.append((a % P31 or 1, b % P31))
     return coeffs
-
-
-def minhash_term(base_hash: Column, a: int, b: int) -> Column:
-    """(a * h + b) mod P31 on a column of base hashes."""
-    return (base_hash % P31 * F.lit(a) + F.lit(b)) % F.lit(P31)
-
-
-def minhash_term_sql(base_hash_expr: str, a: int, b: int) -> str:
-    return f"(({base_hash_expr}) % {P31} * {a} + {b}) % {P31}"

@@ -319,11 +319,16 @@ def centroid_assign(
     ).crossJoin(F.broadcast(cent))
     cos = cosine(F.col("_v"), F.col("centroid"))
     # per-vector argmax as ONE hash aggregation instead of a sort
-    # window (guide §2.4): min(struct(-cos, clabel)) is exactly the
-    # row_number()-over-(cos DESC, clabel ASC) pick — the double
-    # negation is exact, ties fall through to the label, and the
-    # aggregate partials combine map-side so only one row per vector
-    # crosses the exchange.
+    # window (guide §2.4): min(struct(-cos, clabel)) is the
+    # row_number()-over-(cos DESC, clabel ASC) pick for finite cosines —
+    # the double negation is exact, ties fall through to the label, and
+    # the aggregate partials combine map-side so only one row per vector
+    # crosses the exchange. Two differences from that window: a NaN
+    # cosine (NaN component) sorts largest, so the window would pick it
+    # while the min skips it whenever another cosine exists (a zero norm
+    # raises DIVIDE_BY_ZERO under ANSI; tests/test_functions.py pins
+    # these cases); and the result has one row per (id, label), not per
+    # id.
     pick = F.min(F.struct(
         (-F.col("cos")).alias("nc"),
         F.col("clabel").alias("clabel"),

@@ -15,6 +15,7 @@ tiles produced on different executors must align exactly
 
 from __future__ import annotations
 
+import contextlib
 import math
 from dataclasses import dataclass
 from typing import Iterator
@@ -136,16 +137,23 @@ class LatLngGrid(Grid):
 
     def xy_to_tile_origin(self, x: float, y: float) -> tuple[int, int]:
         """Top-left corner of the tile containing (x, y)
-        (``lat_lng_grid.py:56-75`` incl. the offset shift)."""
+        (``lat_lng_grid.py:56-75`` incl. the offset shift). The snap is
+        separable: the longitude depends on x only, the latitude on y."""
+        return self._origin_lng(x), self._origin_lat(y)
+
+    def _origin_lng(self, x: float) -> int:
         lng = math.floor(x / self.width) * self.width
         lng = self._apply_lng_offset(lng, x)
-        lat = math.ceil(y / self.height) * self.height
-        lat = self._apply_lat_offset(lat, y)
         if not (-180 <= lng <= 180 - self.width):
             raise ValueError("Origin's Longitude is out of bounds")
+        return lng
+
+    def _origin_lat(self, y: float) -> int:
+        lat = math.ceil(y / self.height) * self.height
+        lat = self._apply_lat_offset(lat, y)
         if not (-90 + self.height <= lat <= 90):
             raise ValueError("Origin's Latitude is out of bounds")
-        return lng, lat
+        return lat
 
     def _apply_lng_offset(self, lng: int, x: float) -> int:
         offset = self.lng_offset
@@ -189,14 +197,35 @@ class LatLngGrid(Grid):
             right=float(lng + self.width), top=float(lat),
         )
 
+    def _seed_lattice(self) -> tuple[range, range]:
+        """Whole-degree seed corners (``lat_lng_grid.py:119-141``)."""
+        lat_offset = self.lat_offset if 180 % self.height else 0
+        lng_offset = self.lng_offset if 360 % self.width else 0
+        return (range(-180 + lng_offset, 180 - lng_offset, self.width),
+                range(-89 + lat_offset, 91 - lat_offset, self.height))
+
+    def tile_origin_axes(self) -> tuple[list[int], list[int]]:
+        """Ascending distinct tile-origin longitudes and latitudes. The
+        origin snap is separable, so the tile set is exactly their cross
+        product: ``get_tile_ids`` in at most 360 + 181 snaps."""
+
+        def snap_axis(snap, points) -> list[int]:
+            out = set()
+            for p in points:
+                with contextlib.suppress(ValueError):  # polar lattice rows
+                    out.add(snap(p))
+            return sorted(out)
+
+        xs, ys = self._seed_lattice()
+        return snap_axis(self._origin_lng, xs), snap_axis(self._origin_lat, ys)
+
     def get_tile_ids(self) -> set[str]:
         """All tile ids (``lat_lng_grid.py:119-141``): seed lattice of
         whole-degree corners, mapped through the origin snap, dedup'd."""
-        lat_offset = self.lat_offset if 180 % self.height else 0
-        lng_offset = self.lng_offset if 360 % self.width else 0
+        xs, ys = self._seed_lattice()
         ids = set()
-        for x in range(-180 + lng_offset, 180 - lng_offset, self.width):
-            for y in range(-89 + lat_offset, 91 - lat_offset, self.height):
+        for x in xs:
+            for y in ys:
                 try:
                     ids.add(self.xy_to_tile_id(x, y))
                 except ValueError:

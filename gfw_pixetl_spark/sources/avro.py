@@ -84,12 +84,6 @@ def _read_bytes(data: bytes, pos: int) -> tuple[bytes, int]:
 # --------------------------------------------------------------------------
 
 
-def _branch_name(schema) -> str:
-    if isinstance(schema, str):
-        return schema
-    return schema.get("name", schema["type"])
-
-
 def _union_index(branches: list, value) -> int:
     """Pick the union branch for a Python value (the writer-side rule:
     null -> 'null', bool -> 'boolean', int -> first int/long, float ->

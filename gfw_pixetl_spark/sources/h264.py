@@ -261,13 +261,6 @@ def build_pps(pps_id: int = 0, sps_id: int = 0) -> bytes:
     return _nal(3, NAL_PPS, w.tobytes())
 
 
-def parse_pps_ids(nal: bytes) -> tuple[int, int]:
-    if nal[0] & 0x1F != NAL_PPS:
-        raise ValueError("not a PPS NAL")
-    r = BitReader(ebsp_to_rbsp(nal[1:]))
-    return r.ue(), r.ue()
-
-
 # --- slice header prefix (§7.3.3) ------------------------------------------
 
 @dataclass

@@ -35,6 +35,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import col as F_col
 
+from ..session import local_frame
+
 try:  # boto3 ships in this container; gate anyway for minimal installs
     import boto3
 
@@ -139,9 +141,7 @@ def existing_tiles(
     ids = sorted(
         {os.path.splitext(os.path.basename(k))[0] for k in keys}
     )
-    if not ids:
-        return spark.createDataFrame([], "tile_id string")
-    return spark.createDataFrame([(t,) for t in ids], "tile_id string")
+    return local_frame(spark, [(t,) for t in ids], "tile_id string")
 
 
 def fetch_cog_profile(
@@ -170,18 +170,6 @@ def fetch_cog_profile(
             if len(body) < rng:  # whole object fetched and still bad
                 raise
             rng *= 4
-
-
-def fetch_npz_profile(cfg: S3Config, bucket: str, key: str) -> dict:
-    """Legacy profile fetch for the npz container the sink wrote before
-    the pure-Python COG codec landed (kept for stored artifacts)."""
-    import io
-
-    import numpy as np
-
-    body = cfg.client().get_object(Bucket=bucket, Key=key)["Body"].read()
-    with np.load(io.BytesIO(body), allow_pickle=False) as z:
-        return json.loads(bytes(z["profile"]).decode())
 
 
 UPLOAD_SCHEMA = "tile_id string, s3_key string, n_bytes long"

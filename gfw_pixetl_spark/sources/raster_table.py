@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .geotiff import GeoTiff
 
 PIXEL_SCHEMA = (
@@ -46,11 +47,11 @@ def raster_catalog(spark: SparkSession, uris: list[str]) -> DataFrame:
         left, bottom, right, top = t.bounds
         rows.append((uri, left, bottom, right, top, t.count,
                      t.width, t.height))
-    # single-slice parallelize: a catalog is driver-local metadata; the
-    # default createDataFrame(list) path fans tiny row lists into
-    # shuffle-partition-many Python tasks (ROADMAP perf note)
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
+    # a local relation: a catalog is driver-local metadata, and an RDD
+    # scan (createDataFrame(list), even parallelize(rows, 1)) would start
+    # a Python task to produce it
+    return local_frame(
+        spark, rows,
         "uri string, left double, bottom double, right double, "
         "top double, bands int, width int, height int",
     )

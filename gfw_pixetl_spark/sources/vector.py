@@ -1,9 +1,9 @@
-"""PostGIS vector source: pushdown SQL generation + JDBC scan (S6/F4).
+"""PostGIS vector source: pushdown SQL generation (S6/F4).
 
 Spark's JDBC source pushes comparison predicates but NOT spatial
 functions, so — exactly like the reference
 (``gfw_pixetl/tiles/vector_src_tile.py:122-156``) — we generate the
-PostGIS SQL ourselves and hand it to the JDBC reader as a subquery
+PostGIS SQL ourselves, in the shape a JDBC reader takes as a subquery
 (``dbtable=(...) t``). The three generated shapes mirror the reference:
 
 * existence probe (F4): ``SELECT 1 ... WHERE ST_Intersects(...) LIMIT 1``
@@ -18,14 +18,12 @@ executes VERBATIM against DuckDB + an ST_* polyfill
 (``pg_polyfill.py``, ``tests/test_pushdown_exec.py``) AND against a
 live PostgreSQL 15 server with PL/pgSQL ST_* functions
 (``pg_live.py``, ``tests/test_pg_live.py`` — real grammar, quoting,
-type mapping, IEEE-exact clip parity). Only the JDBC driver itself is
-environment-gated (no driver jar in this container); the JDBC execution
-path is exercised when a jdbc_url is supplied.
+type mapping, IEEE-exact clip parity). The Spark-side scan is the
+Python DataSource in ``pg_datasource.py``; a JDBC reader is
+environment-gated (no driver jar).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
 
 from ..grids import BoundingBox
 
@@ -85,27 +83,3 @@ def fetch_tile_sql(
         f"FROM {schema}.{table} "
         f"WHERE {intersect_filter_sql(bounds)}{order_clause}"
     )
-
-
-def read_tile_features(
-    spark: SparkSession,
-    jdbc_url: str,
-    schema: str,
-    table: str,
-    bounds: BoundingBox,
-    field: str,
-    calc: str | None = None,
-    order: str | None = None,
-    properties: dict | None = None,
-) -> DataFrame:
-    """JDBC scan of one tile's features with full pushdown: the generated
-    SQL runs inside PostGIS; Spark sees only the projected rows."""
-    sql = fetch_tile_sql(schema, table, bounds, field, calc, order)
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", jdbc_url)
-        .option("dbtable", f"({sql}) AS t")
-    )
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    return reader.load()

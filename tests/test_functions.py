@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from gfw_pixetl_spark.functions import dedup as D
@@ -116,6 +117,41 @@ def test_cosine_topk(spark):
     out = S.brute_force_topk(emb, queries, k=2).collect()
     ranked = sorted((r.rank, r.neighbor_id) for r in out)
     assert ranked == [(1, 1), (2, 2)]  # nearest first
+
+
+def test_centroid_assign_degenerate_cosines(spark):
+    """Pins the min(struct(-cos, clabel)) argmax on degenerate cosines.
+    A zero-norm vector or centroid makes cosine 0/0: under the session's
+    ANSI arithmetic the query raises; without ANSI the cosine is null,
+    nulls order first in the struct min, so a null-scored centroid wins
+    and ties break on the label. A NaN cosine (NaN component) orders
+    largest, so the argmax skips it when any other cosine exists."""
+    schema = "vec_id int, label string, embedding array<double>"
+    cents = spark.createDataFrame(
+        [("A", [1.0, 0.0]), ("B", [0.0, 1.0])],
+        "clabel string, centroid array<double>",
+    )
+    zero_cent = cents.unionByName(spark.createDataFrame(
+        [("Z", [0.0, 0.0])], "clabel string, centroid array<double>"))
+    nan_cent = cents.unionByName(spark.createDataFrame(
+        [("N", [float("nan"), 0.0])], "clabel string, centroid array<double>"))
+    unit = spark.createDataFrame([(1, "a", [0.0, 1.0])], schema)
+    zero_vec = spark.createDataFrame([(2, "b", [0.0, 0.0])], schema)
+
+    def pick(emb, cent):
+        return [(r.assigned, r.sim) for r in S.centroid_assign(emb, cent).collect()]
+
+    assert pick(unit, nan_cent) == [("B", 1.0)]
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    for emb, cent in ((zero_vec, cents), (unit, zero_cent)):
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            pick(emb, cent)
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        assert pick(zero_vec, cents) == [("A", None)]
+        assert pick(unit, zero_cent) == [("Z", None)]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
 
 
 def test_ivf_assign_and_topk(spark):
@@ -302,8 +338,6 @@ def test_chunk_documents_coverage(spark):
 
 
 def test_chunk_documents_rejects_bad_overlap(spark):
-    import pytest
-
     with pytest.raises(ValueError):
         T.chunk_documents(docs_df(spark, ["x"]), size=10, overlap=10)
 

@@ -53,3 +53,49 @@ def test_sink_twice_rule_fires_on_two_writers():
                        node.format(n=9, udf="writer")])
     assert "SINK_TWICE" not in lint_plan("x", one)
     assert "SINK_TWICE" in lint_plan("x", two)
+
+
+def test_tile_status_frame_plans_without_python(spark):
+    """Tile seeding and the file catalog run in the JVM: nothing under
+    the window kernel of the tile status frame starts a Python worker."""
+    from gfw_pixetl_spark.harness.tileops import q71_statuses
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        q71_statuses(spark).explain("formatted")
+    plan = buf.getvalue()
+    assert "Arguments: window_kernel(" in plan
+    assert "PY_PLANNING" not in lint_plan("q71_raster_tile_job:statuses", plan)
+
+
+def test_py_planning_rule_fires_below_the_kernel():
+    """The status-frame shape before planning moved into the JVM: a
+    Python tile seed and an RDD-scanned catalog under the kernel."""
+    tree = """== Physical Plan ==
+AdaptiveSparkPlan (12)
++- FlatMapGroupsInPandas (11)
+   +- Sort (10)
+      +- Exchange (9)
+         +- MapInPandas (8)
+            +- BroadcastNestedLoopJoin Inner BuildRight (7)
+               :- {seed}
+               :  +- Range (1)
+               +- BroadcastExchange (6)
+                  +- {catalog}
+"""
+    details = [
+        "(8) MapInPandas\nInput [2]: [tile_id#2, uris#26]\n"
+        "Arguments: window_kernel(tile_id#2, uris#26)#27, [tile_id#28], false",
+        "(11) FlatMapGroupsInPandas\nInput [1]: [tile_id#28]\n"
+        "Arguments: [tile_id#28], writer(tile_id#28)#29, [tile_id#30]",
+    ]
+
+    def flags(seed, catalog):
+        plan = "\n\n".join([tree.format(seed=seed, catalog=catalog)]
+                           + details)
+        return lint_plan("x", plan).get("PY_PLANNING", "")
+
+    assert "MapInPandas" in flags("MapInPandas (2)", "LocalTableScan (5)")
+    assert "Scan ExistingRDD" in flags("Project (2)", "Scan ExistingRDD (5)")
+    # the writer above the kernel is not planning
+    assert flags("Project (2)", "LocalTableScan (5)") == ""

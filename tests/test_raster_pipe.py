@@ -7,12 +7,15 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from dataclasses import dataclass
 
 import numpy as np
 import pytest
 
-from gfw_pixetl_spark.grids import LatLngGrid, WebMercatorGrid
+from gfw_pixetl_spark.grids import (
+    GRID_NAMES, LatLngGrid, WebMercatorGrid, grid_factory,
+)
 from gfw_pixetl_spark.models import LayerModel
 from gfw_pixetl_spark.plans import raster_pipe as rp
 from gfw_pixetl_spark.sources.raster import SyntheticReader
@@ -179,6 +182,20 @@ def test_seed_tiles_matches_grid(spark):
     assert (r.tile_left, r.tile_bottom, r.tile_right, r.tile_top) == (
         0.0, 0.0, 10.0, 10.0
     )
+    # every lat/lng catalog grid, offset grids (8/32000) included: the
+    # exact tile set, bounds and no duplicate rows
+    for name in GRID_NAMES:
+        g = grid_factory(name)
+        if not isinstance(g, LatLngGrid):
+            continue
+        rows = rp.seed_tiles(spark, g).collect()
+        got = {r.tile_id: (r.tile_left, r.tile_bottom, r.tile_right,
+                           r.tile_top) for r in rows}
+        assert len(rows) == len(got), name
+        assert set(got) == g.get_tile_ids(), name
+        for tid, bounds in got.items():
+            bb = g.get_tile_bounds(tid)
+            assert bounds == (bb.left, bb.bottom, bb.right, bb.top), tid
 
 
 def test_seed_tiles_offset_grid(spark):
@@ -309,3 +326,20 @@ def test_each_window_read_once_and_one_writer(spark, tmp_path):
     assert calls == 16
     plan = status._jdf.queryExecution().executedPlan().executedPlan()
     assert plan.toString().count("FlatMapGroupsInPandas") == 1
+
+
+def test_window_kernel_is_the_first_python_stage(spark, tmp_path):
+    """Tile seeding and the file catalog plan without Python workers:
+    the executed plan of a non-empty layer holds exactly the kernel and
+    the writer as Python nodes, and no RDD scan."""
+    grid = LatLngGrid(10, 160)
+    pipe = make_pipe(tmp_path, grid)
+    files = [{"uri": "m://a", "band": 1,
+              "left": 0.0, "bottom": -10.0, "right": 10.0, "top": 10.0}]
+    status = pipe.run(spark, files, existing_tile_ids=["10N_170E"])
+    assert len(status.collect()) == 2
+    plan = status._jdf.queryExecution().executedPlan().executedPlan()
+    plan = plan.toString()  # the final plan of the adaptive query
+    assert len(re.findall(r"\bMapInPandas\b", plan)) == 1
+    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert "Scan ExistingRDD" not in plan

@@ -14,10 +14,15 @@ a documented design decision, not a silence):
 * SINK_TWICE  — the tile-writer UDF (`writer`) in more than one
                 `FlatMapGroupsInPandas` node: a second copy of the sink
                 encodes, profiles and writes every tile again.
+* PY_PLANNING — a Python-evaluated node or a `Scan ExistingRDD` leaf
+                beneath the raster window kernel (`window_kernel`): tile
+                seeding and the file catalog are metadata, and each
+                Python stage costs ~0.2-0.3 s before it does any work.
 
 Besides every registered query, the sweep lints the raster tile job's
 unfiltered status frame: q71 keeps only processed tiles, and that filter
-lets Catalyst prune a status branch that could hide a second sink.
+lets Catalyst prune a status branch that could hide a second sink or a
+Python planning stage.
 
 Usage: python tools/plan_lint.py [sf_dir]     (default sf0.001)
 Exit code 1 if any non-exempt flag fires; used by tests/test_plan_lint.
@@ -122,13 +127,24 @@ EXEMPTIONS: dict[str, dict[str, str]] = {
 
 import re
 
-_TREE_NODE = re.compile(r"^([ +:|-]*)\*?\(?\d*\)?\s*([A-Za-z]+[A-Za-z ]*)\((\d+)\)")
+# physical operators that run Python (Arrow or pickled batches)
+_PYTHON_NODE = re.compile(r"Python|InPandas|InArrow")
+
+
+def _tree_nodes(plan: str) -> list[tuple[int, str, str]]:
+    """(indent, operator, node id) per line of the formatted plan's tree
+    section, which prints parents above children at smaller indent."""
+    nodes = []
+    for line in plan.split("\n\n")[0].splitlines():
+        m = re.search(r"([A-Za-z][A-Za-z ]*?)\s*\((\d+)\)\s*$", line)
+        if m:
+            indent = len(line) - len(line.lstrip(" +-:|"))
+            nodes.append((indent, m.group(1).strip(), m.group(2)))
+    return nodes
 
 
 def _single_partition_consumers(plan: str) -> list[str]:
-    """Operators that consume a SinglePartition exchange, from the
-    formatted plan's tree section. The tree prints parents above
-    children at smaller indent."""
+    """Operators that consume a SinglePartition exchange."""
     # which node ids are SinglePartition exchanges: detail blocks are
     # blank-line-separated, "(N) Exchange" header then Input/Arguments
     sp_ids = set()
@@ -139,14 +155,7 @@ def _single_partition_consumers(plan: str) -> list[str]:
     if not sp_ids:
         return []
     consumers = []
-    tree = plan.split("\n\n")[0].splitlines()
-    parsed = []  # (indent, opname, node_id)
-    for line in tree:
-        m = re.search(r"([A-Za-z][A-Za-z ]*?)\s*\((\d+)\)\s*$", line)
-        if not m:
-            continue
-        indent = len(line) - len(line.lstrip(" +-:|"))
-        parsed.append((indent, m.group(1).strip(), m.group(2)))
+    parsed = _tree_nodes(plan)
     for i, (indent, op, nid) in enumerate(parsed):
         if op == "Exchange" and nid in sp_ids:
             for j in range(i - 1, -1, -1):
@@ -154,6 +163,28 @@ def _single_partition_consumers(plan: str) -> list[str]:
                     consumers.append(parsed[j][1])
                     break
     return consumers
+
+
+def _python_below_window_kernel(plan: str) -> list[str]:
+    """Python-evaluated operators and RDD scans (``Scan ExistingRDD``,
+    whose rows a Python task produces) in the subtree under the raster
+    pipe's window kernel (the ``MapInPandas`` running ``window_kernel``)."""
+    kernel_ids = {
+        m.group(1) for block in plan.split("\n\n")
+        if (m := re.match(r"\((\d+)\) MapInPandas\b", block.strip()))
+        and re.search(r"^Arguments: window_kernel\(", block, re.M)
+    }
+    found = []
+    nodes = _tree_nodes(plan)
+    for i, (indent, _op, nid) in enumerate(nodes):
+        if nid not in kernel_ids:
+            continue
+        for sub_indent, op, _ in nodes[i + 1:]:
+            if sub_indent <= indent:
+                break
+            if _PYTHON_NODE.search(op) or op == "Scan ExistingRDD":
+                found.append(op)
+    return found
 
 
 def lint_plan(name: str, plan: str) -> dict[str, str]:
@@ -184,6 +215,11 @@ def lint_plan(name: str, plan: str) -> dict[str, str]:
     if writers > 1:
         flags["SINK_TWICE"] = (
             f"tile writer in {writers} FlatMapGroupsInPandas nodes"
+        )
+    planning = _python_below_window_kernel(plan)
+    if planning:
+        flags["PY_PLANNING"] = (
+            f"{sorted(set(planning))} beneath the window kernel"
         )
     return flags
 
