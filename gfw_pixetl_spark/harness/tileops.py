@@ -377,35 +377,54 @@ def _q71_oracle() -> str:
     """
 
 
+def _demo_cog(name: str, make, **write_kw) -> str:
+    """Path of the demo COG ``name``, written by ``write_cog(path,
+    make(), **write_kw)`` on first use. Files are cached by NAME under
+    ``$TMPDIR/gfw_pixetl_spark_rt_demo``: after changing a generator,
+    clear that directory or the stale file is read."""
+    import os
+    import tempfile
+
+    from ..sources.geotiff import write_cog
+
+    d = os.path.join(tempfile.gettempdir(), "gfw_pixetl_spark_rt_demo")
+    os.makedirs(d, exist_ok=True)
+    p = os.path.join(d, name)
+    if not os.path.exists(p):
+        write_cog(p, make(), **write_kw)
+    return p
+
+
+def _ij(n: int):
+    """Row and column index grids of an n x n raster."""
+    import numpy as np
+
+    return np.meshgrid(np.arange(n), np.arange(n), indexing="ij")
+
+
 def _q71_source_file() -> str:
     """Real source COG over the (non-tile-aligned) footprint: values
     (ii+jj)%16 on the GLOBAL 0.0625-degree pixel lattice, nodata 0 —
     the production GeoTIFFReader masks both outside-footprint area and
     in-footprint nodata, so partial tiles carry position-dependent
     checksums."""
-    import os
-    import tempfile
-
     import numpy as np
 
-    from ..sources.geotiff import write_cog
+    left, bottom, right, top = _Q71_FOOTPRINT
+    res = 10.0 / _Q71_GRID_PX
 
-    d = os.path.join(tempfile.gettempdir(), "gfw_pixetl_spark_rt_demo")
-    os.makedirs(d, exist_ok=True)
-    p = os.path.join(d, "q71_source.tif")
-    if not os.path.exists(p):
-        left, bottom, right, top = _Q71_FOOTPRINT
-        res = 10.0 / _Q71_GRID_PX
+    def make():
         cols = int(round((right - left) / res))
         rows = int(round((top - bottom) / res))
         row0 = int(round((90.0 - top) / res))
         col0 = int(round((left + 180.0) / res))
         jj, ii = np.meshgrid(np.arange(col0, col0 + cols),
                              np.arange(row0, row0 + rows))
-        v = ((ii + jj) % 16).astype("uint8")
-        write_cog(p, v[None], transform=(left, res, top, res),
-                  nodata=0, blockxsize=160, overviews=False)
-    return p
+        return ((ii + jj) % 16).astype("uint8")[None]
+
+    return _demo_cog("q71_source.tif", make,
+                     transform=(left, res, top, res),
+                     nodata=0, blockxsize=160, overviews=False)
 
 
 def q71_statuses(spark: SparkSession) -> DataFrame:
@@ -688,26 +707,16 @@ def q128(spark: SparkSession, sf_dir: str) -> DataFrame:
 # checked by an engine that never touches the files.
 # --------------------------------------------------------------------------
 def _rt_demo_files() -> list[str]:
-    import os
-    import tempfile
-
-    import numpy as np
-
-    from ..sources.geotiff import write_cog
-
-    d = os.path.join(tempfile.gettempdir(), "gfw_pixetl_spark_rt_demo")
-    os.makedirs(d, exist_ok=True)
-    pa, pb = os.path.join(d, "a.tif"), os.path.join(d, "b.tif")
-    ii, jj = np.meshgrid(np.arange(80), np.arange(80), indexing="ij")
-    if not os.path.exists(pa):
-        a = ((ii * 3 + jj) % 11).astype("uint8")
-        write_cog(pa, a[None], transform=(0.0, 0.05, 10.0, 0.05),
-                  nodata=0, blockxsize=32, overviews=False)
-    if not os.path.exists(pb):
-        b = ((ii + jj * 2) % 7 + 1).astype("uint8")
-        write_cog(pb, b[None], transform=(4.0, 0.05, 10.0, 0.05),
-                  nodata=0, blockxsize=32, overviews=False)
-    return [pa, pb]
+    ii, jj = _ij(80)
+    kw = dict(nodata=0, blockxsize=32, overviews=False)
+    return [
+        _demo_cog("a.tif",
+                  lambda: ((ii * 3 + jj) % 11).astype("uint8")[None],
+                  transform=(0.0, 0.05, 10.0, 0.05), **kw),
+        _demo_cog("b.tif",
+                  lambda: ((ii + jj * 2) % 7 + 1).astype("uint8")[None],
+                  transform=(4.0, 0.05, 10.0, 0.05), **kw),
+    ]
 
 
 @register(
@@ -758,22 +767,12 @@ def q152(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle replays the 9-term arithmetic exactly — no float rounding.
 # --------------------------------------------------------------------------
 def _focal_demo_file() -> str:
-    import os
-    import tempfile
+    def make():
+        ii, jj = _ij(96)
+        return ((ii * 5 + jj * 3) % 13).astype("uint8")[None]
 
-    import numpy as np
-
-    from ..sources.geotiff import write_cog
-
-    d = os.path.join(tempfile.gettempdir(), "gfw_pixetl_spark_rt_demo")
-    os.makedirs(d, exist_ok=True)
-    p = os.path.join(d, "focal.tif")
-    if not os.path.exists(p):
-        ii, jj = np.meshgrid(np.arange(96), np.arange(96), indexing="ij")
-        v = ((ii * 5 + jj * 3) % 13).astype("uint8")
-        write_cog(p, v[None], transform=(0.0, 0.05, 10.0, 0.05),
-                  blockxsize=32, overviews=False)
-    return p
+    return _demo_cog("focal.tif", make, transform=(0.0, 0.05, 10.0, 0.05),
+                     blockxsize=32, overviews=False)
 
 
 _FOCAL_TERMS = " + ".join(
@@ -825,22 +824,12 @@ def q169(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 32-px COG tile boundaries (tile-granular partial reads, no shuffle).
 # --------------------------------------------------------------------------
 def _warp_demo_file() -> str:
-    import os
-    import tempfile
+    def make():
+        ii, jj = _ij(64)
+        return ((ii * 5 + jj * 3) % 13).astype("uint8")[None]
 
-    import numpy as np
-
-    from ..sources.geotiff import write_cog
-
-    d = os.path.join(tempfile.gettempdir(), "gfw_pixetl_spark_rt_demo")
-    os.makedirs(d, exist_ok=True)
-    p = os.path.join(d, "warp_src.tif")
-    if not os.path.exists(p):
-        ii, jj = np.meshgrid(np.arange(64), np.arange(64), indexing="ij")
-        v = ((ii * 5 + jj * 3) % 13).astype("uint8")
-        write_cog(p, v[None], transform=(0.0, 0.1, 10.0, 0.1),
-                  blockxsize=32, overviews=False)
-    return p
+    return _demo_cog("warp_src.tif", make, transform=(0.0, 0.1, 10.0, 0.1),
+                     blockxsize=32, overviews=False)
 
 
 @register(
@@ -910,28 +899,25 @@ _POLY_B = 4    # block side (px)
 
 
 def _poly_demo_file() -> str:
+    return _demo_cog("polygonize.tif", lambda: _md5_blocks() % 2,
+                     transform=(0.0, 0.1, 10.0, 0.1),
+                     blockxsize=16, overviews=False)
+
+
+def _md5_blocks():
+    """``_POLY_N``-square uint8 raster of ``_POLY_B``-square blocks, each
+    valued by the first md5 byte of its block id."""
     import hashlib
-    import os
-    import tempfile
 
     import numpy as np
 
-    from ..sources.geotiff import write_cog
-
-    d = os.path.join(tempfile.gettempdir(), "gfw_pixetl_spark_rt_demo")
-    os.makedirs(d, exist_ok=True)
-    p = os.path.join(d, "polygonize.tif")
-    if not os.path.exists(p):
-        nb = _POLY_N // _POLY_B
-        blocks = np.zeros((nb, nb), dtype="uint8")
-        for br in range(nb):
-            for bc in range(nb):
-                h = hashlib.md5(str(br * nb + bc).encode()).hexdigest()
-                blocks[br, bc] = int(h[:2], 16) % 2
-        v = np.repeat(np.repeat(blocks, _POLY_B, 0), _POLY_B, 1)
-        write_cog(p, v[None], transform=(0.0, 0.1, 10.0, 0.1),
-                  blockxsize=16, overviews=False)
-    return p
+    nb = _POLY_N // _POLY_B
+    blocks = np.zeros((nb, nb), dtype="uint8")
+    for br in range(nb):
+        for bc in range(nb):
+            h = hashlib.md5(str(br * nb + bc).encode()).hexdigest()
+            blocks[br, bc] = int(h[:2], 16)
+    return np.repeat(np.repeat(blocks, _POLY_B, 0), _POLY_B, 1)[None]
 
 
 @register(
@@ -1015,23 +1001,13 @@ def q213(spark: SparkSession, sf_dir: str) -> DataFrame:
 # replays the decimated grid analytically — integer-exact.
 # --------------------------------------------------------------------------
 def _decim_demo_file() -> str:
-    import os
-    import tempfile
+    def make():
+        ii, jj = _ij(128)
+        return ((ii * 3 + jj * 5) % 17).astype("uint8")[None]
 
-    import numpy as np
-
-    from ..sources.geotiff import write_cog
-
-    d = os.path.join(tempfile.gettempdir(), "gfw_pixetl_spark_rt_demo")
-    os.makedirs(d, exist_ok=True)
-    p = os.path.join(d, "decim.tif")
-    if not os.path.exists(p):
-        ii, jj = np.meshgrid(np.arange(128), np.arange(128), indexing="ij")
-        v = ((ii * 3 + jj * 5) % 17).astype("uint8")
-        write_cog(p, v[None], transform=(0.0, 0.05, 10.0, 0.05),
-                  blockxsize=32, overviews=True,
-                  overview_resampling="nearest")
-    return p
+    return _demo_cog("decim.tif", make, transform=(0.0, 0.05, 10.0, 0.05),
+                     blockxsize=32, overviews=True,
+                     overview_resampling="nearest")
 
 
 @register(
@@ -1423,24 +1399,16 @@ def q185(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (uri, row, col) — co-partitioned by the same kernel, no skew.
 # --------------------------------------------------------------------------
 def _ndvi_demo_file() -> str:
-    import os
-    import tempfile
-
     import numpy as np
 
-    from ..sources.geotiff import write_cog
-
-    d = os.path.join(tempfile.gettempdir(), "gfw_pixetl_spark_rt_demo")
-    os.makedirs(d, exist_ok=True)
-    p = os.path.join(d, "ndvi2band.tif")
-    if not os.path.exists(p):
-        ii, jj = np.meshgrid(np.arange(64), np.arange(64), indexing="ij")
+    def make():
+        ii, jj = _ij(64)
         red = ((ii * 2 + jj) % 9 + 1).astype("uint8")      # 1..9, no zeros
         nir = ((ii + jj * 3) % 11 + 2).astype("uint8")     # 2..12
-        write_cog(p, np.stack([red, nir]),
-                  transform=(0.0, 0.1, 10.0, 0.1),
-                  blockxsize=32, overviews=False)
-    return p
+        return np.stack([red, nir])
+
+    return _demo_cog("ndvi2band.tif", make, transform=(0.0, 0.1, 10.0, 0.1),
+                     blockxsize=32, overviews=False)
 
 
 @register(
@@ -1552,27 +1520,20 @@ def q194(spark: SparkSession, sf_dir: str) -> DataFrame:
 # halves, so sum(2*median) is an exact BIGINT the oracle replays.
 # --------------------------------------------------------------------------
 def _composite_files() -> list[str]:
-    import os
-    import tempfile
+    ii, jj = _ij(64)
 
-    import numpy as np
+    def make(t):
+        v = ((ii * 3 + jj * 2 + t * 7) % 19 + 1).astype("uint8")
+        cloud = (ii * 7 + jj * 11 + t * 5) % 9 == 0
+        v[cloud] = 0  # nodata = cloud
+        return v[None]
 
-    from ..sources.geotiff import write_cog
-
-    d = os.path.join(tempfile.gettempdir(), "gfw_pixetl_spark_rt_demo")
-    os.makedirs(d, exist_ok=True)
-    out = []
-    ii, jj = np.meshgrid(np.arange(64), np.arange(64), indexing="ij")
-    for t in range(3):
-        p = os.path.join(d, f"composite_t{t}.tif")
-        if not os.path.exists(p):
-            v = ((ii * 3 + jj * 2 + t * 7) % 19 + 1).astype("uint8")
-            cloud = (ii * 7 + jj * 11 + t * 5) % 9 == 0
-            v[cloud] = 0  # nodata = cloud
-            write_cog(p, v[None], transform=(0.0, 0.1, 10.0, 0.1),
-                      nodata=0, blockxsize=32, overviews=False)
-        out.append(p)
-    return out
+    return [
+        _demo_cog(f"composite_t{t}.tif", lambda t=t: make(t),
+                  transform=(0.0, 0.1, 10.0, 0.1),
+                  nodata=0, blockxsize=32, overviews=False)
+        for t in range(3)
+    ]
 
 
 @register(
@@ -1629,26 +1590,18 @@ def q214(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact integers; the oracle replays them and the rounded slope.
 # --------------------------------------------------------------------------
 def _trend_files() -> list[str]:
-    import os
-    import tempfile
+    ii, jj = _ij(64)
 
-    import numpy as np
+    def make(t):
+        return ((ii * 2 + jj + t * (1 + (ii + jj) % 3)) % 17 + 1
+                ).astype("uint8")[None]
 
-    from ..sources.geotiff import write_cog
-
-    d = os.path.join(tempfile.gettempdir(), "gfw_pixetl_spark_rt_demo")
-    os.makedirs(d, exist_ok=True)
-    out = []
-    ii, jj = np.meshgrid(np.arange(64), np.arange(64), indexing="ij")
-    for t in range(3):
-        p = os.path.join(d, f"trend_t{t}.tif")
-        if not os.path.exists(p):
-            v = ((ii * 2 + jj + t * (1 + (ii + jj) % 3)) % 17 + 1
-                 ).astype("uint8")
-            write_cog(p, v[None], transform=(0.0, 0.1, 10.0, 0.1),
-                      blockxsize=32, overviews=False)
-        out.append(p)
-    return out
+    return [
+        _demo_cog(f"trend_t{t}.tif", lambda t=t: make(t),
+                  transform=(0.0, 0.1, 10.0, 0.1),
+                  blockxsize=32, overviews=False)
+        for t in range(3)
+    ]
 
 
 @register(
@@ -2272,28 +2225,9 @@ _FILL_R = 6  # search radius (px)
 
 
 def _fill_demo_file() -> str:
-    import hashlib
-    import os
-    import tempfile
-
-    import numpy as np
-
-    from ..sources.geotiff import write_cog
-
-    d = os.path.join(tempfile.gettempdir(), "gfw_pixetl_spark_rt_demo")
-    os.makedirs(d, exist_ok=True)
-    p = os.path.join(d, "fillnodata.tif")
-    if not os.path.exists(p):
-        nb = _POLY_N // _POLY_B
-        blocks = np.zeros((nb, nb), dtype="uint8")
-        for br in range(nb):
-            for bc in range(nb):
-                h = hashlib.md5(str(br * nb + bc).encode()).hexdigest()
-                blocks[br, bc] = int(h[:2], 16)
-        v = np.repeat(np.repeat(blocks, _POLY_B, 0), _POLY_B, 1)
-        write_cog(p, v[None], transform=(0.0, 0.1, 10.0, 0.1),
-                  blockxsize=16, overviews=False)
-    return p
+    return _demo_cog("fillnodata.tif", _md5_blocks,
+                     transform=(0.0, 0.1, 10.0, 0.1),
+                     blockxsize=16, overviews=False)
 
 
 @register(
@@ -3037,24 +2971,14 @@ def q435(spark: SparkSession, sf_dir: str) -> DataFrame:
 # an index/value mismatch all shift the counts or colors.
 # --------------------------------------------------------------------------
 def _palette_demo_file() -> str:
-    import os
-    import tempfile
+    def make():
+        ii, jj = _ij(64)
+        return ((3 * jj + 5 * ii) % 13).astype("uint8")[None]
 
-    import numpy as np
-
-    from ..sources.geotiff import write_cog
-
-    d = os.path.join(tempfile.gettempdir(), "gfw_pixetl_spark_rt_demo")
-    os.makedirs(d, exist_ok=True)
-    p = os.path.join(d, "palette.tif")
-    if not os.path.exists(p):
-        ii, jj = np.meshgrid(np.arange(64), np.arange(64), indexing="ij")
-        v = ((3 * jj + 5 * ii) % 13).astype("uint8")
-        cmap = {k: ((k * 19 + 7) % 256, (k * 37 + 11) % 256,
-                    (k * 53 + 29) % 256) for k in range(13)}
-        write_cog(p, v[None], transform=(0.0, 0.1, 10.0, 0.1),
-                  blockxsize=32, overviews=False, colormap=cmap)
-    return p
+    cmap = {k: ((k * 19 + 7) % 256, (k * 37 + 11) % 256,
+                (k * 53 + 29) % 256) for k in range(13)}
+    return _demo_cog("palette.tif", make, transform=(0.0, 0.1, 10.0, 0.1),
+                     blockxsize=32, overviews=False, colormap=cmap)
 
 
 @register(

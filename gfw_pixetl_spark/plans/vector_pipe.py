@@ -31,7 +31,6 @@ deterministic under any partitioning, exactly the reference's
 from __future__ import annotations
 
 import io
-from collections.abc import Iterator  # noqa: F401 (mirrors raster_pipe)
 from dataclasses import dataclass
 
 import numpy as np
@@ -43,7 +42,8 @@ from ..functions.rasterize_kernel import merge_keyed, rasterize, rasterize_keyed
 from ..grids import Grid
 from ..models import LayerModel
 from .raster_pipe import (
-    WINDOW_PAYLOAD_COLS, WINDOW_PAYLOAD_SCHEMA, seed_tiles, write_tiles,
+    WINDOW_PAYLOAD_COLS, WINDOW_PAYLOAD_SCHEMA, _overlap, seed_tiles,
+    select_tiles, write_tiles,
 )
 
 GEOM_TYPE = "array<array<array<double>>>"
@@ -286,18 +286,8 @@ class VectorPipe:
         the at-size stress harness can tap Arrow batch sizes at the
         exact point the write exchange consumes them."""
         grid = self.grid_obj
-        tiles = seed_tiles(spark, grid)
-        if subset:
-            tiles = tiles.filter(F.col("tile_id").isin(subset))
-
-        feats = with_bbox(features)
-        overlap = (
-            (F.col("tile_left") < F.col("f_right"))
-            & (F.col("tile_right") > F.col("f_left"))
-            & (F.col("tile_bottom") < F.col("f_top"))
-            & (F.col("tile_top") > F.col("f_bottom"))
-        )
-        pairs = feats.join(F.broadcast(tiles), overlap)
+        tiles = select_tiles(seed_tiles(spark, grid), subset)
+        pairs = with_bbox(features).join(F.broadcast(tiles), _overlap())
 
         # each (feature, tile) pair fans out ONLY to the windows the
         # feature's bbox touches — the window index range is closed-form

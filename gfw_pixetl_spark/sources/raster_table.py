@@ -14,6 +14,12 @@ and ad-hoc SQL run straight over the imagery. Execution model:
   a 40000^2 tile never materializes in one task; windows stream through
   ``mapInPandas`` and emit only pixels inside the query bbox with valid
   data — the filter runs inside the kernel, so nodata never shuffles.
+* One windowed pixel kernel serves every reader: ``read_pixels`` is the
+  radius-0 halo stencil (identity stencil, bbox narrowing each window's
+  read), the neighborhood ops are the same stencil at radius 1+, and
+  ``warp_pixels``/``decimated_pixels`` share its task planner
+  (``_window_tasks``), file loop (``_map_windows``) and long-format
+  row emitter (``_long_rows``).
 * Output schema: (uri, band, row, col, x, y, value) with x/y = pixel
   CENTER coordinates in the file CRS — directly joinable against
   geometry predicates (functions/geometry.py) and groupable for zonal
@@ -57,33 +63,37 @@ def raster_catalog(spark: SparkSession, uris: list[str]) -> DataFrame:
     )
 
 
-def read_pixels(
+def _bbox_filter(catalog: DataFrame, bounds) -> DataFrame:
+    """Planning-time file prune: the cataloged files whose footprint
+    overlaps ``bounds`` (all files when ``bounds`` is None)."""
+    if bounds is None:
+        return catalog
+    qleft, qbottom, qright, qtop = bounds
+    return catalog.filter(
+        (F.col("left") < qright) & (F.col("right") > qleft)
+        & (F.col("bottom") < qtop) & (F.col("top") > qbottom)
+    )
+
+
+def _window_tasks(
     catalog: DataFrame,
-    bounds: tuple[float, float, float, float] | None = None,
-    window: int = 2048,
-    parallelism: int | None = None,
+    window: int,
+    parallelism: int | None,
+    scale: float = 1.0,
 ) -> DataFrame:
-    """Long-format pixel DataFrame over the cataloged files.
-
-    ``bounds`` prunes files at PLANNING time (catalog filter) and pixels
-    at KERNEL time (row/col slice before the window is emitted); nodata
-    pixels are dropped inside the kernel. ``window`` bounds per-task
-    memory (window^2 pixels max per batch row group).
-    """
-    files = catalog
-    if bounds is not None:
-        qleft, qbottom, qright, qtop = bounds
-        files = files.filter(
-            (F.col("left") < qright) & (F.col("right") > qleft)
-            & (F.col("bottom") < qtop) & (F.col("top") > qbottom)
-        )
-
-    # explode each file into window tasks (pure column math on metadata)
+    """Explode each file into (uri, wx, wy) window tasks over its output
+    grid of ``ceil(width*scale) x ceil(height*scale)`` pixels (pure
+    column math on metadata), spread across executors. An explicit
+    ``parallelism`` avoids paying spark.sql.shuffle.partitions-many task
+    launches when the catalog is small (the default is right for a
+    100k-file mosaic)."""
     win = F.lit(window)
-    nwx = F.ceil(F.col("width") / win).cast("int")
-    nwy = F.ceil(F.col("height") / win).cast("int")
+    dw = F.ceil(F.col("width") * F.lit(scale)).cast("int")
+    dh = F.ceil(F.col("height") * F.lit(scale)).cast("int")
+    nwx = F.ceil(dw / win).cast("int")
+    nwy = F.ceil(dh / win).cast("int")
     tasks = (
-        files.select(
+        catalog.select(
             "uri",
             F.explode(F.sequence(F.lit(0), nwx - 1)).alias("wx"),
             nwy.alias("nwy"),
@@ -93,64 +103,83 @@ def read_pixels(
             F.explode(F.sequence(F.lit(0), F.col("nwy") - 1)).alias("wy"),
         )
     )
-    # spread window tasks across executors; an explicit parallelism
-    # avoids paying spark.sql.shuffle.partitions-many task launches when
-    # the catalog is small (the default is right for a 100k-file mosaic)
-    tasks = (
+    return (
         tasks.repartition(parallelism, "uri", "wx", "wy")
         if parallelism else tasks.repartition("uri", "wx", "wy")
     )
 
-    qbounds = bounds
+
+def _map_windows(tasks: DataFrame, window_rows, schema: str) -> DataFrame:
+    """The pixel kernel: ``window_rows(t, task)`` turns each task row
+    (a ``uri`` plus window indices) into a long-format frame or None,
+    with ``t`` the task's file, opened once per file per partition."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         open_files: dict[str, GeoTiff] = {}
         for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                t = open_files.get(r.uri)
+            for task in pdf.itertuples(index=False):
+                t = open_files.get(task.uri)
                 if t is None:
-                    t = open_files[r.uri] = GeoTiff.open(r.uri)
-                c0, r0 = r.wx * window, r.wy * window
-                w = min(window, t.width - c0)
-                h = min(window, t.height - r0)
-                if w <= 0 or h <= 0:
-                    continue
-                arr = t.read_window(c0, r0, w, h)
-                ox, sx, oy, sy = t.transform
-                cols_idx = c0 + np.arange(w)
-                rows_idx = r0 + np.arange(h)
-                xs = ox + (cols_idx + 0.5) * sx
-                ys = oy - (rows_idx + 0.5) * sy
-                # pixel-level bbox clip inside the kernel
-                if qbounds is not None:
-                    ql, qb, qr, qt = qbounds
-                    csel = (xs > ql) & (xs < qr)
-                    rsel = (ys > qb) & (ys < qt)
-                    if not csel.any() or not rsel.any():
-                        continue
-                    arr = arr[:, rsel][:, :, csel]
-                    cols_idx, rows_idx = cols_idx[csel], rows_idx[rsel]
-                    xs, ys = xs[csel], ys[rsel]
-                valid = ~np.ma.getmaskarray(arr)
-                data = np.ma.getdata(arr).astype("float64")
-                out = []
-                for b in range(arr.shape[0]):
-                    bi, bj = np.nonzero(valid[b])
-                    if not len(bi):
-                        continue
-                    out.append(pd.DataFrame({
-                        "uri": r.uri, "band": np.int32(b + 1),
-                        "row": rows_idx[bi].astype("int32"),
-                        "col": cols_idx[bj].astype("int32"),
-                        "x": xs[bj], "y": ys[bi],
-                        "value": data[b][bi, bj],
-                    }))
-                if out:
-                    yield pd.concat(out, ignore_index=True)
+                    t = open_files[task.uri] = GeoTiff.open(task.uri)
+                out = window_rows(t, task)
+                if out is not None:
+                    yield out
 
-    return tasks.select(
-        "uri", "wx", "wy"
-    ).mapInPandas(kernel, PIXEL_SCHEMA)
+    return tasks.mapInPandas(kernel, schema)
+
+
+def _long_rows(uri, rows_idx, cols_idx, bands, xs=None, ys=None):
+    """One window as a long-format frame, or None when it emits nothing.
+
+    ``bands`` yields one ``(cols, ok)`` per band: ``ok`` and each value
+    of ``cols`` are ``(len(rows_idx), len(cols_idx))`` arrays, and only
+    ``ok`` pixels are emitted as (uri, band, row, col[, x, y], *cols).
+    ``xs``/``ys`` are the pixel-center coordinates of the columns/rows;
+    x and y are left out when they are None."""
+    out = []
+    for b, (cols, ok) in enumerate(bands):
+        bi, bj = np.nonzero(ok)
+        if not len(bi):
+            continue
+        row = {
+            "uri": uri, "band": np.int32(b + 1),
+            "row": rows_idx[bi].astype("int32"),
+            "col": cols_idx[bj].astype("int32"),
+        }
+        if xs is not None:
+            row.update(x=xs[bj], y=ys[bi])
+        row.update({k: v[bi, bj] for k, v in cols.items()})
+        out.append(pd.DataFrame(row))
+    return pd.concat(out, ignore_index=True) if out else None
+
+
+def _inside(centers: np.ndarray, lo: float, hi: float) -> slice:
+    """The run of monotone pixel ``centers`` strictly inside (lo, hi)."""
+    idx = np.flatnonzero((centers > lo) & (centers < hi))
+    return slice(idx[0], idx[-1] + 1) if len(idx) else slice(0, 0)
+
+
+def read_pixels(
+    catalog: DataFrame,
+    bounds: tuple[float, float, float, float] | None = None,
+    window: int = 2048,
+    parallelism: int | None = None,
+) -> DataFrame:
+    """Long-format pixel DataFrame over the cataloged files.
+
+    ``bounds`` prunes files at PLANNING time (catalog filter) and pixels
+    at KERNEL time (each window reads only the pixels whose centers lie
+    inside); nodata pixels are dropped inside the kernel. ``window``
+    bounds per-task memory (window^2 pixels max per batch row group).
+    This is :func:`_halo_stencil` with radius 0 and the identity
+    stencil.
+    """
+
+    def identity(data, valid, _transform):
+        return {"value": data.astype("float64")}, valid
+
+    return _halo_stencil(_bbox_filter(catalog, bounds), window,
+                         parallelism, 0, identity, PIXEL_SCHEMA, bounds)
 
 
 FOCAL_SCHEMA = (
@@ -170,8 +199,10 @@ def _halo_stencil(
     radius: int,
     stencil,
     schema: str,
+    bounds: tuple[float, float, float, float] | None = None,
 ) -> DataFrame:
-    """Shared machinery for neighborhood (stencil) raster ops.
+    """Shared machinery for windowed raster reads and neighborhood
+    (stencil) ops.
 
     The distributed-stencil part is the HALO READ: each window task
     re-reads a ``radius``-pixel ring around its window straight from the
@@ -181,74 +212,45 @@ def _halo_stencil(
     embarrassingly parallel — no shuffle until the caller aggregates.
 
     ``stencil(data, valid, transform)`` receives one band's halo window
-    (``(oh+2r, ow+2r)`` float64/bool) and returns ``(cols_dict, ok)``
+    (``(oh+2r, ow+2r)`` raw/bool) and returns ``(cols_dict, ok)``
     where each ``cols_dict`` value and ``ok`` are ``(oh, ow)`` arrays;
-    only ``ok`` pixels are emitted.
+    only ``ok`` pixels are emitted. ``bounds`` narrows each window's
+    output to the pixels whose centers lie strictly inside it (centers
+    are monotone in the index, so that is one row run and one column
+    run), and only those are read.
     """
-    win = F.lit(window)
-    nwx = F.ceil(F.col("width") / win).cast("int")
-    nwy = F.ceil(F.col("height") / win).cast("int")
-    tasks = (
-        catalog.select(
-            "uri",
-            F.explode(F.sequence(F.lit(0), nwx - 1)).alias("wx"),
-            nwy.alias("nwy"),
-        )
-        .select(
-            "uri", "wx",
-            F.explode(F.sequence(F.lit(0), F.col("nwy") - 1)).alias("wy"),
-        )
-    )
-    tasks = (
-        tasks.repartition(parallelism, "uri", "wx", "wy")
-        if parallelism else tasks.repartition("uri", "wx", "wy")
-    )
-    rad = radius
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        open_files: dict[str, GeoTiff] = {}
-        for pdf in batches:
-            for t_row in pdf.itertuples(index=False):
-                t = open_files.get(t_row.uri)
-                if t is None:
-                    t = open_files[t_row.uri] = GeoTiff.open(t_row.uri)
-                # output range: window pixels whose neighborhood is
-                # fully inside the image
-                oc0 = max(t_row.wx * window, rad)
-                or0 = max(t_row.wy * window, rad)
-                oc1 = min((t_row.wx + 1) * window, t.width - rad)
-                or1 = min((t_row.wy + 1) * window, t.height - rad)
-                if oc1 <= oc0 or or1 <= or0:
-                    continue
-                # halo read: output range expanded by the radius
-                c0, r0 = oc0 - rad, or0 - rad
-                w, h = (oc1 - oc0) + 2 * rad, (or1 - or0) + 2 * rad
-                arr = t.read_window(c0, r0, w, h)
-                data = np.ma.getdata(arr)
-                valid = ~np.ma.getmaskarray(arr)
-                ox, sx, oy, sy = t.transform
-                cols_idx = np.arange(oc0, oc1)
-                rows_idx = np.arange(or0, or1)
-                xs = ox + (cols_idx + 0.5) * sx
-                ys = oy - (rows_idx + 0.5) * sy
-                out = []
-                for b in range(arr.shape[0]):
-                    cols, ok = stencil(data[b], valid[b], t.transform)
-                    bi, bj = np.nonzero(ok)
-                    if not len(bi):
-                        continue
-                    row = {
-                        "uri": t_row.uri, "band": np.int32(b + 1),
-                        "row": rows_idx[bi].astype("int32"),
-                        "col": cols_idx[bj].astype("int32"),
-                        "x": xs[bj], "y": ys[bi],
-                    }
-                    row.update({k: v[bi, bj] for k, v in cols.items()})
-                    out.append(pd.DataFrame(row))
-                if out:
-                    yield pd.concat(out, ignore_index=True)
+    def window_rows(t: GeoTiff, task) -> pd.DataFrame | None:
+        # output range: window pixels whose neighborhood is fully
+        # inside the image
+        cols_idx = np.arange(max(task.wx * window, radius),
+                             min((task.wx + 1) * window, t.width - radius))
+        rows_idx = np.arange(max(task.wy * window, radius),
+                             min((task.wy + 1) * window, t.height - radius))
+        ox, sx, oy, sy = t.transform
+        xs = ox + (cols_idx + 0.5) * sx
+        ys = oy - (rows_idx + 0.5) * sy
+        if bounds is not None:
+            ql, qb, qr, qt = bounds
+            cs, rs = _inside(xs, ql, qr), _inside(ys, qb, qt)
+            cols_idx, xs = cols_idx[cs], xs[cs]
+            rows_idx, ys = rows_idx[rs], ys[rs]
+        if not len(cols_idx) or not len(rows_idx):
+            return None
+        # halo read: output range expanded by the radius
+        arr = t.read_window(
+            int(cols_idx[0]) - radius, int(rows_idx[0]) - radius,
+            len(cols_idx) + 2 * radius, len(rows_idx) + 2 * radius)
+        data = np.ma.getdata(arr)
+        valid = ~np.ma.getmaskarray(arr)
+        return _long_rows(
+            task.uri, rows_idx, cols_idx,
+            (stencil(data[b], valid[b], t.transform)
+             for b in range(arr.shape[0])),
+            xs, ys)
 
-    return tasks.select("uri", "wx", "wy").mapInPandas(kernel, schema)
+    return _map_windows(_window_tasks(catalog, window, parallelism),
+                        window_rows, schema)
 
 
 def focal_sum_pixels(
@@ -332,44 +334,24 @@ def decimated_pixels(
     z3" from scanning 100 TB of full-res tiles. One task per file (the
     output is bounded by out_width*out_height rows per file, so there is
     nothing to window)."""
-    files = catalog
-    if bounds is not None:
-        qleft, qbottom, qright, qtop = bounds
-        files = files.filter(
-            (F.col("left") < qright) & (F.col("right") > qleft)
-            & (F.col("bottom") < qtop) & (F.col("top") > qbottom)
-        )
-    files = files.repartition("uri")
+    files = _bbox_filter(catalog, bounds).repartition("uri")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                t = GeoTiff.open(r.uri)
-                fb = bounds if bounds is not None else t.bounds
-                left, bottom, right, top = fb
-                arr = t.read_decimated(fb, out_width, out_height)
-                xs = left + (np.arange(out_width) + 0.5) * (
-                    (right - left) / out_width)
-                ys = top - (np.arange(out_height) + 0.5) * (
-                    (top - bottom) / out_height)
-                valid = ~np.ma.getmaskarray(arr)
-                data = np.ma.getdata(arr).astype("float64")
-                out = []
-                for b in range(arr.shape[0]):
-                    bi, bj = np.nonzero(valid[b])
-                    if not len(bi):
-                        continue
-                    out.append(pd.DataFrame({
-                        "uri": r.uri, "band": np.int32(b + 1),
-                        "row": bi.astype("int32"),
-                        "col": bj.astype("int32"),
-                        "x": xs[bj], "y": ys[bi],
-                        "value": data[b][bi, bj],
-                    }))
-                if out:
-                    yield pd.concat(out, ignore_index=True)
+    def file_rows(t: GeoTiff, task) -> pd.DataFrame | None:
+        fb = bounds if bounds is not None else t.bounds
+        left, bottom, right, top = fb
+        arr = t.read_decimated(fb, out_width, out_height)
+        xs = left + (np.arange(out_width) + 0.5) * (
+            (right - left) / out_width)
+        ys = top - (np.arange(out_height) + 0.5) * (
+            (top - bottom) / out_height)
+        valid = ~np.ma.getmaskarray(arr)
+        data = np.ma.getdata(arr).astype("float64")
+        return _long_rows(
+            task.uri, np.arange(out_height), np.arange(out_width),
+            (({"value": data[b]}, valid[b]) for b in range(arr.shape[0])),
+            xs, ys)
 
-    return files.select("uri").mapInPandas(kernel, PIXEL_SCHEMA)
+    return _map_windows(files.select("uri"), file_rows, PIXEL_SCHEMA)
 
 
 TERRAIN_SCHEMA = (
@@ -586,8 +568,6 @@ def materialize_pixels(
     """
     import os
 
-    import numpy as np
-
     from .geotiff import write_cog
 
     os.makedirs(out_dir, exist_ok=True)
@@ -610,10 +590,8 @@ def materialize_pixels(
         t = (ox + tc * tile_size * sx, sx,
              oy - tr * tile_size * sy, sy)
         uri = os.path.join(out_dir, f"tile_{tr}_{tc}.tif")
-        tmp = uri + ".tmp.tif"
-        write_cog(tmp, arr[None], transform=t, nodata=nodata,
+        write_cog(uri, arr[None], transform=t, nodata=nodata,
                   blockxsize=blockxsize, overviews=overviews)
-        os.replace(tmp, uri)
         return pd.DataFrame({"uri": [uri], "n_px": [len(pdf)]})
 
     return keyed.groupBy("tr", "tc").applyInPandas(
@@ -644,88 +622,44 @@ def warp_pixels(
     pixels whose full support lies inside the source are emitted, so
     results are partition-independent and edge-policy-free.
     """
-    from ..functions.warp import KERNELS
+    from ..functions.warp import KERNELS, sample_grid
 
     radius = 1 if method == "nearest" else KERNELS[method][1]
-    win = F.lit(window)
-    dw = F.ceil(F.col("width") * F.lit(scale)).cast("int")
-    dh = F.ceil(F.col("height") * F.lit(scale)).cast("int")
-    nwx = F.ceil(dw / win).cast("int")
-    nwy = F.ceil(dh / win).cast("int")
-    tasks = (
-        catalog.select(
-            "uri",
-            F.explode(F.sequence(F.lit(0), nwx - 1)).alias("wx"),
-            nwy.alias("nwy"),
-        )
-        .select(
-            "uri", "wx",
-            F.explode(F.sequence(F.lit(0), F.col("nwy") - 1)).alias("wy"),
-        )
-    )
-    tasks = (
-        tasks.repartition(parallelism, "uri", "wx", "wy")
-        if parallelism else tasks.repartition("uri", "wx", "wy")
-    )
-    rad, mth, scl = radius, method, float(scale)
+    scl = float(scale)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.warp import sample_grid
+    def window_rows(t: GeoTiff, task) -> pd.DataFrame | None:
+        dst_w = int(np.ceil(t.width * scl))
+        dst_h = int(np.ceil(t.height * scl))
+        cols_idx = np.arange(task.wx * window,
+                             min((task.wx + 1) * window, dst_w))
+        rows_idx = np.arange(task.wy * window,
+                             min((task.wy + 1) * window, dst_h))
+        fx = (cols_idx + 0.5) / scl - 0.5
+        fy = (rows_idx + 0.5) / scl - 0.5
+        # keep only dst pixels whose full kernel support is inside
+        x0 = np.floor(fx).astype("int64")
+        y0 = np.floor(fy).astype("int64")
+        csel = (x0 - radius + 1 >= 0) & (x0 + radius <= t.width - 1)
+        rsel = (y0 - radius + 1 >= 0) & (y0 + radius <= t.height - 1)
+        if not csel.any() or not rsel.any():
+            return None
+        cols_idx, fx, x0 = cols_idx[csel], fx[csel], x0[csel]
+        rows_idx, fy, y0 = rows_idx[rsel], fy[rsel], y0[rsel]
+        # halo read: exactly the source rows/cols the taps touch
+        sc0 = int(x0[0] - radius + 1)
+        sc1 = int(x0[-1] + radius + 1)
+        sr0 = int(y0[0] - radius + 1)
+        sr1 = int(y0[-1] + radius + 1)
+        arr = t.read_window(sc0, sr0, sc1 - sc0, sr1 - sr0)
+        gfy, gfx = np.meshgrid(fy - sr0, fx - sc0, indexing="ij")
+        res = (sample_grid(np.ma.MaskedArray(np.ma.getdata(band),
+                                             mask=np.ma.getmaskarray(band)),
+                           gfx, gfy, method)
+               for band in arr)
+        return _long_rows(
+            task.uri, rows_idx, cols_idx,
+            (({"value": np.ma.getdata(r)}, ~np.ma.getmaskarray(r))
+             for r in res))
 
-        open_files: dict[str, GeoTiff] = {}
-        for pdf in batches:
-            for t_row in pdf.itertuples(index=False):
-                t = open_files.get(t_row.uri)
-                if t is None:
-                    t = open_files[t_row.uri] = GeoTiff.open(t_row.uri)
-                dst_w = int(np.ceil(t.width * scl))
-                dst_h = int(np.ceil(t.height * scl))
-                c0, c1 = t_row.wx * window, min((t_row.wx + 1) * window,
-                                                dst_w)
-                r0, r1 = t_row.wy * window, min((t_row.wy + 1) * window,
-                                                dst_h)
-                if c1 <= c0 or r1 <= r0:
-                    continue
-                cols_idx = np.arange(c0, c1)
-                rows_idx = np.arange(r0, r1)
-                fx = (cols_idx + 0.5) / scl - 0.5
-                fy = (rows_idx + 0.5) / scl - 0.5
-                # keep only dst pixels whose full kernel support is inside
-                x0 = np.floor(fx).astype("int64")
-                y0 = np.floor(fy).astype("int64")
-                csel = (x0 - rad + 1 >= 0) & (x0 + rad <= t.width - 1)
-                rsel = (y0 - rad + 1 >= 0) & (y0 + rad <= t.height - 1)
-                if not csel.any() or not rsel.any():
-                    continue
-                cols_idx, fx, x0 = cols_idx[csel], fx[csel], x0[csel]
-                rows_idx, fy, y0 = rows_idx[rsel], fy[rsel], y0[rsel]
-                # halo read: exactly the source rows/cols the taps touch
-                sc0 = int(x0[0] - rad + 1)
-                sc1 = int(x0[-1] + rad + 1)
-                sr0 = int(y0[0] - rad + 1)
-                sr1 = int(y0[-1] + rad + 1)
-                arr = t.read_window(sc0, sr0, sc1 - sc0, sr1 - sr0)
-                gfy, gfx = np.meshgrid(fy - sr0, fx - sc0, indexing="ij")
-                out = []
-                for b in range(arr.shape[0]):
-                    res = sample_grid(
-                        np.ma.MaskedArray(
-                            np.ma.getdata(arr[b]),
-                            mask=np.ma.getmaskarray(arr[b]),
-                        ),
-                        gfx, gfy, mth,
-                    )
-                    okm = ~np.ma.getmaskarray(res)
-                    bi, bj = np.nonzero(okm)
-                    if not len(bi):
-                        continue
-                    out.append(pd.DataFrame({
-                        "uri": t_row.uri, "band": np.int32(b + 1),
-                        "row": rows_idx[bi].astype("int32"),
-                        "col": cols_idx[bj].astype("int32"),
-                        "value": np.ma.getdata(res)[bi, bj],
-                    }))
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-
-    return tasks.select("uri", "wx", "wy").mapInPandas(kernel, WARP_SCHEMA)
+    return _map_windows(_window_tasks(catalog, window, parallelism, scale),
+                        window_rows, WARP_SCHEMA)

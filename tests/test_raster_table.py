@@ -269,3 +269,53 @@ def test_d8_flat_raster_is_all_pits(spark, tmp_path):
         raster_catalog(spark, [p]), window=32, parallelism=2).collect()
     assert len(rows) == 38 * 38
     assert all(r.flow_dir == 0 and r.metric == 0 for r in rows)
+
+
+def test_bbox_read_across_files_and_windows_matches_numpy(spark, cogs):
+    """A bbox that straddles both files and cuts through 32-px windows
+    returns exactly the NumPy slice of pixels whose centers lie strictly
+    inside it, with nodata dropped."""
+    bounds = (3.03, 7.02, 4.61, 9.37)
+    cat = raster_catalog(spark, [cogs["a"][0], cogs["b"][0]])
+    px = read_pixels(cat, bounds=bounds, window=32, parallelism=3)
+    got = {(r.uri, r.row, r.col): (r.x, r.y, r.value) for r in px.collect()}
+    ql, qb, qr, qt = bounds
+    exp = {}
+    for ox, (path, arr) in ((0.0, cogs["a"]), (4.0, cogs["b"])):
+        xs = ox + (np.arange(80) + 0.5) * 0.05
+        ys = 10.0 - (np.arange(80) + 0.5) * 0.05
+        cols = np.flatnonzero((xs > ql) & (xs < qr))
+        rows = np.flatnonzero((ys > qb) & (ys < qt))
+        sub = arr[rows[0]:rows[-1] + 1, cols[0]:cols[-1] + 1]
+        for i, j in zip(*np.nonzero(sub)):
+            r, c = rows[0] + i, cols[0] + j
+            exp[(path, r, c)] = (xs[c], ys[r], float(sub[i, j]))
+    assert {k[0] for k in exp} == {cogs["a"][0], cogs["b"][0]}
+    assert got == exp
+
+
+def test_warp_windows_match_full_image_sample_grid(spark, cogs):
+    """warp_pixels over 32-px destination windows equals sample_grid run
+    once over the whole source, restricted to the pixels whose kernel
+    support lies inside the source and whose taps are all valid."""
+    from gfw_pixetl_spark.functions.warp import KERNELS, sample_grid
+    from gfw_pixetl_spark.sources.raster_table import warp_pixels
+
+    pa, a = cogs["a"]  # zeros are nodata
+    scale, method = 1.5, "cubic"
+    rad = KERNELS[method][1]
+    px = warp_pixels(raster_catalog(spark, [pa]), scale=scale,
+                     method=method, window=32, parallelism=4)
+    got = {(r.row, r.col): r.value for r in px.collect()}
+    assert all(r.band == 1 for r in px.select("band").distinct().collect())
+    n = int(np.ceil(80 * scale))
+    f = (np.arange(n) + 0.5) / scale - 0.5
+    gfy, gfx = np.meshgrid(f, f, indexing="ij")
+    res = sample_grid(np.ma.masked_equal(a, 0), gfx, gfy, method)
+    i0 = np.floor(f).astype("int64")
+    inside = (i0 - rad + 1 >= 0) & (i0 + rad <= 79)
+    ok = ~np.ma.getmaskarray(res) & inside[:, None] & inside[None, :]
+    exp = {(int(r), int(c)): float(np.ma.getdata(res)[r, c])
+           for r, c in zip(*np.nonzero(ok))}
+    assert n > 32 and len(exp) > 0
+    assert got == exp

@@ -5,6 +5,9 @@ Runs every ``__spark_entry__.queries()`` entry on Spark and its
 row count, column names, and order-insensitive values.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+A query is a full registry name (``q05_semi_join``) or its bare ``qNN``
+id (``q05``).
 """
 
 from __future__ import annotations
@@ -34,8 +37,10 @@ def main() -> int:
     oracles = entry_mod.oracle_sql()
 
     failures = []
-    run = [n for n in queries if not only or n in only]
-    unknown = sorted(only - set(queries))
+    # a bare qNN id selects the registry name with that qNN_ prefix
+    qid = {n: n.split("_", 1)[0] for n in queries}
+    run = [n for n in queries if not only or n in only or qid[n] in only]
+    unknown = sorted(only - set(queries) - set(qid.values()))
     if unknown:
         print(f"WARNING: not in registry: {unknown}")
     for name in run:
