@@ -16,9 +16,9 @@ Execution model: :class:`WarpReader` is a :class:`WindowReader` adapter —
 it inverse-projects the DESTINATION window's pixel centers into the
 source CRS, reads the minimal covering source window through the inner
 reader, and convolves. It therefore composes with the unchanged
-``RasterPipe``: the per-window kernel stays a small, bounded Arrow batch
+``RasterPipe``: the per-window kernel still holds one window at a time
 regardless of tile size, and reprojection cost parallelizes with the
-windows (SURVEY §3.1 scale notes apply verbatim).
+tiles (SURVEY §3.1 scale notes apply verbatim).
 
 Nodata: masked source pixels get kernel weight 0 and the remaining
 weights renormalize (GDAL's behavior for masked sources); a destination

@@ -17,6 +17,10 @@ and returns measured facts the callers assert / record:
   i.e. the 2 GiB-array guard is exercised by data volume, not a
   plan-shape test.
 
+The last two are tapped from ``RasterPipe.transform_windows``, the
+payload adaptor over the same window kernel the production tile jobs
+run without any payload exchange.
+
 ``tests/test_scale_stress.py`` asserts these (marked slow); ``bench.py``
 records the wall time per round (``scale_stress`` entry).
 
@@ -115,7 +119,7 @@ def run(spark, work_dir: str, blocks_per_window: int = 2) -> dict:
               "left": 0.0, "bottom": 0.0, "right": 20.0, "top": 20.0}]
 
     # Stage 1 measurement: window payloads + Arrow batch sizes, tapped
-    # between transform and write exactly where the exchange would be.
+    # from the transform_windows adaptor (the window kernel alone).
     t0 = time.perf_counter()
     tiles = rp.seed_tiles(spark, grid)
     catalog = rp.file_catalog(spark, files)
@@ -144,7 +148,7 @@ def run(spark, work_dir: str, blocks_per_window: int = 2) -> dict:
     )
     t_transform = time.perf_counter() - t0
 
-    # Stage 2: the full production run (transform re-executed + write).
+    # Stage 2: the full production run (the fused tile jobs).
     t0 = time.perf_counter()
     status = {r.tile_id: r for r in pipe.run(
         spark, files, subset=list(TILE_IDS)).collect()}

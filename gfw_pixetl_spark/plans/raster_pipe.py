@@ -8,24 +8,26 @@ Dataflow (one linear plan, lazy until the status frame is consumed):
     ->  target-exists anti-join (F5)  ->  broadcast join to the
     intersecting source files of a local-relation catalog, which is also
     the source-intersects prune (F3/F6)  ->  windows explode
-    (block-aligned, P5 replaced by fixed sizing)  ->  mapInPandas kernel
-    {read S4, calc C1, cast+nodata C3, empty-block marker F8}  ->
-    groupBy(tile_id) writer sink (S8), which decides every tile's status
-    (F9/F10)  ->  manifest aggregation (S10)
+    (block-aligned, P5 replaced by fixed sizing)  ->  hash partition by
+    tile  ->  groupBy(tile_id) tile job: per window {read S4, empty-block
+    check F8, calc C1, cast+nodata C3} into the tile array, then the sink
+    (S8) that decides the tile's status (F9/F10)  ->  manifest (S10)
 
-Everything before the kernel runs in the JVM: the window kernel is the
-first stage that starts a Python worker (each such stage costs ~0.2-0.3 s
-of fixed overhead on a 4-vCPU host before it does any work).
+Everything before the tile job runs in the JVM: it is the only stage that
+starts a Python worker (each such stage costs ~0.2-0.3 s of fixed
+overhead on a 4-vCPU host before it does any work).
 
-Scale notes. Tiles and windows are metadata rows (a few dozen bytes);
-the only heavy payloads are the window arrays, which exist solely inside
-the kernel stage and the single groupBy(tile_id) shuffle feeding the
-writer. Window size is bounded (blocks_per_window * block^2 pixels) so a
-task's Arrow batch stays far below the 2 GB limit regardless of tile size
-(SURVEY §7.4-4): a 40000^2 tile is 10000 window rows, never one row.
-The file catalog is broadcast (it is tiny relative to pixel data), making
-the spatial prune map-only. AQE handles skew when some tiles intersect
-many more files than others.
+Scale notes. Tiles and windows are metadata rows (a few dozen bytes), and
+only they shuffle: each tile job reads its windows one at a time straight
+into the tile array, so a task holds one tile plus one window and no
+pixel crosses an exchange. A 40000^2 tile is 10000 window rows, never one
+row. The file catalog is broadcast (it is tiny relative to pixel data),
+making the spatial prune map-only. The payload path
+(``transform_windows`` -> ``write_tiles``) runs the same window kernel
+and tile sink with the window arrays as Arrow rows between them; it is
+the vector pipe's sink and the tap that measures per-window volume, and
+its kernel re-chunks its output by bytes to stay under Arrow's 2 GB limit
+(SURVEY §7.4-4).
 """
 
 from __future__ import annotations
@@ -58,6 +60,7 @@ WINDOW_PAYLOAD_SCHEMA = (
     "bands int, dtype string, valid_pixels long, payload binary"
 )
 
+STATUS_COLS = ["tile_id", "status", "n_windows", "out_path"]
 STATUS_SCHEMA = (
     "tile_id string, status string, n_windows int, out_path string"
 )
@@ -202,25 +205,28 @@ def plan_windows(
     )
 
 
-def write_tiles(
-    payloads: DataFrame, layer: LayerModel, grid: Grid, work_dir: str
-) -> DataFrame:
-    """S8 sink: one writer per tile assembles windows into the tile array
-    and writes a real tiled-DEFLATE COG (pure-Python codec,
-    ``sources/geotiff.py``); shared by the raster and vector pipes.
-    groupBy(tile_id) + applyInPandas = the single-writer-per-tile
-    invariant; windowed assembly keeps peak memory at one tile per task.
-    Empty-window markers (``bands == 0``) are dropped on arrival; a tile
-    with only markers is ``skipped (has no data)`` (F9), nothing written.
-    The profile mirrors ``gfw_pixetl/tiles/tile.py:54-97`` (tiled layout,
-    block size, compression, CRS, nodata, photometric, NBITS) and the
-    write is atomic (tmp + rename), matching the reference's
-    write-then-upload discipline.
+def _tile_writer(layer: LayerModel, grid: Grid, work_dir: str):
+    """S8 sink core shared by every tile path: returns
+    ``write_tile(tile_id, windows) -> status row``.
+
+    ``windows`` yields ``(row_off, col_off, outcome, array)`` in
+    ``(row_off, col_off)`` order, where ``outcome`` is the window's band
+    count, 0 for an empty window (F8, no array) or the error text of a
+    window that raised. ``write_tile`` is the one place the statuses are
+    decided: any failed window fails the tile with the first error in
+    window order (F10), a tile with only empty windows is ``skipped (has
+    no data)`` (F9), and nothing is written for either. ``n_windows``
+    counts the data and failed windows. Data windows are copied into the
+    tile array as they arrive, so peak memory is one tile plus one window.
     """
     rows_, cols_ = grid.rows, grid.cols
     nodata = layer.no_data if isinstance(layer.no_data, list) else (
         layer.dtype_obj.no_data
     )
+    fill = 0 if nodata is None else (
+        nodata[0] if isinstance(nodata, list) else nodata
+    )
+    dtype = layer.dtype_obj.data_type
     prefix = layer.prefix
     blockxsize = grid.blockxsize
     compression = layer.dtype_obj.compression or "NONE"
@@ -236,34 +242,10 @@ def write_tiles(
     # writer task — never a driver-side enumeration of the whole grid
     get_bounds = grid.get_tile_bounds
 
-    def writer(pdf: pd.DataFrame) -> pd.DataFrame:
-        tile_id = pdf["tile_id"].iloc[0]
-        pdf = pdf[pdf["bands"] != 0]  # drop empty-window (F8) markers
-
-        def status(text, path=None):
-            return pd.DataFrame(
-                [(tile_id, text, len(pdf), path)],
-                columns=["tile_id", "status", "n_windows", "out_path"],
-            )
-
-        if pdf.empty:
-            return status("skipped (has no data)")  # F9: nothing written
-        errors = pdf[pdf["bands"] < 0]
-        if len(errors):
-            # any failed window fails the tile; nothing is written (F10)
-            return status(f"failed - {errors['dtype'].iloc[0]}")
-        bands = int(pdf["bands"].iloc[0])
-        dtype = pdf["dtype"].iloc[0]
-        fill = 0 if nodata is None else (
-            nodata[0] if isinstance(nodata, list) else nodata
-        )
-        tile = np.full((bands, rows_, cols_), fill, dtype=dtype)
-        for r in pdf.itertuples(index=False):
-            arr = np.load(io.BytesIO(r.payload), allow_pickle=False)
-            tile[
-                :, r.row_off:r.row_off + r.height,
-                r.col_off:r.col_off + r.width,
-            ] = arr
+    def _encode_tile(tile_id: str, tile: np.ndarray) -> str:
+        """Write the tile as a COG with the profile of
+        ``gfw_pixetl/tiles/tile.py:54-97``, plus the optional copies and
+        sidecar; returns the COG path."""
         out_dir = os.path.join(work_dir, prefix, "geotiff")
         os.makedirs(out_dir, exist_ok=True)
         path = os.path.join(out_dir, f"{tile_id}.tif")
@@ -314,7 +296,58 @@ def write_tiles(
                 compute_histogram=compute_histogram,
             )
             write_stats_sidecar(path, md)
-        return status("processed", path)
+        return path
+
+    def write_tile(tile_id: str, windows) -> tuple:
+        tile, error, n = None, None, 0
+        for row_off, col_off, outcome, arr in windows:
+            if isinstance(outcome, str):
+                n += 1
+                error = error or outcome
+            elif outcome:
+                n += 1
+                if error is not None:
+                    continue  # the tile fails: no need to assemble it
+                if tile is None:
+                    tile = np.full((int(outcome), rows_, cols_), fill,
+                                   dtype=dtype)
+                tile[:, row_off:row_off + arr.shape[1],
+                     col_off:col_off + arr.shape[2]] = arr
+        if error is not None:
+            # per-tile error isolation: the reference's error→status
+            # routing (gfw_pixetl/pipes/pipe.py:150-162)
+            return (tile_id, f"failed - {error}", n, None)
+        if tile is None:
+            return (tile_id, "skipped (has no data)", 0, None)
+        return (tile_id, "processed", n, _encode_tile(tile_id, tile))
+
+    return write_tile
+
+
+def write_tiles(
+    payloads: DataFrame, layer: LayerModel, grid: Grid, work_dir: str
+) -> DataFrame:
+    """S8 sink over a window-payload frame (``WINDOW_PAYLOAD_SCHEMA``):
+    the vector pipe's sink, and the raster pipe's payload path
+    (:meth:`RasterPipe.transform_windows`). groupBy(tile_id) +
+    applyInPandas is the single-writer-per-tile invariant; the payloads
+    decode one at a time into the shared :func:`_tile_writer`.
+    Empty-window markers (``bands == 0``) and failed windows
+    (``bands < 0``, error text in ``dtype``) route as in the fused job.
+    """
+    write_tile = _tile_writer(layer, grid, work_dir)
+
+    def windows(pdf: pd.DataFrame):
+        for r in pdf.sort_values(["row_off", "col_off"]).itertuples(
+                index=False):
+            arr = None if r.bands <= 0 else np.load(
+                io.BytesIO(r.payload), allow_pickle=False)
+            yield (r.row_off, r.col_off,
+                   r.dtype if r.bands < 0 else r.bands, arr)
+
+    def writer(pdf: pd.DataFrame) -> pd.DataFrame:
+        row = write_tile(pdf["tile_id"].iloc[0], windows(pdf))
+        return pd.DataFrame([row], columns=STATUS_COLS)
 
     return payloads.groupBy("tile_id").applyInPandas(writer, STATUS_SCHEMA)
 
@@ -337,16 +370,14 @@ class RasterPipe:
     def grid_obj(self) -> Grid:
         return self.grid or self.layer.grid_obj
 
-    def transform_windows(self, windows: DataFrame) -> DataFrame:
-        """The fused per-window kernel: read -> calc -> cast+nodata fill,
-        exactly the reference's ``transform``
-        (``tiles/utils/transform.py:15-68``) as a mapInPandas stage.
-
-        Arrow moves each batch once; all math is NumPy over whole windows
-        (the reference's vectorization, preserved). An empty window (F8)
-        leaves as a marker row (``bands = 0``, null payload, no valid
-        pixels), so its pixels never shuffle but the writer sees the tile.
-        """
+    def _window_transform(self):
+        """Build ``_transform_window(row) -> (outcome, array, valid)``,
+        the one per-window kernel: read S4 -> empty check F8 -> calc C1 ->
+        cast + nodata fill C3, exactly the reference's ``transform``
+        (``tiles/utils/transform.py:15-68``), all NumPy over the whole
+        window. ``outcome`` is the band count, 0 for an empty window
+        (no array) or the error text of a window that raised;
+        ``valid`` counts its unmasked pixels."""
         layer = self.layer
         reader = self.reader
         grid = self.grid_obj
@@ -356,6 +387,67 @@ class RasterPipe:
         dtype = layer.dtype_obj
         nodata = layer.no_data if isinstance(layer.no_data, list) else dtype.no_data
         np_dtype = dtype.data_type
+
+        def _transform_window(r) -> tuple:
+            try:
+                left = r.tile_left + r.col_off * xres
+                top = r.tile_top - r.row_off * yres
+                bounds = (
+                    left, top - r.height * yres, left + r.width * xres, top,
+                )
+                arr = reader(list(r.uris), bounds, (r.height, r.width),
+                             band_count)
+                if not block_has_data(arr):
+                    return 0, None, 0
+                arr = apply_calc(arr, calc_expr, band_count)
+                valid = int((~np.ma.getmaskarray(arr)).sum())
+                filled = set_datatype(arr, nodata, np_dtype)
+            except Exception as e:  # noqa: BLE001
+                # a bad window marks its tile failed instead of killing
+                # the job (F10)
+                return f"{type(e).__name__}: {e}"[:200], None, 0
+            return filled.shape[0], filled, valid
+
+        return _transform_window
+
+    def tile_jobs(self, windows: DataFrame) -> DataFrame:
+        """The production tile stage: one group per tile reads, calcs
+        and casts each planned window (in ``(row_off, col_off)``
+        order) straight into the tile array, then encodes, profiles and
+        writes the tile — the reference's one worker per tile with
+        in-memory window merge (``pipes/raster_pipe.py:43-52``,
+        ``tiles/raster_src_tile.py:212-298``). Only window metadata
+        shuffles, hash-partitioned by tile to an explicit count (the
+        session's shuffle partitions): the group reuses that
+        partitioning with no second exchange, and AQE cannot coalesce
+        the metadata-sized exchange into one task that would run every
+        tile in turn."""
+        transform = self._window_transform()
+        write_tile = _tile_writer(self.layer, self.grid_obj, self.work_dir)
+
+        def tile_job(pdf: pd.DataFrame) -> pd.DataFrame:
+            pdf = pdf.sort_values(["row_off", "col_off"])
+            row = write_tile(pdf["tile_id"].iloc[0], (
+                (r.row_off, r.col_off, *transform(r)[:2])
+                for r in pdf.itertuples(index=False)
+            ))
+            return pd.DataFrame([row], columns=STATUS_COLS)
+
+        n = int(windows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        return (windows.repartition(n, "tile_id").groupBy("tile_id")
+                .applyInPandas(tile_job, STATUS_SCHEMA))
+
+    def transform_windows(self, windows: DataFrame) -> DataFrame:
+        """The window kernel alone, as a mapInPandas stage emitting the
+        window-payload frame (``WINDOW_PAYLOAD_SCHEMA``) that
+        :meth:`write_tiles` consumes: the payload adaptor over the same
+        ``_transform_window`` the tile jobs run, for taps that measure
+        the per-window volume. An empty window (F8) leaves as a marker
+        row (``bands = 0``, null payload, no valid pixels), a failed one
+        as ``bands = -1`` with its error text in ``dtype``.
+        """
+        transform = self._window_transform()
+        np_dtype = self.layer.dtype_obj.data_type
 
         # Arrow caps a single array at 2 GiB; a batch of window rows can
         # carry maxRecordsPerBatch * window_bytes of binary payload, so
@@ -373,44 +465,19 @@ class RasterPipe:
                     if out and out_bytes >= max_yield_bytes:
                         yield pd.DataFrame(out, columns=WINDOW_PAYLOAD_COLS)
                         out, out_bytes = [], 0
-                    try:
-                        left = r.tile_left + r.col_off * xres
-                        top = r.tile_top - r.row_off * yres
-                        bounds = (
-                            left, top - r.height * yres,
-                            left + r.width * xres, top,
-                        )
-                        arr = reader(
-                            list(r.uris), bounds, (r.height, r.width), band_count
-                        )
-                        if not block_has_data(arr):  # F8 marker row
-                            out.append((r.tile_id, r.row_off, r.col_off,
-                                        r.height, r.width, 0, np_dtype, 0, None))
-                            continue
-                        arr = apply_calc(arr, calc_expr, band_count)
-                        valid = int(
-                            (~np.ma.getmaskarray(arr)).sum()
-                        )
-                        filled = set_datatype(arr, nodata, np_dtype)
-                    except Exception as e:  # noqa: BLE001
-                        # per-tile error isolation (F10): a bad window marks
-                        # its tile failed instead of killing the job —
-                        # the reference's error→status routing
-                        # (gfw_pixetl/pipes/pipe.py:150-162)
-                        out.append((
-                            r.tile_id, r.row_off, r.col_off,
-                            r.height, r.width, -1,
-                            f"{type(e).__name__}: {e}"[:200], 0, None,
-                        ))
+                    outcome, filled, valid = transform(r)
+                    head = (r.tile_id, r.row_off, r.col_off, r.height, r.width)
+                    if isinstance(outcome, str):
+                        out.append((*head, -1, outcome, 0, None))
+                        continue
+                    if not outcome:
+                        out.append((*head, 0, np_dtype, 0, None))
                         continue
                     buf = io.BytesIO()
                     np.save(buf, filled, allow_pickle=False)
                     payload = buf.getvalue()
                     out_bytes += len(payload)
-                    out.append((
-                        r.tile_id, r.row_off, r.col_off, r.height, r.width,
-                        filled.shape[0], np_dtype, valid, payload,
-                    ))
+                    out.append((*head, outcome, np_dtype, valid, payload))
                 yield pd.DataFrame(out, columns=WINDOW_PAYLOAD_COLS)
 
         return windows.mapInPandas(window_kernel, WINDOW_PAYLOAD_SCHEMA)
@@ -429,7 +496,7 @@ class RasterPipe:
         """Full pipeline; returns the per-tile status DataFrame (F10).
 
         Statuses mirror ``pipes/pipe.py:137-162``: processed / skipped
-        (has no data) / failed, all decided by the tile writer. Tiles
+        (has no data) / failed, all decided by the tile job. Tiles
         outside ``subset`` and ``existing`` tiles are filtered out before
         any work and get no status row. ``existing`` takes a tile_id
         DataFrame directly (e.g. ``object_store.existing_tiles``);
@@ -446,7 +513,7 @@ class RasterPipe:
         windows = plan_windows(
             tile_files(select_tiles(tiles, subset, existing), catalog),
             grid, self.blocks_per_window)
-        return self.write_tiles(self.transform_windows(windows))
+        return self.tile_jobs(windows)
 
     def publish(
         self,
@@ -466,55 +533,55 @@ class RasterPipe:
         double-counting tiles."""
         from ..sources.object_store import upload_exactly_once
 
-        man = manifest(statuses, seed_tiles(spark, self.grid_obj))
+        man = manifest(statuses, self.grid_obj)
         return upload_exactly_once(
             statuses, man, cfg, bucket, prefix, job_id=job_id)
 
 
-def manifest(statuses: DataFrame, tiles: DataFrame) -> dict:
+def manifest(statuses: DataFrame, grid: Grid) -> dict:
     """S10: tiles.geojson + extent.geojson from the processed tile set.
 
-    The per-tile feature list is a collect of the (small) status table;
-    the extent is a bounds union computed as a Spark aggregation. With
-    rectangular grid tiles the exact union is the feature collection
-    itself; extent.geojson carries the enclosing bounds (the reference
-    unions polygons with shapely — identical for rect tile sets' bboxes).
+    One collect of the (small) processed status rows, features in
+    tile_id order; each feature's polygon and the extent come from the
+    grid's closed-form tile bounds (C5), so no tile grid is seeded or
+    joined. With rectangular grid
+    tiles the exact union is the feature collection itself;
+    extent.geojson carries the enclosing bounds (the reference unions
+    polygons with shapely — identical for rect tile sets' bboxes).
     """
-    joined = statuses.filter(F.col("status") == "processed").join(
-        tiles, "tile_id"
-    )
-    ext = joined.agg(
-        F.min("tile_left").alias("l"), F.min("tile_bottom").alias("b"),
-        F.max("tile_right").alias("r"), F.max("tile_top").alias("t"),
-    ).collect()[0]
-    feats = [
-        {
+    rows = statuses.filter(F.col("status") == "processed").select(
+        "tile_id", "out_path").collect()
+    feats, boxes = [], []
+    for r in sorted(rows):
+        b = grid.get_tile_bounds(r.tile_id)
+        boxes.append(b)
+        feats.append({
             "type": "Feature",
             "geometry": {
                 "type": "Polygon",
                 "coordinates": [[
-                    [r.tile_left, r.tile_bottom], [r.tile_right, r.tile_bottom],
-                    [r.tile_right, r.tile_top], [r.tile_left, r.tile_top],
-                    [r.tile_left, r.tile_bottom],
+                    [b.left, b.bottom], [b.right, b.bottom],
+                    [b.right, b.top], [b.left, b.top], [b.left, b.bottom],
                 ]],
             },
             "properties": {"name": r.out_path, "tile_id": r.tile_id},
-        }
-        for r in joined.select(
-            "tile_id", "out_path", "tile_left", "tile_bottom",
-            "tile_right", "tile_top",
-        ).collect()
-    ]
+        })
     tiles_geojson = {"type": "FeatureCollection", "features": feats}
+    if not boxes:
+        return {"tiles": tiles_geojson, "extent": None}
+    left = min(b.left for b in boxes)
+    bottom = min(b.bottom for b in boxes)
+    right = max(b.right for b in boxes)
+    top = max(b.top for b in boxes)
     extent_geojson = {
         "type": "Feature",
         "geometry": {
             "type": "Polygon",
             "coordinates": [[
-                [ext.l, ext.b], [ext.r, ext.b], [ext.r, ext.t],
-                [ext.l, ext.t], [ext.l, ext.b],
+                [left, bottom], [right, bottom], [right, top],
+                [left, top], [left, bottom],
             ]],
         },
         "properties": {},
-    } if feats else None
+    }
     return {"tiles": tiles_geojson, "extent": extent_geojson}

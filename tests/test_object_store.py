@@ -96,8 +96,7 @@ def test_upload_tiles_and_manifest(spark, tmp_path, s3cfg):
     assert status2.count() == 0
 
     # manifest puts (S10) — only on all-success, enforced by caller
-    tiles_df = rp.seed_tiles(spark, grid)
-    man = rp.manifest(status, tiles_df)
+    man = rp.manifest(status, grid)
     written = upload_geojsons(man, s3cfg, BUCKET, prefix)
     assert sorted(written) == [
         f"{prefix}/extent.geojson", f"{prefix}/tiles.geojson",

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -43,34 +44,42 @@ def test_tile_status_frame_has_one_sink(spark):
 
 
 def test_sink_twice_rule_fires_on_two_writers():
+    """The fused tile job and the payload writer are both tile sinks:
+    any two of them fire, one next to another grouped UDF does not."""
     node = ("({n}) FlatMapGroupsInPandas\n"
             "Input [2]: [tile_id#1, payload#2]\n"
             "Arguments: [tile_id#1], {udf}(tile_id#1, payload#2)#3, "
             "[tile_id#4, status#5]")
-    one = "\n\n".join([node.format(n=5, udf="writer"),
-                       node.format(n=9, udf="merge")])
-    two = "\n\n".join([node.format(n=5, udf="writer"),
-                       node.format(n=9, udf="writer")])
-    assert "SINK_TWICE" not in lint_plan("x", one)
-    assert "SINK_TWICE" in lint_plan("x", two)
+
+    def flags(*udfs):
+        plan = "\n\n".join(node.format(n=5 + 4 * i, udf=u)
+                            for i, u in enumerate(udfs))
+        return lint_plan("x", plan)
+
+    assert "SINK_TWICE" not in flags("writer", "merge")
+    assert "SINK_TWICE" not in flags("tile_job", "merge")
+    assert "SINK_TWICE" in flags("writer", "writer")
+    assert "SINK_TWICE" in flags("tile_job", "tile_job")
+    assert "SINK_TWICE" in flags("tile_job", "writer")
 
 
 def test_tile_status_frame_plans_without_python(spark):
     """Tile seeding and the file catalog run in the JVM: nothing under
-    the window kernel of the tile status frame starts a Python worker."""
+    the fused tile job of the status frame starts a Python worker."""
     from gfw_pixetl_spark.harness.tileops import q71_statuses
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         q71_statuses(spark).explain("formatted")
     plan = buf.getvalue()
-    assert "Arguments: window_kernel(" in plan
+    assert re.search(r"^Arguments: \[[^\]]*\], tile_job\(", plan, re.M)
     assert "PY_PLANNING" not in lint_plan("q71_raster_tile_job:statuses", plan)
 
 
 def test_py_planning_rule_fires_below_the_kernel():
     """The status-frame shape before planning moved into the JVM: a
-    Python tile seed and an RDD-scanned catalog under the kernel."""
+    Python tile seed and an RDD-scanned catalog under the payload path's
+    window kernel."""
     tree = """== Physical Plan ==
 AdaptiveSparkPlan (12)
 +- FlatMapGroupsInPandas (11)
@@ -99,3 +108,34 @@ AdaptiveSparkPlan (12)
     assert "Scan ExistingRDD" in flags("Project (2)", "Scan ExistingRDD (5)")
     # the writer above the kernel is not planning
     assert flags("Project (2)", "LocalTableScan (5)") == ""
+
+
+def test_py_planning_rule_fires_below_the_tile_job():
+    """The fused tile job is the first Python stage of the production
+    status frame: a Python node or an RDD scan under it fires."""
+    tree = """== Physical Plan ==
+AdaptiveSparkPlan (11)
++- FlatMapGroupsInPandas (10)
+   +- Sort (9)
+      +- Generate (8)
+         +- ObjectHashAggregate (7)
+            +- Exchange (6)
+               +- BroadcastNestedLoopJoin Inner BuildRight (5)
+                  :- {seed}
+                  :  +- Range (1)
+                  +- BroadcastExchange (4)
+                     +- {catalog}
+"""
+    job = ("(10) FlatMapGroupsInPandas\nInput [2]: [tile_id#2, uris#26]\n"
+           "Arguments: [tile_id#2], tile_job(tile_id#2, uris#26)#27, "
+           "[tile_id#28, status#29]")
+
+    def flags(seed, catalog):
+        plan = "\n\n".join([tree.format(seed=seed, catalog=catalog), job])
+        return lint_plan("x", plan).get("PY_PLANNING", "")
+
+    assert "MapInPandas" in flags("MapInPandas (2)", "LocalTableScan (3)")
+    assert "ArrowEvalPython" in flags("ArrowEvalPython (2)",
+                                      "LocalTableScan (3)")
+    assert "Scan ExistingRDD" in flags("Project (2)", "Scan ExistingRDD (3)")
+    assert flags("Project (2)", "LocalTableScan (3)") == ""

@@ -163,8 +163,7 @@ def test_manifest(spark, tmp_path):
     files = [{"uri": "m://a", "band": 1,
               "left": 0.0, "bottom": -10.0, "right": 10.0, "top": 10.0}]
     status = pipe.run(spark, files, subset=["00N_000E", "10N_000E"])
-    tiles = rp.seed_tiles(spark, grid)
-    m = rp.manifest(status, tiles)
+    m = rp.manifest(status, grid)
     assert len(m["tiles"]["features"]) == 2
     ext = m["extent"]["geometry"]["coordinates"][0]
     xs = [p[0] for p in ext]
@@ -310,7 +309,7 @@ def test_failed_tile_counts_data_and_error_windows(spark, tmp_path):
 
 def test_each_window_read_once_and_one_writer(spark, tmp_path):
     """The status frame is one linear plan: the reader runs once per
-    planned window, and the executed plan holds a single tile writer."""
+    planned window, and the executed plan holds a single tile job."""
     grid = LatLngGrid(10, 544)
     spans = tmp_path / "spans"
     spans.mkdir()
@@ -330,8 +329,9 @@ def test_each_window_read_once_and_one_writer(spark, tmp_path):
 
 def test_window_kernel_is_the_first_python_stage(spark, tmp_path):
     """Tile seeding and the file catalog plan without Python workers:
-    the executed plan of a non-empty layer holds exactly the kernel and
-    the writer as Python nodes, and no RDD scan."""
+    the executed plan of a non-empty layer holds exactly one Python
+    node, the fused tile job that runs the window kernel inside the tile
+    writer, and no RDD scan."""
     grid = LatLngGrid(10, 160)
     pipe = make_pipe(tmp_path, grid)
     files = [{"uri": "m://a", "band": 1,
@@ -340,6 +340,103 @@ def test_window_kernel_is_the_first_python_stage(spark, tmp_path):
     assert len(status.collect()) == 2
     plan = status._jdf.queryExecution().executedPlan().executedPlan()
     plan = plan.toString()  # the final plan of the adaptive query
-    assert len(re.findall(r"\bMapInPandas\b", plan)) == 1
-    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert re.findall(r"\w*(?:Python|InPandas|InArrow)\w*", plan) == [
+        "FlatMapGroupsInPandas"]
+    assert "tile_job(" in plan
     assert "Scan ExistingRDD" not in plan
+
+
+def _planned_windows(spark, pipe, files, existing_tile_ids=None):
+    """The windows ``RasterPipe.run`` plans, for driving the payload path
+    (``transform_windows`` -> ``write_tiles``) over the same input."""
+    from pyspark.sql import functions as F
+
+    existing = None
+    if existing_tile_ids:
+        existing = spark.createDataFrame(
+            [(t,) for t in existing_tile_ids], "tile_id string")
+    tiles = rp.select_tiles(rp.seed_tiles(spark, pipe.grid_obj),
+                            existing=existing)
+    windows = rp.plan_windows(
+        rp.tile_files(tiles, rp.file_catalog(spark, files)), pipe.grid_obj)
+    # reverse window order, so a writer that kept arrival order would
+    # see the bottom-right window of each tile first
+    return windows.orderBy(F.desc("row_off"), F.desc("col_off"))
+
+
+@dataclass
+class TwoFailReader(SyntheticReader):
+    """Fails the top-left and the bottom-right 5-degree window of tile
+    10N_010W with different messages."""
+
+    def __call__(self, uris, bounds, shape, band_count):
+        left, _, _, top = bounds
+        if np.allclose((left, top), (-10.0, 10.0)):
+            raise IOError("top-left window")
+        if np.allclose((left, top), (-5.0, 5.0)):
+            raise ValueError("bottom-right window")
+        return super().__call__(uris, bounds, shape, band_count)
+
+
+def test_failed_tile_reports_first_window_in_order(spark, tmp_path):
+    """F10 names the failing window that comes first in (row_off,
+    col_off) order, on the fused path and on the payload path, whatever
+    order the windows arrive in."""
+    grid = LatLngGrid(10, 544)  # 2x2 windows of 272 px = 5 degrees
+    pipe = make_pipe(tmp_path, grid)
+    pipe.reader = TwoFailReader(xres=grid.xres, yres=grid.yres)
+    files = [{"uri": "m://a", "band": 1,
+              "left": -10.0, "bottom": 0.0, "right": 0.0, "top": 10.0}]
+    want = "failed - OSError: top-left window"
+    [row] = pipe.run(spark, files).collect()
+    assert (row.status, row.n_windows) == (want, 4)
+    windows = _planned_windows(spark, pipe, files)
+    [row] = pipe.tile_jobs(windows).collect()
+    assert (row.status, row.n_windows) == (want, 4)
+    [row] = pipe.write_tiles(pipe.transform_windows(windows)).collect()
+    assert (row.status, row.n_windows) == (want, 4)
+
+
+def test_fused_and_payload_paths_are_byte_identical(spark, tmp_path):
+    """``pipe.run`` (the fused tile job) and the payload path
+    ``write_tiles(transform_windows(windows))`` agree bit for bit on a
+    layer with processed, skipped, failed and existing tiles: every COG,
+    every .aux.xml sidecar and every status row."""
+    grid = LatLngGrid(10, 544)
+    files = [{"uri": "m://a", "band": 1,
+              "left": -20.0, "bottom": 0.0, "right": 20.0, "top": 10.0}]
+    existing = ["10N_010E"]
+    out = {}
+    for path in ("fused", "payload"):
+        pipe = make_pipe(tmp_path / path, grid, compute_stats=True,
+                         compute_histogram=True)
+        # 10N_020W reads only masked pixels (skipped) and 10N_010W fails
+        # one window
+        pipe.reader = ProbeReader(xres=grid.xres, yres=grid.yres,
+                                  empty_west_of=-10.0,
+                                  fail_at=(-5.0, 5.0))
+        if path == "fused":
+            status = pipe.run(spark, files, existing_tile_ids=existing)
+        else:
+            status = pipe.write_tiles(pipe.transform_windows(
+                _planned_windows(spark, pipe, files,
+                                 existing_tile_ids=existing)))
+        rows = sorted(
+            (r.tile_id, r.status, r.n_windows,
+             r.out_path and os.path.relpath(r.out_path, tmp_path / path))
+            for r in status.collect())
+        files_out = {
+            os.path.relpath(os.path.join(d, f), tmp_path / path):
+                open(os.path.join(d, f), "rb").read()
+            for d, _, names in os.walk(tmp_path / path) for f in names
+        }
+        out[path] = rows, files_out
+    rows, written = out["fused"]
+    assert [r[:2] for r in rows] == [
+        ("10N_000E", "processed"),
+        ("10N_010W", "failed - OSError: synthetic read failure"),
+        ("10N_020W", "skipped (has no data)"),
+    ]
+    assert sorted(os.path.basename(p) for p in written) == [
+        "10N_000E.tif", "10N_000E.tif.aux.xml"]
+    assert out["payload"] == out["fused"]

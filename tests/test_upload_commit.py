@@ -51,8 +51,7 @@ def job(spark, tmp_path_factory):
     ]
     status = pipe.run(spark, files, subset=["00N_000E", "10N_000E"])
     status.cache().count()
-    tiles_df = rp.seed_tiles(spark, grid)
-    man = rp.manifest(status, tiles_df)
+    man = rp.manifest(status, grid)
     return pipe, status, man
 
 

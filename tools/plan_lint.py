@@ -11,13 +11,16 @@ a documented design decision, not a silence):
 * SINGLE_PART — `Exchange SinglePartition` feeding real work: a global
                 window/sort funneling fact-scale rows through one task.
                 Legitimate on dimension-sized inputs only.
-* SINK_TWICE  — the tile-writer UDF (`writer`) in more than one
-                `FlatMapGroupsInPandas` node: a second copy of the sink
-                encodes, profiles and writes every tile again.
+* SINK_TWICE  — more than one `FlatMapGroupsInPandas` node running a
+                tile sink: the fused raster tile job (`tile_job`) or the
+                payload writer (`writer`), counted together. A second
+                sink encodes, profiles and writes every tile again.
 * PY_PLANNING — a Python-evaluated node or a `Scan ExistingRDD` leaf
-                beneath the raster window kernel (`window_kernel`): tile
-                seeding and the file catalog are metadata, and each
-                Python stage costs ~0.2-0.3 s before it does any work.
+                beneath the first raster Python stage: the fused tile job
+                (`tile_job`) or the payload path's window kernel
+                (`window_kernel`). Tile seeding and the file catalog are
+                metadata, and each Python stage costs ~0.2-0.3 s before
+                it does any work.
 
 Besides every registered query, the sweep lints the raster tile job's
 unfiltered status frame: q71 keeps only processed tiles, and that filter
@@ -165,15 +168,27 @@ def _single_partition_consumers(plan: str) -> list[str]:
     return consumers
 
 
-def _python_below_window_kernel(plan: str) -> list[str]:
+def _udf_nodes(plan: str, op: str, udfs: tuple[str, ...]) -> set[str]:
+    """Node ids of the ``op`` nodes whose Arguments run one of ``udfs``
+    (a grouped node's Arguments open with its grouping keys)."""
+    names = "|".join(udfs)
+    return {
+        m.group(1) for block in plan.split("\n\n")
+        if (m := re.match(rf"\((\d+)\) {op}\b", block.strip()))
+        and re.search(rf"^Arguments: (\[[^\]]*\], )?({names})\(",
+                      block, re.M)
+    }
+
+
+def _python_below_first_stage(plan: str) -> list[str]:
     """Python-evaluated operators and RDD scans (``Scan ExistingRDD``,
     whose rows a Python task produces) in the subtree under the raster
-    pipe's window kernel (the ``MapInPandas`` running ``window_kernel``)."""
-    kernel_ids = {
-        m.group(1) for block in plan.split("\n\n")
-        if (m := re.match(r"\((\d+)\) MapInPandas\b", block.strip()))
-        and re.search(r"^Arguments: window_kernel\(", block, re.M)
-    }
+    pipe's first Python stage: the ``FlatMapGroupsInPandas`` running
+    ``tile_job``, or the ``MapInPandas`` running ``window_kernel``."""
+    kernel_ids = (
+        _udf_nodes(plan, "FlatMapGroupsInPandas", ("tile_job",))
+        | _udf_nodes(plan, "MapInPandas", ("window_kernel",))
+    )
     found = []
     nodes = _tree_nodes(plan)
     for i, (indent, _op, nid) in enumerate(nodes):
@@ -207,19 +222,16 @@ def lint_plan(name: str, plan: str) -> dict[str, str]:
         flags["SINGLE_PART"] = (
             f"single-partition exchange consumed by {sorted(set(bad))}"
         )
-    writers = sum(
-        1 for block in plan.split("\n\n")
-        if re.match(r"\(\d+\) FlatMapGroupsInPandas\b", block.strip())
-        and re.search(r"^Arguments: \[[^\]]*\], writer\(", block, re.M)
-    )
+    writers = len(_udf_nodes(plan, "FlatMapGroupsInPandas",
+                             ("writer", "tile_job")))
     if writers > 1:
         flags["SINK_TWICE"] = (
-            f"tile writer in {writers} FlatMapGroupsInPandas nodes"
+            f"tile sink in {writers} FlatMapGroupsInPandas nodes"
         )
-    planning = _python_below_window_kernel(plan)
+    planning = _python_below_first_stage(plan)
     if planning:
         flags["PY_PLANNING"] = (
-            f"{sorted(set(planning))} beneath the window kernel"
+            f"{sorted(set(planning))} beneath the first Python stage"
         )
     return flags
 
