@@ -31,23 +31,9 @@ Arrow kernel; the per-path histogram is a plain groupBy.
 """
 from __future__ import annotations
 
+from ..sources.bitio import read_uvarint
+
 VARINT, FIXED64, LEN, SGROUP, EGROUP, FIXED32 = 0, 1, 2, 3, 4, 5
-
-
-def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
-    result = 0
-    shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("proto: truncated varint")
-        b = data[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result, pos
-        shift += 7
-        if shift > 63:
-            raise ValueError("proto: varint longer than 64 bits")
 
 
 def walk_fields(data: bytes):
@@ -58,20 +44,20 @@ def walk_fields(data: bytes):
     pos = 0
     n = len(data)
     while pos < n:
-        tag, pos = _read_varint(data, pos)
+        tag, pos = read_uvarint(data, pos, "proto")
         field = tag >> 3
         wire = tag & 7
         if field == 0:
             raise ValueError("proto: field number 0 is reserved")
         if wire == VARINT:
-            value, pos = _read_varint(data, pos)
+            value, pos = read_uvarint(data, pos, "proto")
         elif wire == FIXED64:
             if pos + 8 > n:
                 raise ValueError("proto: truncated fixed64")
             value = int.from_bytes(data[pos:pos + 8], "little")
             pos += 8
         elif wire == LEN:
-            size, pos = _read_varint(data, pos)
+            size, pos = read_uvarint(data, pos, "proto")
             if pos + size > n:
                 raise ValueError("proto: truncated length-delimited "
                                  "field")

@@ -30,6 +30,8 @@ import json
 import struct
 import zlib
 
+from .bitio import read_uvarint, unzigzag, write_uvarint, zigzag
+
 MAGIC = b"Obj\x01"
 
 
@@ -40,31 +42,12 @@ MAGIC = b"Obj\x01"
 
 def write_long(out: bytearray, n: int) -> None:
     """Zigzag + varint (spec: int and long share this encoding)."""
-    z = (n << 1) ^ (n >> 63)  # python ints: exact for the 64-bit range
-    while True:
-        b = z & 0x7F
-        z >>= 7
-        if z:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
+    write_uvarint(out, zigzag(n))
 
 
 def read_long(data: bytes, pos: int) -> tuple[int, int]:
-    result = 0
-    shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("avro: truncated varint")
-        b = data[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return (result >> 1) ^ -(result & 1), pos
-        shift += 7
-        if shift > 69:
-            raise ValueError("avro: varint too long")
+    u, pos = read_uvarint(data, pos, "avro")
+    return unzigzag(u), pos
 
 
 def _write_bytes(out: bytearray, b: bytes) -> None:

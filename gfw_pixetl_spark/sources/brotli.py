@@ -57,6 +57,8 @@ import struct
 import zlib
 from pathlib import Path
 
+from .bitio import LsbReader, LsbWriter
+
 # --------------------------------------------------------------------------
 # static data (RFC 7932 Appendices A/B + section 7.1), frozen by
 # tools/extract_brotli_data.py
@@ -135,53 +137,6 @@ _REPEAT_PREVIOUS = 16
 _REPEAT_ZERO = 17
 
 # --------------------------------------------------------------------------
-# bitstream: LSB-first, forward (RFC 7932 section 3.1)
-# --------------------------------------------------------------------------
-
-
-class _Bits:
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-
-    def read(self, n: int) -> int:
-        pos = self.pos
-        end = pos + n
-        if end > len(self.data) * 8:
-            raise ValueError("brotli: truncated stream")
-        first = pos >> 3
-        last = (end - 1) >> 3
-        chunk = int.from_bytes(self.data[first:last + 1], "little")
-        self.pos = end
-        return (chunk >> (pos & 7)) & ((1 << n) - 1)
-
-    def read_bit(self) -> int:
-        pos = self.pos
-        if pos >= len(self.data) * 8:
-            raise ValueError("brotli: truncated stream")
-        self.pos = pos + 1
-        return (self.data[pos >> 3] >> (pos & 7)) & 1
-
-    def align(self) -> None:
-        rem = self.pos & 7
-        if rem:
-            pad = self.read(8 - rem)
-            if pad:
-                raise ValueError("brotli: non-zero padding bits")
-
-    def take_bytes(self, n: int) -> bytes:
-        if self.pos & 7:
-            raise ValueError("brotli: unaligned byte copy")
-        start = self.pos >> 3
-        if start + n > len(self.data):
-            raise ValueError("brotli: truncated stream")
-        self.pos += n * 8
-        return self.data[start:start + n]
-
-
-# --------------------------------------------------------------------------
 # prefix codes (RFC 7932 sections 3.2-3.5).  Codes are canonical; bits
 # are read MSB-of-code first (code = code<<1 | next_bit), as in DEFLATE.
 # --------------------------------------------------------------------------
@@ -210,7 +165,7 @@ class _PrefixCode:
                 code += 1
             code <<= 1
 
-    def decode(self, bits: _Bits) -> int:
+    def decode(self, bits: LsbReader) -> int:
         if self.single is not None:
             return self.single
         code = 0
@@ -234,7 +189,7 @@ def _alphabet_bits(alphabet_size: int) -> int:
     return max(1, (alphabet_size - 1).bit_length())
 
 
-def _read_prefix_code(bits: _Bits, alphabet_size: int) -> _PrefixCode:
+def _read_prefix_code(bits: LsbReader, alphabet_size: int) -> _PrefixCode:
     hskip = bits.read(2)
     if hskip == 1:  # simple code
         nsym = bits.read(2) + 1
@@ -324,7 +279,7 @@ def _read_prefix_code(bits: _Bits, alphabet_size: int) -> _PrefixCode:
 # --------------------------------------------------------------------------
 
 
-def _read_256(bits: _Bits) -> int:
+def _read_256(bits: LsbReader) -> int:
     if bits.read_bit() == 0:
         return 1
     n = bits.read(3)
@@ -348,7 +303,7 @@ def _inverse_mtf(values: list[int]) -> None:
             mtf.insert(0, val)
 
 
-def _read_context_map(bits: _Bits, n_trees: int, size: int) -> list[int]:
+def _read_context_map(bits: LsbReader, n_trees: int, size: int) -> list[int]:
     if n_trees == 1:
         return [0] * size
     rlemax = (bits.read(4) + 1) if bits.read_bit() else 0
@@ -384,7 +339,7 @@ class _BlockState:
     __slots__ = ("n_types", "btype", "prev", "count",
                  "type_code", "count_code")
 
-    def __init__(self, bits: _Bits) -> None:
+    def __init__(self, bits: LsbReader) -> None:
         self.n_types = _read_256(bits)
         self.btype = 0
         self.prev = 1
@@ -396,11 +351,11 @@ class _BlockState:
             self.type_code = self.count_code = None
             self.count = 1 << 62
 
-    def _read_count(self, bits: _Bits) -> int:
+    def _read_count(self, bits: LsbReader) -> int:
         sym = self.count_code.decode(bits)
         return _BLOCK_COUNT_BASE[sym] + bits.read(_BLOCK_COUNT_EXTRA[sym])
 
-    def maybe_switch(self, bits: _Bits) -> None:
+    def maybe_switch(self, bits: LsbReader) -> None:
         if self.count == 0:
             sym = self.type_code.decode(bits)
             if sym == 0:
@@ -466,7 +421,7 @@ def _transform_word(word: bytes, transform_id: int) -> bytes:
 # --------------------------------------------------------------------------
 
 
-def _read_wbits(bits: _Bits) -> int:
+def _read_wbits(bits: LsbReader) -> int:
     if bits.read_bit() == 0:
         return 16
     n = bits.read(3)
@@ -483,7 +438,7 @@ def _read_wbits(bits: _Bits) -> int:
 def decompress(data: bytes, max_output: int | None = None) -> bytes:
     """Decode one complete brotli stream (RFC 7932 section 10)."""
     size_bits, dict_data, ctx_lut, _ = _static_data()
-    bits = _Bits(data)
+    bits = LsbReader(data, "brotli")
     wbits = _read_wbits(bits)
     window_size = (1 << wbits) - 16
     out = bytearray()
@@ -513,7 +468,8 @@ def decompress(data: bytes, max_output: int | None = None) -> bytes:
                 skip_len |= b << (8 * i)
             if skip_bytes:
                 skip_len += 1
-            bits.align()
+            if bits.align():
+                raise ValueError("brotli: non-zero padding bits")
             bits.take_bytes(skip_len)
             continue
         nibbles = 4 + mnib
@@ -525,7 +481,8 @@ def decompress(data: bytes, max_output: int | None = None) -> bytes:
             raise ValueError("brotli: output exceeds declared size")
 
         if not islast and bits.read_bit():  # ISUNCOMPRESSED
-            bits.align()
+            if bits.align():
+                raise ValueError("brotli: non-zero padding bits")
             out += bits.take_bytes(mlen)
             continue
 
@@ -658,8 +615,9 @@ def decompress(data: bytes, max_output: int | None = None) -> bytes:
         if islast:
             break
 
-    bits.align()
-    if bits.pos != len(data) * 8:
+    if bits.align():
+        raise ValueError("brotli: non-zero padding bits")
+    if bits.pos != bits.end:
         raise ValueError("brotli: trailing garbage after final meta-block")
     if max_output is not None and len(out) != max_output:
         raise ValueError("brotli: output size mismatch")
@@ -671,49 +629,12 @@ def decompress(data: bytes, max_output: int | None = None) -> bytes:
 # --------------------------------------------------------------------------
 
 
-class _BitWriter:
-    __slots__ = ("buf", "acc", "n")
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        self.acc |= value << self.n
-        self.n += nbits
-        while self.n >= 8:
-            self.buf.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.n -= 8
-
-    def write_code(self, code: int, length: int) -> None:
-        """Emit a prefix-code word: bits go out MSB-of-code first,
-        matching the decoder's ``code = code<<1 | next_bit`` walk."""
-        for i in range(length - 1, -1, -1):
-            self.write((code >> i) & 1, 1)
-
-    def align(self) -> None:
-        if self.n:
-            self.buf.append(self.acc & 0xFF)
-            self.acc = 0
-            self.n = 0
-
-    def raw(self, data: bytes) -> None:
-        assert self.n == 0
-        self.buf += data
-
-    def getvalue(self) -> bytes:
-        self.align()
-        return bytes(self.buf)
-
-
-def _stream_header(wbits: int) -> _BitWriter:
+def _stream_header(wbits: int) -> LsbWriter:
     """A writer primed with the WBITS stream header (section 9.1) —
     shared by the store-mode and entropy-coded encoders."""
     if not 10 <= wbits <= 24:
         raise ValueError("brotli: WBITS must be in 10..24")
-    w = _BitWriter()
+    w = LsbWriter()
     if wbits == 16:
         w.write(0, 1)
     elif wbits >= 18:
@@ -843,7 +764,7 @@ _CLC_WRITE = {0: (0b00, 2), 3: (0b01, 2), 4: (0b10, 2),
               2: (0b110, 3), 1: (0b1110, 4), 5: (0b1111, 4)}
 
 
-def _write_prefix_code(w: _BitWriter, counts: dict[int, int],
+def _write_prefix_code(w: LsbWriter, counts: dict[int, int],
                        alphabet_size: int) -> dict[int, tuple[int, int]]:
     """Write one prefix-code header (simple or complex form) for the
     observed symbol ``counts``; returns symbol -> (code, len) for the
@@ -1079,7 +1000,7 @@ def _encode_meta_block(chunk: bytes,
                         lits, dinfo))
         pos += ins + cpy
 
-    w = _BitWriter()
+    w = LsbWriter()
     # block types: 1 literal, 1 insert-copy, 1 distance
     for _ in range(3):
         w.write(0, 1)                       # NBLTYPES = 1
@@ -1111,5 +1032,4 @@ def _encode_meta_block(chunk: bytes,
     total_bits = len(w.buf) * 8 + w.n
     if total_bits >= len(chunk) * 8:
         return None
-    tail = bytes([w.acc & 0xFF]) if w.n else b""
-    return bytes(w.buf) + tail, total_bits
+    return w.getvalue(), total_bits

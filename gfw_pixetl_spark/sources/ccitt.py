@@ -32,6 +32,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .bitio import MsbReader, MsbWriter
+
 # --- T.4 §4.1 run-length code tables: run -> (code_value, bit_length) ---
 _WHITE_CODES = {
     0: (0b00110101, 8), 1: (0b000111, 6), 2: (0b0111, 4), 3: (0b1000, 4),
@@ -134,51 +136,29 @@ _MODE_V = {0: (0b1, 1), 1: (0b011, 3), 2: (0b000011, 6),
            3: (0b0000011, 7), -1: (0b010, 3), -2: (0b000010, 6),
            -3: (0b0000010, 7)}
 
-# decoder lookups: (bit_length, code) -> value
-_WHITE_DEC = {(n, c): run for run, (c, n) in _WHITE_CODES.items()}
-_BLACK_DEC = {(n, c): run for run, (c, n) in _BLACK_CODES.items()}
-_MODE_DEC = {(n, c): ("v", d) for d, (c, n) in _MODE_V.items()}
-_MODE_DEC[(4, 0b0001)] = ("pass", 0)
-_MODE_DEC[(3, 0b001)] = ("h", 0)
+# decoder lookups: code with a 1 bit above it ((1 << length) | code),
+# which keys every (length, code) pair apart -> value
+_WHITE_DEC = {(1 << n) | c: run for run, (c, n) in _WHITE_CODES.items()}
+_BLACK_DEC = {(1 << n) | c: run for run, (c, n) in _BLACK_CODES.items()}
+_MODE_DEC = {(1 << n) | c: ("v", d) for d, (c, n) in _MODE_V.items()}
+_MODE_DEC[(1 << 4) | 0b0001] = ("pass", 0)
+_MODE_DEC[(1 << 3) | 0b001] = ("h", 0)
 # EOFB prefix: 000000000001 (the V-code space never reaches 12 zeros)
-_MODE_DEC[(12, 0b000000000001)] = ("eol", 0)
+_MODE_DEC[(1 << 12) | 0b000000000001] = ("eol", 0)
 
 
-class _Bits:
-    """MSB-first bit writer."""
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | code
-        self.n += length
-        while self.n >= 8:
-            self.n -= 8
-            self.buf.append((self.acc >> self.n) & 0xFF)
-        self.acc &= (1 << self.n) - 1
-
-    def done(self) -> bytes:
-        if self.n:
-            self.buf.append((self.acc << (8 - self.n)) & 0xFF)
-            self.n = 0
-        return bytes(self.buf)
-
-
-def _put_run(bits: _Bits, run: int, table) -> None:
+def _put_run(bits: MsbWriter, run: int, table) -> None:
     while run >= 2624:  # chain max make-ups for very wide runs
         code, n = table[2560]
-        bits.put(code, n)
+        bits.write(code, n)
         run -= 2560
     if run >= 64:
         makeup = (run // 64) * 64
         code, n = table[makeup]
-        bits.put(code, n)
+        bits.write(code, n)
         run -= makeup
     code, n = table[run]
-    bits.put(code, n)
+    bits.write(code, n)
 
 
 def _changes(row: np.ndarray) -> list[int]:
@@ -191,7 +171,7 @@ def _changes(row: np.ndarray) -> list[int]:
 def g4_encode(black: np.ndarray) -> bytes:
     """Encode a (h, w) boolean matrix (True = black) as a T.6 stream."""
     h, w = black.shape
-    bits = _Bits()
+    bits = MsbWriter()
     ref: list[int] = []
     for r in range(h):
         cur = _changes(black[r])
@@ -213,16 +193,16 @@ def g4_encode(black: np.ndarray) -> bytes:
             b1 = ref[bi] if bi < len(ref) else w
             b2 = ref[bi + 1] if bi + 1 < len(ref) else w
             if b2 < a1:
-                bits.put(*_MODE_PASS)
+                bits.write(*_MODE_PASS)
                 a0 = b2
             elif -3 <= a1 - b1 <= 3:
-                bits.put(*_MODE_V[a1 - b1])
+                bits.write(*_MODE_V[a1 - b1])
                 a0 = a1
                 color_white = not color_white
                 ci += 1
             else:
                 a2 = cur[ci + 1] if ci + 1 < len(cur) else w
-                bits.put(*_MODE_HORIZ)
+                bits.write(*_MODE_HORIZ)
                 start = a0 if a0 >= 0 else 0
                 first = _WHITE_CODES if color_white else _BLACK_CODES
                 second = _BLACK_CODES if color_white else _WHITE_CODES
@@ -231,41 +211,37 @@ def g4_encode(black: np.ndarray) -> bytes:
                 a0 = a2
                 ci += 2
         ref = cur
-    bits.put(0b000000000001, 12)  # EOFB = two EOLs (optional per TIFF,
-    bits.put(0b000000000001, 12)  # emitted for libtiff compatibility)
-    return bits.done()
+    bits.write(0b000000000001, 12)  # EOFB = two EOLs (optional per TIFF,
+    bits.write(0b000000000001, 12)  # emitted for libtiff compatibility)
+    return bits.getvalue()
 
 
-class _BitReader:
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.n = 0
-
-    def read_code(self, table, max_len: int = 14):
-        code = 0
-        for length in range(1, max_len + 1):
-            if self.n == 0:
-                if self.pos >= len(self.data):
-                    # trailing flush bits: signal exhaustion
-                    raise EOFError("end of G4 stream")
-                self.acc = self.data[self.pos]
-                self.pos += 1
-                self.n = 8
-            self.n -= 1
-            code = (code << 1) | ((self.acc >> self.n) & 1)
-            v = table.get((length, code))
-            if v is not None:
-                return v
-        raise ValueError("invalid T.6 code word")
+class _EndOfStream(ValueError):
+    """The bits ran out before a code word was complete."""
 
 
-def _read_run(rd: _BitReader, white: bool) -> int:
+def _read_code(rd: MsbReader, table, max_len: int = 14):
+    avail = rd.end - rd.pos
+    if avail > max_len:
+        avail = max_len
+    # the next avail bits under a 1 bit: the top `length` bits of the
+    # window are then a table key for every length
+    window = rd.read(avail) | (1 << avail)
+    for rest in range(avail - 1, -1, -1):
+        v = table.get(window >> rest)
+        if v is not None:
+            rd.pos -= rest
+            return v
+    if avail < max_len:
+        raise _EndOfStream("ccitt: truncated bitstream")
+    raise ValueError("invalid T.6 code word")
+
+
+def _read_run(rd: MsbReader, white: bool) -> int:
     table = _WHITE_DEC if white else _BLACK_DEC
     total = 0
     while True:
-        run = rd.read_code(table)
+        run = _read_code(rd, table)
         total += run
         if run < 64 or (run % 64 != 0):
             return total
@@ -275,7 +251,7 @@ def _read_run(rd: _BitReader, white: bool) -> int:
 def g4_decode(data: bytes, width: int, height: int) -> np.ndarray:
     """Decode a T.6 stream to a (height, width) boolean matrix
     (True = black)."""
-    rd = _BitReader(data)
+    rd = MsbReader(data, "ccitt")
     out = np.zeros((height, width), dtype=bool)
     ref: list[int] = []
     for r in range(height):
@@ -284,8 +260,8 @@ def g4_decode(data: bytes, width: int, height: int) -> np.ndarray:
         color_white = True
         while a0 < width:
             try:
-                mode, d = rd.read_code(_MODE_DEC)
-            except EOFError:
+                mode, d = _read_code(rd, _MODE_DEC)
+            except _EndOfStream:
                 if a0 <= 0 and not cur:
                     break  # stream ended exactly at a row boundary
                 raise

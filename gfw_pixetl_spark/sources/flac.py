@@ -26,6 +26,8 @@ import struct
 
 import numpy as np
 
+from .bitio import MsbReader, MsbWriter, unzigzag, zigzag
+
 MAGIC = b"fLaC"
 
 # ---------------------------------------------------------------------------
@@ -74,85 +76,6 @@ def crc16(data: bytes) -> int:
 
 
 # ---------------------------------------------------------------------------
-# Bit I/O (MSB-first, as FLAC frames are defined)
-# ---------------------------------------------------------------------------
-
-
-class BitReader:
-    def __init__(self, data: bytes, pos_bytes: int = 0) -> None:
-        self.data = data
-        self.pos = pos_bytes * 8  # absolute bit position
-
-    def read(self, nbits: int) -> int:
-        end = self.pos + nbits
-        if end > len(self.data) * 8:
-            raise ValueError("FLAC bitstream truncated")
-        v = 0
-        pos = self.pos
-        while nbits > 0:
-            byte = self.data[pos >> 3]
-            avail = 8 - (pos & 7)
-            take = min(avail, nbits)
-            shift = avail - take
-            v = (v << take) | ((byte >> shift) & ((1 << take) - 1))
-            pos += take
-            nbits -= take
-        self.pos = pos
-        return v
-
-    def read_signed(self, nbits: int) -> int:
-        v = self.read(nbits)
-        if v >= (1 << (nbits - 1)):
-            v -= 1 << nbits
-        return v
-
-    def read_unary(self) -> int:
-        """Count of 0 bits before the next 1 bit."""
-        n = 0
-        while self.read(1) == 0:
-            n += 1
-        return n
-
-    def align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
-    def byte_pos(self) -> int:
-        return self.pos >> 3
-
-
-class BitWriter:
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.nacc = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        self.acc = (self.acc << nbits) | (value & ((1 << nbits) - 1))
-        self.nacc += nbits
-        while self.nacc >= 8:
-            self.nacc -= 8
-            self.buf.append((self.acc >> self.nacc) & 0xFF)
-        self.acc &= (1 << self.nacc) - 1
-
-    def write_signed(self, value: int, nbits: int) -> None:
-        self.write(value & ((1 << nbits) - 1), nbits)
-
-    def write_unary(self, n: int) -> None:
-        while n >= 32:
-            self.write(0, 32)
-            n -= 32
-        self.write(1, n + 1)  # n zeros then a one
-
-    def align(self) -> None:
-        if self.nacc:
-            self.write(0, 8 - self.nacc)
-
-    def bytes(self) -> bytes:
-        assert self.nacc == 0, "unaligned"
-        return bytes(self.buf)
-
-
-# ---------------------------------------------------------------------------
 # UTF-8-style coded number (frame/sample number, up to 36 bits)
 # ---------------------------------------------------------------------------
 
@@ -174,7 +97,7 @@ def _utf8_encode(n: int) -> bytes:
     raise ValueError("frame number too large")
 
 
-def _utf8_decode(r: BitReader) -> int:
+def _utf8_decode(r: MsbReader) -> int:
     b0 = r.read(8)
     if b0 < 0x80:
         return b0
@@ -199,15 +122,7 @@ def _utf8_decode(r: BitReader) -> int:
 # ---------------------------------------------------------------------------
 
 
-def _zigzag(v: int) -> int:
-    return (v << 1) if v >= 0 else ((-v) << 1) - 1
-
-
-def _unzigzag(u: int) -> int:
-    return (u >> 1) if (u & 1) == 0 else -((u + 1) >> 1)
-
-
-def _read_residual(r: BitReader, blocksize: int, order: int) -> list[int]:
+def _read_residual(r: MsbReader, blocksize: int, order: int) -> list[int]:
     method = r.read(2)
     if method > 1:
         raise ValueError(f"reserved residual method {method}")
@@ -228,11 +143,11 @@ def _read_residual(r: BitReader, blocksize: int, order: int) -> list[int]:
             for _ in range(n):
                 q = r.read_unary()
                 u = (q << param) | (r.read(param) if param else 0)
-                out.append(_unzigzag(u))
+                out.append(unzigzag(u))
     return out
 
 
-def _write_residual(w: BitWriter, res: list[int], blocksize: int,
+def _write_residual(w: MsbWriter, res: list[int], blocksize: int,
                     order: int, partition_order: int = 0,
                     escape_raw: int | None = None) -> None:
     w.write(0, 2)  # RICE 4-bit params
@@ -248,9 +163,9 @@ def _write_residual(w: BitWriter, res: list[int], blocksize: int,
             w.write(escape_raw, 5)
             for v in part:
                 if escape_raw:
-                    w.write_signed(v, escape_raw)
+                    w.write(v, escape_raw)
             continue
-        zz = [_zigzag(v) for v in part]
+        zz = [zigzag(v) for v in part]
         mean = (sum(zz) / len(zz)) if zz else 0
         param = 0
         while (1 << (param + 1)) < mean + 1 and param < 14:
@@ -352,7 +267,7 @@ def _lpc_restore(warm: list[int], res: list[int], coefs: list[int],
 # ---------------------------------------------------------------------------
 
 
-def _read_subframe(r: BitReader, blocksize: int, bps: int) -> list[int]:
+def _read_subframe(r: MsbReader, blocksize: int, bps: int) -> list[int]:
     if r.read(1):
         raise ValueError("subframe padding bit set")
     stype = r.read(6)
@@ -389,7 +304,7 @@ def _read_subframe(r: BitReader, blocksize: int, bps: int) -> list[int]:
     return out
 
 
-def _write_subframe(w: BitWriter, x: list[int], bps: int, mode: str,
+def _write_subframe(w: MsbWriter, x: list[int], bps: int, mode: str,
                     lpc_order: int, partition_order: int) -> None:
     n = len(x)
     if mode == "auto":
@@ -403,14 +318,14 @@ def _write_subframe(w: BitWriter, x: list[int], bps: int, mode: str,
         w.write(0, 1)
         w.write(0, 6)
         w.write(0, 1)
-        w.write_signed(x[0], bps)
+        w.write(x[0], bps)
         return
     if mode == "verbatim":
         w.write(0, 1)
         w.write(1, 6)
         w.write(0, 1)
         for v in x:
-            w.write_signed(v, bps)
+            w.write(v, bps)
         return
     if mode == "lpc":
         got = _lpc_coefs(x, min(lpc_order, max(1, n - 1)))
@@ -430,11 +345,11 @@ def _write_subframe(w: BitWriter, x: list[int], bps: int, mode: str,
         w.write(32 | (order - 1), 6)
         w.write(0, 1)
         for v in x[:order]:
-            w.write_signed(v, bps)
+            w.write(v, bps)
         w.write(12 - 1, 4)  # precision 12
-        w.write_signed(shift, 5)
+        w.write(shift, 5)
         for c in coefs:
-            w.write_signed(c, 12)
+            w.write(c, 12)
         _write_residual(w, res, n, order, partition_order)
         return
     if mode == "fixed":
@@ -453,7 +368,7 @@ def _write_subframe(w: BitWriter, x: list[int], bps: int, mode: str,
         w.write(8 + best, 6)
         w.write(0, 1)
         for v in x[:best]:
-            w.write_signed(v, bps)
+            w.write(v, bps)
         _write_residual(w, res, n, best, partition_order)
         return
     raise ValueError(f"unknown subframe mode {mode!r}")
@@ -521,7 +436,7 @@ def encode_flac(
         bs = block.shape[0]
         assign = (ch - 1) if stereo == "independent" \
             else _STEREO_ASSIGN[stereo]
-        w = BitWriter()
+        w = MsbWriter()
         w.write(0b11111111111110, 14)
         w.write(0, 1)   # reserved
         w.write(0, 1)   # fixed blocksize strategy
@@ -534,8 +449,8 @@ def encode_flac(
             w.write(b, 8)
         w.write(bs - 1, 16)
         w.align()
-        hdr = w.bytes()
-        w = BitWriter()
+        hdr = w.getvalue()
+        w = MsbWriter()
         if stereo == "independent":
             plan = [([int(v) for v in block[:, c]], bps)
                     for c in range(ch)]
@@ -554,14 +469,14 @@ def encode_flac(
             _write_subframe(w, x, sub_bps, subframe, lpc_order,
                             partition_order)
         w.align()
-        body = w.bytes()
+        body = w.getvalue()
         frame = hdr + bytes([crc8(hdr)]) + body
         frame += struct.pack(">H", crc16(frame))
         min_fs = len(frame) if min_fs is None else min(min_fs, len(frame))
         max_fs = max(max_fs or 0, len(frame))
         frames += frame
 
-    si = BitWriter()
+    si = MsbWriter()
     si.write(min(block_size, n) if nframes else block_size, 16)
     si.write(block_size, 16)
     si.write(min_fs or 0, 24)
@@ -571,7 +486,7 @@ def encode_flac(
     si.write(bps - 1, 5)
     si.write(n, 36)
     si.align()
-    streaminfo = si.bytes() + _pcm_md5(arr, bps)
+    streaminfo = si.getvalue() + _pcm_md5(arr, bps)
     header = MAGIC + bytes([0x80]) + len(streaminfo).to_bytes(3, "big") \
         + streaminfo
     return header + bytes(frames)
@@ -614,7 +529,7 @@ def decode_flac(data: bytes, verify_md5: bool = True
             break
     if streaminfo is None or len(streaminfo) < 34:
         raise ValueError("missing STREAMINFO")
-    r = BitReader(streaminfo)
+    r = MsbReader(streaminfo, "FLAC")
     r.read(16)  # min blocksize
     r.read(16)  # max blocksize
     r.read(24)
@@ -626,9 +541,10 @@ def decode_flac(data: bytes, verify_md5: bool = True
     md5 = streaminfo[18:34]
 
     chans: list[list[int]] = [[] for _ in range(ch)]
+    r = MsbReader(data, "FLAC")
     while pos < len(data):
         frame_start = pos
-        r = BitReader(data, pos)
+        r.pos = pos * 8
         sync = r.read(14)
         if sync != 0b11111111111110:
             raise ValueError(f"bad frame sync at byte {pos}")
@@ -656,7 +572,7 @@ def decode_flac(data: bytes, verify_md5: bool = True
             r.read(16)
         frame_rate = _RATE_CODES.get(rate_code, rate)
         frame_bps = _BPS_FROM_CODE.get(bps_code, bps)
-        hdr_end = r.byte_pos()
+        hdr_end = r.pos >> 3
         if crc8(data[frame_start:hdr_end]) != r.read(8):
             raise ValueError("frame header CRC-8 mismatch")
 
@@ -688,10 +604,10 @@ def decode_flac(data: bytes, verify_md5: bool = True
         else:
             raise ValueError(f"reserved channel assignment {chan_assign}")
         r.align()
-        footer_at = r.byte_pos()
+        footer_at = r.pos >> 3
         if crc16(data[frame_start:footer_at]) != r.read(16):
             raise ValueError("frame CRC-16 mismatch")
-        pos = r.byte_pos()
+        pos = r.pos >> 3
         for c in range(ch):
             chans[c].extend(subs[c])
         _ = frame_rate  # frames may override rate; STREAMINFO governs

@@ -28,6 +28,8 @@ from __future__ import annotations
 import struct
 from dataclasses import dataclass
 
+from .bitio import MsbReader, MsbWriter
+
 NAL_NON_IDR = 1
 NAL_IDR = 5
 NAL_SEI = 6
@@ -73,68 +75,6 @@ def rbsp_to_ebsp(data: bytes) -> bytes:
     return bytes(out)
 
 
-class BitReader:
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def u(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            byte = self.data[self.pos >> 3]
-            v = (v << 1) | ((byte >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return v
-
-    def ue(self) -> int:
-        """Exp-Golomb unsigned (§9.1)."""
-        zeros = 0
-        while self.u(1) == 0:
-            zeros += 1
-            if zeros > 32:
-                raise ValueError("bad Exp-Golomb code")
-        return (1 << zeros) - 1 + (self.u(zeros) if zeros else 0)
-
-    def se(self) -> int:
-        """Exp-Golomb signed (§9.1.1): k -> (-1)^(k+1) * ceil(k/2)."""
-        k = self.ue()
-        return (k + 1) // 2 if k % 2 else -(k // 2)
-
-
-class BitWriter:
-    def __init__(self):
-        self.bits: list[int] = []
-
-    def u(self, v: int, n: int) -> "BitWriter":
-        for i in range(n - 1, -1, -1):
-            self.bits.append((v >> i) & 1)
-        return self
-
-    def ue(self, v: int) -> "BitWriter":
-        k = v + 1
-        n = k.bit_length()
-        return self.u(0, n - 1).u(k, n)
-
-    def se(self, v: int) -> "BitWriter":
-        return self.ue(2 * v - 1 if v > 0 else -2 * v)
-
-    def rbsp_trailing(self) -> "BitWriter":
-        self.bits.append(1)
-        while len(self.bits) % 8:
-            self.bits.append(0)
-        return self
-
-    def tobytes(self) -> bytes:
-        assert len(self.bits) % 8 == 0
-        out = bytearray()
-        for i in range(0, len(self.bits), 8):
-            b = 0
-            for bit in self.bits[i:i + 8]:
-                b = (b << 1) | bit
-            out.append(b)
-        return bytes(out)
-
-
 def _nal(ref_idc: int, nal_type: int, rbsp: bytes) -> bytes:
     return bytes([(ref_idc << 5) | nal_type]) + rbsp_to_ebsp(rbsp)
 
@@ -166,46 +106,47 @@ def build_sps(width: int, height: int, profile_idc: int = 66,
     h_mbs = (height + 15) // 16
     crop_r = (w_mbs * 16 - width) // 2
     crop_b = (h_mbs * 16 - height) // 2
-    w = BitWriter()
-    w.u(profile_idc, 8)
-    w.u(0, 8)                      # constraint flags + reserved
-    w.u(level_idc, 8)
+    w = MsbWriter()
+    w.write(profile_idc, 8)
+    w.write(0, 8)                      # constraint flags + reserved
+    w.write(level_idc, 8)
     w.ue(sps_id)
     w.ue(log2_max_frame_num - 4)   # log2_max_frame_num_minus4
     w.ue(2)                        # pic_order_cnt_type 2: no POC fields
     w.ue(1)                        # max_num_ref_frames
-    w.u(0, 1)                      # gaps_in_frame_num_value_allowed
+    w.write(0, 1)                      # gaps_in_frame_num_value_allowed
     w.ue(w_mbs - 1)                # pic_width_in_mbs_minus1
     w.ue(h_mbs - 1)                # pic_height_in_map_units_minus1
-    w.u(1, 1)                      # frame_mbs_only_flag
-    w.u(1, 1)                      # direct_8x8_inference_flag
+    w.write(1, 1)                      # frame_mbs_only_flag
+    w.write(1, 1)                      # direct_8x8_inference_flag
     if crop_r or crop_b:
-        w.u(1, 1)                  # frame_cropping_flag
-        w.ue(0).ue(crop_r).ue(0).ue(crop_b)
+        w.write(1, 1)                  # frame_cropping_flag
+        for v in (0, crop_r, 0, crop_b):
+            w.ue(v)
     else:
-        w.u(0, 1)
-    w.u(0, 1)                      # vui_parameters_present_flag
-    w.rbsp_trailing()
-    return _nal(3, NAL_SPS, w.tobytes())
+        w.write(0, 1)
+    w.write(0, 1)                      # vui_parameters_present_flag
+    w.write(1, 1)                  # rbsp_stop_one_bit, then zero pad
+    return _nal(3, NAL_SPS, w.getvalue())
 
 
 def parse_sps(nal: bytes) -> SPS:
     if nal[0] & 0x1F != NAL_SPS:
         raise ValueError("not an SPS NAL")
-    r = BitReader(ebsp_to_rbsp(nal[1:]))
-    profile_idc = r.u(8)
-    r.u(8)
-    level_idc = r.u(8)
+    r = MsbReader(ebsp_to_rbsp(nal[1:]), "h264")
+    profile_idc = r.read(8)
+    r.read(8)
+    level_idc = r.read(8)
     sps_id = r.ue()
     if profile_idc in (100, 110, 122, 244, 44, 83, 86, 118, 128):
         # high-profile chroma/bit-depth block (§7.3.2.1.1)
         chroma = r.ue()
         if chroma == 3:
-            r.u(1)
+            r.read(1)
         r.ue()
         r.ue()
-        r.u(1)
-        if r.u(1):  # seq_scaling_matrix_present
+        r.read(1)
+        if r.read(1):  # seq_scaling_matrix_present
             raise NotImplementedError(
                 "SPS scaling matrices not supported by this indexer")
     log2_mfn = r.ue() + 4
@@ -213,21 +154,21 @@ def parse_sps(nal: bytes) -> SPS:
     if poc_type == 0:
         r.ue()
     elif poc_type == 1:
-        r.u(1)
+        r.read(1)
         r.se()
         r.se()
         for _ in range(r.ue()):
             r.se()
     r.ue()                          # max_num_ref_frames
-    r.u(1)
+    r.read(1)
     w_mbs = r.ue() + 1
     h_map = r.ue() + 1
-    frame_mbs_only = bool(r.u(1))
+    frame_mbs_only = bool(r.read(1))
     if not frame_mbs_only:
-        r.u(1)                      # mb_adaptive_frame_field_flag
-    r.u(1)                          # direct_8x8_inference
+        r.read(1)                      # mb_adaptive_frame_field_flag
+    r.read(1)                          # direct_8x8_inference
     crop_l = crop_r = crop_t = crop_b = 0
-    if r.u(1):
+    if r.read(1):
         crop_l, crop_r, crop_t, crop_b = r.ue(), r.ue(), r.ue(), r.ue()
     h_mbs = h_map * (1 if frame_mbs_only else 2)
     # 4:2:0 crop units: x2 horizontally, 2*(2 - frame_mbs_only) vertically
@@ -245,20 +186,23 @@ def parse_sps(nal: bytes) -> SPS:
 # --- PPS (§7.3.2.2) --------------------------------------------------------
 
 def build_pps(pps_id: int = 0, sps_id: int = 0) -> bytes:
-    w = BitWriter()
-    w.ue(pps_id).ue(sps_id)
-    w.u(0, 1)       # entropy_coding_mode_flag (CAVLC)
-    w.u(0, 1)       # bottom_field_pic_order_in_frame_present
+    w = MsbWriter()
+    w.ue(pps_id)
+    w.ue(sps_id)
+    w.write(0, 1)       # entropy_coding_mode_flag (CAVLC)
+    w.write(0, 1)       # bottom_field_pic_order_in_frame_present
     w.ue(0)         # num_slice_groups_minus1
-    w.ue(0).ue(0)   # num_ref_idx_l{0,1}_default_active_minus1
-    w.u(0, 1)       # weighted_pred_flag
-    w.u(0, 2)       # weighted_bipred_idc
-    w.se(0).se(0).se(0)  # qp/qs/chroma_qp offsets
-    w.u(1, 1)       # deblocking_filter_control_present
-    w.u(0, 1)       # constrained_intra_pred
-    w.u(0, 1)       # redundant_pic_cnt_present
-    w.rbsp_trailing()
-    return _nal(3, NAL_PPS, w.tobytes())
+    w.ue(0)         # num_ref_idx_l0_default_active_minus1
+    w.ue(0)         # num_ref_idx_l1_default_active_minus1
+    w.write(0, 1)       # weighted_pred_flag
+    w.write(0, 2)       # weighted_bipred_idc
+    for _ in range(3):  # qp/qs/chroma_qp offsets
+        w.se(0)
+    w.write(1, 1)       # deblocking_filter_control_present
+    w.write(0, 1)       # constrained_intra_pred
+    w.write(0, 1)       # redundant_pic_cnt_present
+    w.write(1, 1)   # rbsp_stop_one_bit, then zero pad
+    return _nal(3, NAL_PPS, w.getvalue())
 
 
 # --- slice header prefix (§7.3.3) ------------------------------------------
@@ -279,27 +223,27 @@ def build_slice(idr: bool, frame_num: int, log2_max_frame_num: int,
     macroblock data that follows is the given opaque payload (this
     indexer never reads it, mirroring real extraction)."""
     st = slice_type if slice_type is not None else (7 if idr else 5)
-    w = BitWriter()
+    w = MsbWriter()
     w.ue(0)                                 # first_mb_in_slice
     w.ue(st)
     w.ue(pps_id)
-    w.u(frame_num % (1 << log2_max_frame_num), log2_max_frame_num)
+    w.write(frame_num % (1 << log2_max_frame_num), log2_max_frame_num)
     if idr:
         w.ue(idr_pic_id)
-    w.rbsp_trailing()  # byte-align; payload bytes follow as slice data
+    w.write(1, 1)  # stop bit + zero pad; payload bytes follow as slice data
     return _nal(3 if idr else 2, NAL_IDR if idr else NAL_NON_IDR,
-                w.tobytes() + payload)
+                w.getvalue() + payload)
 
 
 def parse_slice_header(nal: bytes, log2_max_frame_num: int) -> SliceHeader:
     t = nal[0] & 0x1F
     if t not in (NAL_NON_IDR, NAL_IDR):
         raise ValueError("not a coded-slice NAL")
-    r = BitReader(ebsp_to_rbsp(nal[1:min(len(nal), 32)]))
+    r = MsbReader(ebsp_to_rbsp(nal[1:min(len(nal), 32)]), "h264")
     first_mb = r.ue()
     st = r.ue()
     pps_id = r.ue()
-    frame_num = r.u(log2_max_frame_num)
+    frame_num = r.read(log2_max_frame_num)
     idr_pic_id = r.ue() if t == NAL_IDR else None
     return SliceHeader(first_mb, st, pps_id, frame_num, idr_pic_id)
 

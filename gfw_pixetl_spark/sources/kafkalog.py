@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import struct
 
+from .bitio import read_uvarint, unzigzag, write_uvarint, zigzag
 from .tfrecord import crc32c
 
 _HEADER_LEN = 61  # baseOffset..recordsCount inclusive
@@ -34,34 +35,13 @@ _CRC_OFFSET = 21  # crc field position within the batch
 _MAGIC_OFFSET = 16
 
 
-def _zz_write(out: bytearray, v: int) -> None:
-    u = (v << 1) ^ (v >> 63)  # zigzag, int64 domain
-    u &= (1 << 64) - 1
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
-
-
-def _zz_read(data: bytes, pos: int) -> tuple[int, int]:
-    u = 0
-    shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("kafka: truncated varint")
-        b = data[pos]
-        pos += 1
-        u |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-        if shift > 63:
-            raise ValueError("kafka: varint too long")
-    return (u >> 1) ^ -(u & 1), pos
+def _read_blob(buf: bytes, p: int) -> tuple[bytes | None, int]:
+    """A zigzag-varint length, then that many bytes; length -1 is null."""
+    n, p = read_uvarint(buf, p, "kafka")
+    n = unzigzag(n)
+    if n < 0:
+        return None, p
+    return buf[p:p + n], p + n
 
 
 def _encode_record(offset_delta: int, ts_delta: int,
@@ -69,25 +49,25 @@ def _encode_record(offset_delta: int, ts_delta: int,
                    headers: list[tuple[bytes, bytes]]) -> bytes:
     body = bytearray()
     body.append(0)  # record attributes (unused by the spec)
-    _zz_write(body, ts_delta)
-    _zz_write(body, offset_delta)
+    write_uvarint(body, zigzag(ts_delta))
+    write_uvarint(body, zigzag(offset_delta))
     for blob in (key, value):
         if blob is None:
-            _zz_write(body, -1)
+            write_uvarint(body, zigzag(-1))
         else:
-            _zz_write(body, len(blob))
+            write_uvarint(body, zigzag(len(blob)))
             body += blob
-    _zz_write(body, len(headers))
+    write_uvarint(body, zigzag(len(headers)))
     for hk, hv in headers:
-        _zz_write(body, len(hk))
+        write_uvarint(body, zigzag(len(hk)))
         body += hk
         if hv is None:
-            _zz_write(body, -1)
+            write_uvarint(body, zigzag(-1))
         else:
-            _zz_write(body, len(hv))
+            write_uvarint(body, zigzag(len(hv)))
             body += hv
     out = bytearray()
-    _zz_write(out, len(body))
+    write_uvarint(out, zigzag(len(body)))
     return bytes(out) + bytes(body)
 
 
@@ -199,34 +179,28 @@ def _parse_batch(data: bytes, pos: int) -> tuple[list[dict], int]:
         p, bend = pos + 61, end
     records = []
     for _ in range(n_records):
-        rlen, p = _zz_read(buf, p)
-        rend = p + rlen
+        rlen, p = read_uvarint(buf, p, "kafka")
+        rend = p + unzigzag(rlen)
         if rend > bend:
             raise ValueError("kafka: record overruns its batch")
         p += 1  # record attributes
-        ts_delta, p = _zz_read(buf, p)
-        off_delta, p = _zz_read(buf, p)
-        klen, p = _zz_read(buf, p)
-        key = None if klen < 0 else buf[p:p + klen]
-        p += max(klen, 0)
-        vlen, p = _zz_read(buf, p)
-        value = None if vlen < 0 else buf[p:p + vlen]
-        p += max(vlen, 0)
-        nh, p = _zz_read(buf, p)
+        ts_delta, p = read_uvarint(buf, p, "kafka")
+        off_delta, p = read_uvarint(buf, p, "kafka")
+        key, p = _read_blob(buf, p)
+        value, p = _read_blob(buf, p)
+        nh, p = read_uvarint(buf, p, "kafka")
         headers = []
-        for _ in range(nh):
-            hklen, p = _zz_read(buf, p)
-            hk = buf[p:p + hklen]
-            p += hklen
-            hvlen, p = _zz_read(buf, p)
-            hv = None if hvlen < 0 else buf[p:p + hvlen]
-            p += max(hvlen, 0)
+        for _ in range(unzigzag(nh)):
+            hk, p = _read_blob(buf, p)
+            if hk is None:  # a negative length would walk p backwards
+                raise ValueError("kafka: null header key")
+            hv, p = _read_blob(buf, p)
             headers.append((hk, hv))
         if p != rend:
             raise ValueError("kafka: record length inconsistent")
         records.append({
-            "offset": base_offset + off_delta,
-            "timestamp": base_ts + ts_delta,
+            "offset": base_offset + unzigzag(off_delta),
+            "timestamp": base_ts + unzigzag(ts_delta),
             "key": key, "value": value, "headers": headers,
         })
     if records and records[-1]["offset"] != base_offset + last_delta:

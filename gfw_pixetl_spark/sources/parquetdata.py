@@ -36,7 +36,8 @@ import struct
 import zlib
 from typing import Any, BinaryIO
 
-from .parquetmeta import _read_struct, _read_varint, read_metadata
+from .bitio import read_uvarint, unzigzag, write_uvarint, zigzag
+from .parquetmeta import _read_struct, read_metadata
 
 _PAGE_DATA = 0
 _PAGE_DICT = 2
@@ -118,7 +119,7 @@ def rle_bp_hybrid(data: bytes, pos: int, width: int, count: int,
     out: list[int] = []
     byte_w = (width + 7) // 8
     while len(out) < count and pos < len(data):
-        header, pos = _read_varint(data, pos)
+        header, pos = read_uvarint(data, pos, "parquet")
         if header & 1:  # bit-packed groups of 8
             n_groups = header >> 1
             n = n_groups * 8
@@ -173,10 +174,6 @@ def _plain_values(data: bytes, pos: int, n: int, ptype: str,
     raise ValueError(f"parquet: unsupported physical type {ptype}")
 
 
-def _zz_dec(v: int) -> int:
-    return (v >> 1) ^ -(v & 1)
-
-
 def _wrap64(v: int) -> int:
     """``v`` modulo 2^64 as a signed int64 (numpy's overflow result)."""
     return ((v + (1 << 63)) & ((1 << 64) - 1)) - (1 << 63)
@@ -184,15 +181,15 @@ def _wrap64(v: int) -> int:
 
 def _delta_binary_packed(data: bytes, pos: int, n: int,
                          ) -> tuple[list[int], int]:
-    block_size, pos = _read_varint(data, pos)
-    n_mini, pos = _read_varint(data, pos)
-    total, pos = _read_varint(data, pos)
-    first_raw, pos = _read_varint(data, pos)
-    out = [_zz_dec(first_raw)]
+    block_size, pos = read_uvarint(data, pos, "parquet")
+    n_mini, pos = read_uvarint(data, pos, "parquet")
+    total, pos = read_uvarint(data, pos, "parquet")
+    first_raw, pos = read_uvarint(data, pos, "parquet")
+    out = [unzigzag(first_raw)]
     per_mini = block_size // n_mini
     while len(out) < total:
-        md_raw, pos = _read_varint(data, pos)
-        min_delta = _zz_dec(md_raw)
+        md_raw, pos = read_uvarint(data, pos, "parquet")
+        min_delta = unzigzag(md_raw)
         widths = list(data[pos:pos + n_mini])
         pos += n_mini
         for w in widths:
@@ -383,27 +380,13 @@ _CT_TRUE, _CT_FALSE, _CT_I32, _CT_I64 = 1, 2, 5, 6
 _CT_DOUBLE, _CT_BINARY, _CT_LIST, _CT_STRUCT = 7, 8, 9, 12
 
 
-def _w_varint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _w_zigzag(n: int) -> bytes:
-    return _w_varint((n << 1) ^ (n >> 63) if n < 0 else n << 1)
-
-
 def _w_field(last_fid: int, fid: int, ctype: int) -> bytes:
     delta = fid - last_fid
     if 1 <= delta <= 15:
         return bytes([(delta << 4) | ctype])
-    return bytes([ctype]) + _w_zigzag(fid)
+    out = bytearray([ctype])
+    write_uvarint(out, zigzag(fid))
+    return bytes(out)
 
 
 class _StructW:
@@ -415,7 +398,7 @@ class _StructW:
 
     def i(self, fid: int, v: int, wide: bool = True) -> "_StructW":
         self.buf += _w_field(self.last, fid, _CT_I64 if wide else _CT_I32)
-        self.buf += _w_zigzag(int(v))
+        write_uvarint(self.buf, zigzag(int(v)))
         self.last = fid
         return self
 
@@ -427,7 +410,8 @@ class _StructW:
 
     def s(self, fid: int, v: bytes) -> "_StructW":
         self.buf += _w_field(self.last, fid, _CT_BINARY)
-        self.buf += _w_varint(len(v)) + v
+        write_uvarint(self.buf, len(v))
+        self.buf += v
         self.last = fid
         return self
 
@@ -437,7 +421,7 @@ class _StructW:
             self.buf.append((len(items) << 4) | etype)
         else:
             self.buf.append(0xF0 | etype)
-            self.buf += _w_varint(len(items))
+            write_uvarint(self.buf, len(items))
         for it in items:
             self.buf += it
         self.last = fid
@@ -498,7 +482,7 @@ def _rle_levels(defs: list[int]) -> bytes:
         j = i
         while j < n and defs[j] == defs[i]:
             j += 1
-        body += _w_varint((j - i) << 1)
+        write_uvarint(body, (j - i) << 1)
         body.append(defs[i])
         i = j
     return struct.pack("<I", len(body)) + bytes(body)
@@ -569,12 +553,14 @@ def write_parquet(path: str, columns: list[PColumn],
             if present and col.ptype != "BOOLEAN":
                 stats.s(5, _stat_bytes(col.ptype, max(present)))
                 stats.s(6, _stat_bytes(col.ptype, min(present)))
+            name = bytearray()
+            write_uvarint(name, len(col.name.encode()))
+            name += col.name.encode()
             md = (_StructW()
                   .i(1, _W_TYPES[col.ptype], wide=False)
-                  .lst(2, _CT_I32, [_w_zigzag(0), _w_zigzag(3)])
-                  .lst(3, _CT_BINARY,
-                       [_w_varint(len(col.name.encode()))
-                        + col.name.encode()])
+                  # encodings PLAIN (0) and RLE (3): one-byte zigzag i32s
+                  .lst(2, _CT_I32, [bytes([zigzag(0)]), bytes([zigzag(3)])])
+                  .lst(3, _CT_BINARY, [bytes(name)])
                   .i(4, codec_id, wide=False)
                   .i(5, len(vals))
                   .i(6, len(header) + len(raw))

@@ -30,6 +30,8 @@ import os
 import struct
 from typing import Any, BinaryIO, Callable
 
+from .bitio import read_uvarint, unzigzag
+
 MAGIC = b"PAR1"
 
 # Thrift compact-protocol element type ids.
@@ -68,22 +70,6 @@ REPETITION = {0: "REQUIRED", 1: "OPTIONAL", 2: "REPEATED"}
 # Thrift compact protocol — generic decoder
 # --------------------------------------------------------------------------
 
-def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    result = 0
-    shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result, pos
-        shift += 7
-
-
-def _zigzag(n: int) -> int:
-    return (n >> 1) ^ -(n & 1)
-
-
 def _read_value(buf: bytes, pos: int, ctype: int) -> tuple[Any, int]:
     if ctype in (_CT_TRUE, _CT_FALSE):
         # Inside containers booleans occupy one byte (1=true, 2=false).
@@ -93,12 +79,12 @@ def _read_value(buf: bytes, pos: int, ctype: int) -> tuple[Any, int]:
         v = buf[pos]
         return v - 256 if v >= 128 else v, pos + 1
     if ctype in (_CT_I16, _CT_I32, _CT_I64):
-        n, pos = _read_varint(buf, pos)
-        return _zigzag(n), pos
+        n, pos = read_uvarint(buf, pos, "parquet")
+        return unzigzag(n), pos
     if ctype == _CT_DOUBLE:
         return struct.unpack_from("<d", buf, pos)[0], pos + 8
     if ctype == _CT_BINARY:
-        n, pos = _read_varint(buf, pos)
+        n, pos = read_uvarint(buf, pos, "parquet")
         return bytes(buf[pos:pos + n]), pos + n
     if ctype in (_CT_LIST, _CT_SET):
         header = buf[pos]
@@ -106,14 +92,14 @@ def _read_value(buf: bytes, pos: int, ctype: int) -> tuple[Any, int]:
         size = header >> 4
         etype = header & 0x0F
         if size == 15:
-            size, pos = _read_varint(buf, pos)
+            size, pos = read_uvarint(buf, pos, "parquet")
         out = []
         for _ in range(size):
             v, pos = _read_value(buf, pos, etype)
             out.append(v)
         return out, pos
     if ctype == _CT_MAP:
-        size, pos = _read_varint(buf, pos)
+        size, pos = read_uvarint(buf, pos, "parquet")
         out = {}
         if size:
             kv = buf[pos]
@@ -141,8 +127,8 @@ def _read_struct(buf: bytes, pos: int) -> tuple[dict[int, Any], int]:
         delta = b >> 4
         ctype = b & 0x0F
         if delta == 0:
-            n, pos = _read_varint(buf, pos)
-            fid = _zigzag(n)
+            n, pos = read_uvarint(buf, pos, "parquet")
+            fid = unzigzag(n)
         else:
             fid = last_fid + delta
         last_fid = fid

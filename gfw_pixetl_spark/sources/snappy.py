@@ -12,25 +12,11 @@ both of those wrap).
 
 from __future__ import annotations
 
-
-def _uvarint(data: bytes, pos: int) -> tuple[int, int]:
-    v = 0
-    shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("snappy: truncated length varint")
-        b = data[pos]
-        pos += 1
-        v |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return v, pos
-        shift += 7
-        if shift > 35:
-            raise ValueError("snappy: length varint too long")
+from .bitio import read_uvarint, write_uvarint
 
 
 def decompress(data: bytes) -> bytes:
-    total, pos = _uvarint(data, 0)
+    total, pos = read_uvarint(data, 0, "snappy")
     out = bytearray()
     n = len(data)
     while pos < n:
@@ -98,17 +84,9 @@ def _emit_literal(out: bytearray, chunk: bytes) -> None:
 def compress(data: bytes) -> bytes:
     """Greedy hash-match encoder: 4-byte-anchor matches emitted as
     2-byte-offset copies (<= 64 bytes each), everything else literal."""
-    out = bytearray()
     n = len(data)
-    v = n
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            break
+    out = bytearray()
+    write_uvarint(out, n)
     table: dict[bytes, int] = {}
     pos = 0
     lit_start = 0

@@ -36,6 +36,8 @@ from __future__ import annotations
 
 import struct
 
+from .bitio import read_uvarint, write_uvarint
+
 # --------------------------------------------------------------------------
 # CRC32C (Castagnoli) + the TFRecord mask
 # --------------------------------------------------------------------------
@@ -184,55 +186,26 @@ def scan_tfrecord(data: bytes) -> tuple[list[bytes], dict]:
 # --------------------------------------------------------------------------
 
 
-def _write_varint(out: bytearray, v: int) -> None:
-    if v < 0:
-        v &= (1 << 64) - 1  # int64 negatives: 10-byte two's complement
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
-
-
-def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
-    result = 0
-    shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("protobuf: truncated varint")
-        b = data[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result, pos
-        shift += 7
-        if shift > 63:
-            raise ValueError("protobuf: varint too long")
-
-
 def _tag(field: int, wire: int) -> bytes:
     out = bytearray()
-    _write_varint(out, (field << 3) | wire)
+    write_uvarint(out, (field << 3) | wire)
     return bytes(out)
 
 
 def _len_delimited(field: int, payload: bytes) -> bytes:
     out = bytearray(_tag(field, 2))
-    _write_varint(out, len(payload))
+    write_uvarint(out, len(payload))
     return bytes(out) + payload
 
 
 def _skip_field(data: bytes, pos: int, wire: int) -> int:
     if wire == 0:
-        _, pos = _read_varint(data, pos)
+        _, pos = read_uvarint(data, pos, "protobuf")
         return pos
     if wire == 1:
         return pos + 8
     if wire == 2:
-        ln, pos = _read_varint(data, pos)
+        ln, pos = read_uvarint(data, pos, "protobuf")
         return pos + ln
     if wire == 5:
         return pos + 4
@@ -258,7 +231,7 @@ def _encode_feature(values) -> bytes:
     if isinstance(v0, int):
         inner = bytearray()
         for v in values:
-            _write_varint(inner, int(v))
+            write_uvarint(inner, int(v))
         return _len_delimited(3, _len_delimited(1, bytes(inner)))
     if isinstance(v0, float):
         payload = struct.pack(f"<{len(values)}f", *values)
@@ -283,10 +256,10 @@ def _decode_float_list(data: bytes) -> list[float]:
     out: list[float] = []
     pos = 0
     while pos < len(data):
-        tag, pos = _read_varint(data, pos)
+        tag, pos = read_uvarint(data, pos, "protobuf")
         field, wire = tag >> 3, tag & 7
         if field == 1 and wire == 2:  # packed
-            ln, pos = _read_varint(data, pos)
+            ln, pos = read_uvarint(data, pos, "protobuf")
             if ln % 4 or pos + ln > len(data):
                 raise ValueError("protobuf: bad packed float payload")
             out.extend(struct.unpack(f"<{ln // 4}f", data[pos:pos + ln]))
@@ -307,18 +280,18 @@ def _decode_int64_list(data: bytes) -> list[int]:
         return v - (1 << 64) if v >= (1 << 63) else v
 
     while pos < len(data):
-        tag, pos = _read_varint(data, pos)
+        tag, pos = read_uvarint(data, pos, "protobuf")
         field, wire = tag >> 3, tag & 7
         if field == 1 and wire == 2:  # packed
-            ln, pos = _read_varint(data, pos)
+            ln, pos = read_uvarint(data, pos, "protobuf")
             end = pos + ln
             if end > len(data):
                 raise ValueError("protobuf: bad packed int64 payload")
             while pos < end:
-                v, pos = _read_varint(data, pos)
+                v, pos = read_uvarint(data, pos, "protobuf")
                 out.append(_signed(v))
         elif field == 1 and wire == 0:  # unpacked
-            v, pos = _read_varint(data, pos)
+            v, pos = read_uvarint(data, pos, "protobuf")
             out.append(_signed(v))
         else:
             pos = _skip_field(data, pos, wire)
@@ -329,10 +302,10 @@ def _decode_bytes_list(data: bytes) -> list[bytes]:
     out: list[bytes] = []
     pos = 0
     while pos < len(data):
-        tag, pos = _read_varint(data, pos)
+        tag, pos = read_uvarint(data, pos, "protobuf")
         field, wire = tag >> 3, tag & 7
         if field == 1 and wire == 2:
-            ln, pos = _read_varint(data, pos)
+            ln, pos = read_uvarint(data, pos, "protobuf")
             if pos + ln > len(data):
                 raise ValueError("protobuf: truncated bytes value")
             out.append(data[pos:pos + ln])
@@ -345,10 +318,10 @@ def _decode_bytes_list(data: bytes) -> list[bytes]:
 def _decode_feature(data: bytes):
     pos = 0
     while pos < len(data):
-        tag, pos = _read_varint(data, pos)
+        tag, pos = read_uvarint(data, pos, "protobuf")
         field, wire = tag >> 3, tag & 7
         if wire == 2 and field in (1, 2, 3):
-            ln, pos = _read_varint(data, pos)
+            ln, pos = read_uvarint(data, pos, "protobuf")
             payload = data[pos:pos + ln]
             if len(payload) != ln:
                 raise ValueError("protobuf: truncated Feature payload")
@@ -367,20 +340,20 @@ def decode_example(data: bytes) -> dict:
     out: dict = {}
     pos = 0
     while pos < len(data):
-        tag, pos = _read_varint(data, pos)
+        tag, pos = read_uvarint(data, pos, "protobuf")
         field, wire = tag >> 3, tag & 7
         if field == 1 and wire == 2:  # Features
-            ln, pos = _read_varint(data, pos)
+            ln, pos = read_uvarint(data, pos, "protobuf")
             feats = data[pos:pos + ln]
             if len(feats) != ln:
                 raise ValueError("protobuf: truncated Features")
             pos += ln
             fpos = 0
             while fpos < len(feats):
-                ftag, fpos = _read_varint(feats, fpos)
+                ftag, fpos = read_uvarint(feats, fpos, "protobuf")
                 ffield, fwire = ftag >> 3, ftag & 7
                 if ffield == 1 and fwire == 2:  # map entry
-                    eln, fpos = _read_varint(feats, fpos)
+                    eln, fpos = read_uvarint(feats, fpos, "protobuf")
                     entry = feats[fpos:fpos + eln]
                     if len(entry) != eln:
                         raise ValueError("protobuf: truncated map entry")
@@ -388,14 +361,14 @@ def decode_example(data: bytes) -> dict:
                     name, value = None, []
                     epos = 0
                     while epos < len(entry):
-                        etag, epos = _read_varint(entry, epos)
+                        etag, epos = read_uvarint(entry, epos, "protobuf")
                         efield, ewire = etag >> 3, etag & 7
                         if efield == 1 and ewire == 2:
-                            nln, epos = _read_varint(entry, epos)
+                            nln, epos = read_uvarint(entry, epos, "protobuf")
                             name = entry[epos:epos + nln].decode("utf-8")
                             epos += nln
                         elif efield == 2 and ewire == 2:
-                            vln, epos = _read_varint(entry, epos)
+                            vln, epos = read_uvarint(entry, epos, "protobuf")
                             value = _decode_feature(entry[epos:epos + vln])
                             epos += vln
                         else:

@@ -39,46 +39,10 @@ import struct
 
 import numpy as np
 
+# VP8L packs bits LSB-first within bytes; prefix codes are read
+# MSB-of-code first (the DEFLATE convention).
+from .bitio import LsbReader, LsbWriter
 from .zstd import _pm_lengths
-
-# --------------------------------------------------------------------------
-# bit IO — VP8L packs bits LSB-first within bytes; prefix codes are read
-# MSB-of-code-first (the DEFLATE convention).
-# --------------------------------------------------------------------------
-
-
-class BitReader:
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def read(self, n: int) -> int:
-        v = 0
-        for i in range(n):
-            byte = self.pos >> 3
-            if byte >= len(self.data):
-                raise ValueError("VP8L: bitstream truncated")
-            v |= ((self.data[byte] >> (self.pos & 7)) & 1) << i
-            self.pos += 1
-        return v
-
-
-class BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.bit = 0
-
-    def write(self, v: int, n: int) -> None:
-        for i in range(n):
-            if self.bit == 0:
-                self.out.append(0)
-            if (v >> i) & 1:
-                self.out[-1] |= 1 << self.bit
-            self.bit = (self.bit + 1) & 7
-
-    def bytes(self) -> bytes:
-        return bytes(self.out)
-
 
 # --------------------------------------------------------------------------
 # canonical prefix codes
@@ -111,12 +75,12 @@ def _build_decode(lengths: list[int]):
     return {(ln, c): s for s, (c, ln) in _build_codes(lengths).items()}
 
 
-def _read_code(table, br: BitReader) -> int:
+def _read_code(table, br: LsbReader) -> int:
     if isinstance(table, int):
         return table
     code = length = 0
     while length <= 15:
-        code = (code << 1) | br.read(1)
+        code = (code << 1) | br.read_bit()
         length += 1
         sym = table.get((length, code))
         if sym is not None:
@@ -124,7 +88,7 @@ def _read_code(table, br: BitReader) -> int:
     raise ValueError("VP8L: invalid prefix code in stream")
 
 
-def _read_prefix_code(br: BitReader, alphabet_size: int):
+def _read_prefix_code(br: LsbReader, alphabet_size: int):
     if br.read(1):  # simple code
         num_symbols = br.read(1) + 1
         sym0 = br.read(8) if br.read(1) else br.read(1)
@@ -177,7 +141,7 @@ def _read_prefix_code(br: BitReader, alphabet_size: int):
 # --------------------------------------------------------------------------
 
 
-def _prefix_value(code: int, br: BitReader) -> int:
+def _prefix_value(code: int, br: LsbReader) -> int:
     if code < 4:
         return code + 1
     extra = (code - 2) >> 1
@@ -244,7 +208,7 @@ def _sub_size(size: int, bits: int) -> int:
     return (size + (1 << bits) - 1) >> bits
 
 
-def _decode_entropy_image(br: BitReader, w: int, h: int,
+def _decode_entropy_image(br: LsbReader, w: int, h: int,
                           is_level0: bool) -> list[int]:
     transforms = []
     if is_level0:
@@ -521,7 +485,7 @@ def _inv_palette(pixels: list[int], w: int, h: int, palette: list[int],
 
 def decode_vp8l(data: bytes) -> np.ndarray:
     """Decode a VP8L stream -> (h, w, 4) uint8 RGBA."""
-    br = BitReader(data)
+    br = LsbReader(data, "VP8L")
     if br.read(8) != 0x2F:
         raise ValueError("VP8L: bad signature byte")
     w = br.read(14) + 1
@@ -565,7 +529,7 @@ def decode_webp(data: bytes) -> np.ndarray:
 # --------------------------------------------------------------------------
 
 
-def _write_prefix_code(bw: BitWriter, lengths: list[int]) -> None:
+def _write_prefix_code(bw: LsbWriter, lengths: list[int]) -> None:
     """Emit a prefix code. Uses the simple form for 1-2 symbols <= 255,
     else the code-length-coded form (no repeat codes — each symbol's
     length emitted through the CLC, itself canonical over 19 symbols)."""
@@ -615,22 +579,12 @@ def _write_prefix_code(bw: BitWriter, lengths: list[int]) -> None:
         bw.write(0, 1)
     for ln in seq:
         c, cl = clc_codes[ln]
-        bw.write(_reverse_bits(c, cl), cl)
+        bw.write_code(c, cl)
 
 
-def _reverse_bits(code: int, length: int) -> int:
-    """Prefix codes are read MSB-first by the decoder while the writer
-    packs LSB-first — emit the code bits in reading order."""
-    out = 0
-    for _ in range(length):
-        out = (out << 1) | (code & 1)
-        code >>= 1
-    return out
-
-
-def _emit_code(bw: BitWriter, codes, sym: int) -> None:
+def _emit_code(bw: LsbWriter, codes, sym: int) -> None:
     c, ln = codes[sym]
-    bw.write(_reverse_bits(c, ln), ln)
+    bw.write_code(c, ln)
 
 
 def _code_lengths(counts: dict[int, int], alphabet: int,
@@ -714,7 +668,7 @@ def encode_vp8l(img: np.ndarray, use_subtract_green: bool = True,
         for r, g, b, a in arr.reshape(-1, 4)
     ]
 
-    bw = BitWriter()
+    bw = LsbWriter()
     bw.write(0x2F, 8)
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
@@ -763,10 +717,10 @@ def encode_vp8l(img: np.ndarray, use_subtract_green: bool = True,
         bw.write(0, 1)
 
     _encode_image_body(bw, pixels, eff_w, cache_bits, use_lz77)
-    return bw.bytes()
+    return bw.getvalue()
 
 
-def _encode_subimage(bw: BitWriter, pixels: list[int], w: int,
+def _encode_subimage(bw: LsbWriter, pixels: list[int], w: int,
                      h: int) -> None:
     """Entropy-coded sub-image (palette / predictor image): no cache,
     no meta, literals only."""
@@ -775,7 +729,7 @@ def _encode_subimage(bw: BitWriter, pixels: list[int], w: int,
         bw, [("lit", p) for p in pixels], 0)
 
 
-def _encode_image_body(bw: BitWriter, pixels: list[int], w: int,
+def _encode_image_body(bw: LsbWriter, pixels: list[int], w: int,
                        cache_bits: int, use_lz77: bool) -> None:
     tokens = _lz77_tokens(pixels, w, cache_bits, use_lz77)
     if cache_bits:
@@ -787,7 +741,7 @@ def _encode_image_body(bw: BitWriter, pixels: list[int], w: int,
     _encode_groups_and_pixels(bw, tokens, cache_bits, w)
 
 
-def _encode_groups_and_pixels(bw: BitWriter, tokens: list[tuple],
+def _encode_groups_and_pixels(bw: LsbWriter, tokens: list[tuple],
                               cache_bits: int, w: int = 1) -> None:
     from collections import Counter
 

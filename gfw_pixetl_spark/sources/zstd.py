@@ -58,6 +58,8 @@ from __future__ import annotations
 
 import struct
 
+from .bitio import LsbReader, LsbWriter
+
 ZSTD_MAGIC = 0xFD2FB528
 DICT_MAGIC = 0xEC30A437
 SKIPPABLE_LO = 0x184D2A50
@@ -127,39 +129,12 @@ class _RBits:
         self.pos -= n
 
 
-class _FBits:
-    """Forward little-endian bitstream (FSE table descriptions)."""
-
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-
-    def read(self, n: int) -> int:
-        if n <= 0:
-            return 0
-        lo, hi = self.pos >> 3, (self.pos + n - 1) >> 3
-        if hi >= len(self.data):
-            raise ValueError("zstd: FSE description overruns its buffer")
-        chunk = int.from_bytes(self.data[lo:hi + 1], "little")
-        v = (chunk >> (self.pos & 7)) & ((1 << n) - 1)
-        self.pos += n
-        return v
-
-    def rewind(self, n: int) -> None:
-        self.pos -= n
-
-    def byte_pos(self) -> int:
-        return (self.pos + 7) >> 3
-
-
 # --------------------------------------------------------------------------
 # FSE
 # --------------------------------------------------------------------------
 
 
-def _fse_read_distribution(fb: _FBits, max_accuracy: int,
+def _fse_read_distribution(fb: LsbReader, max_accuracy: int,
                            max_symbol: int):
     """RFC 8878 §4.1.1: variable-bit probability list. Returns
     (probs list incl. -1 entries, accuracy_log)."""
@@ -178,7 +153,7 @@ def _fse_read_distribution(fb: _FBits, max_accuracy: int,
         threshold = (1 << nbits) - 1 - remaining
         value = v & lower_mask
         if value < threshold:
-            fb.rewind(1)
+            fb.pos -= 1
         else:
             value = v
             if value > lower_mask:
@@ -288,10 +263,10 @@ def _huf_read_weights(data: bytes):
     comp = data[1:1 + h]
     if len(comp) != h:
         raise ValueError("zstd: truncated FSE-compressed weights")
-    fb = _FBits(comp)
+    fb = LsbReader(comp, "zstd")
     probs, al = _fse_read_distribution(fb, 6, 255)
     table = _fse_build(probs, al)
-    rb = _RBits(comp[fb.byte_pos():])
+    rb = _RBits(comp[(fb.pos + 7) >> 3:])
     s1 = rb.read(al)
     s2 = rb.read(al)
     weights = []
@@ -478,9 +453,9 @@ def _seq_table(mode: int, fb_data: bytes, pos: int, kind: str,
     if mode == 1:  # RLE: one byte symbol
         return (_fse_rle_table(fb_data[pos]), 0), pos + 1
     if mode == 2:  # FSE-compressed
-        fb = _FBits(fb_data[pos:])
+        fb = LsbReader(fb_data[pos:], "zstd")
         probs, al = _fse_read_distribution(fb, max_al, 255)
-        return (_fse_build(probs, al), al), pos + fb.byte_pos()
+        return (_fse_build(probs, al), al), pos + ((fb.pos + 7) >> 3)
     prev = frame_state.get(f"seq_{kind}")  # mode 3: repeat
     if prev is None:
         raise ValueError(f"zstd: repeat {kind} table with no previous")
@@ -736,10 +711,10 @@ def parse_dictionary(blob: bytes) -> dict:
     pos += used
     tables = {}
     for kind, max_al in (("of", 8), ("ml", 9), ("ll", 9)):
-        fb = _FBits(blob[pos:])
+        fb = LsbReader(blob[pos:], "zstd")
         probs, al = _fse_read_distribution(fb, max_al, 255)
         tables[kind] = (_fse_build(probs, al), al)
-        pos += fb.byte_pos()
+        pos += (fb.pos + 7) >> 3
     rep = [int.from_bytes(blob[pos + 4 * i:pos + 4 * i + 4], "little")
            for i in range(3)]
     pos += 12
@@ -1038,46 +1013,14 @@ class _CState:
         v = (nb << 16) - dnb
         self.value = state_table[(v >> nb) + dfs]
 
-    def encode(self, wb: "_WBits", symbol: int) -> None:
+    def encode(self, wb: LsbWriter, symbol: int) -> None:
         dnb, dfs = self.tt[symbol]
         nb = (self.value + dnb) >> 16
-        wb.add(self.value, nb)
+        wb.write(self.value, nb)
         self.value = self.table[(self.value >> nb) + dfs]
 
-    def flush(self, wb: "_WBits") -> None:
-        wb.add(self.value, self.log)
-
-
-class _WBits:
-    """Forward bit writer matching the backward reader `_RBits`: bits
-    pack little-endian, the final byte carries the 1-sentinel."""
-
-    __slots__ = ("acc", "n", "buf")
-
-    def __init__(self) -> None:
-        self.acc = 0
-        self.n = 0
-        self.buf = bytearray()
-
-    def add(self, value: int, nbits: int) -> None:
-        # whole low bytes flush to the buffer so the accumulator stays
-        # a small int (the former ever-growing int made each add O(n));
-        # byte layout is unchanged — first bits land in first bytes
-        if nbits:
-            self.acc |= (value & ((1 << nbits) - 1)) << self.n
-            self.n += nbits
-            if self.n >= 256:
-                k = self.n >> 3
-                self.buf += (self.acc & ((1 << (k * 8)) - 1)).to_bytes(
-                    k, "little")
-                self.acc >>= k * 8
-                self.n &= 7
-
-    def close(self) -> bytes:
-        self.acc |= 1 << self.n
-        self.n += 1
-        return bytes(self.buf) + self.acc.to_bytes((self.n + 7) >> 3,
-                                                   "little")
+    def flush(self, wb: LsbWriter) -> None:
+        wb.write(self.value, self.log)
 
 
 def _ll_code(ll: int) -> int:
@@ -1220,25 +1163,26 @@ def _encode_block(data: bytes, prefix: bytes = b"") -> bytes | None:
                       mc, mlen - _ML_BASE[mc], _ML_BITS[mc],
                       oc, ov - (1 << oc)))
 
-    wb = _WBits()
+    wb = LsbWriter()
     last = codes[-1]
     ml_st = _CState(*ml_ct, ml_al, last[3])
     of_st = _CState(*of_ct, of_al, last[6])
     ll_st = _CState(*ll_ct, ll_al, last[0])
-    wb.add(last[1], last[2])   # LL extra
-    wb.add(last[4], last[5])   # ML extra
-    wb.add(last[7], last[6])   # OF extra (nb bits = code)
+    wb.write(last[1], last[2])   # LL extra
+    wb.write(last[4], last[5])   # ML extra
+    wb.write(last[7], last[6])   # OF extra (nb bits = code)
     for lc, llx, llb, mc, mlx, mlb, oc, ofx in reversed(codes[:-1]):
         of_st.encode(wb, oc)
         ml_st.encode(wb, mc)
         ll_st.encode(wb, lc)
-        wb.add(llx, llb)
-        wb.add(mlx, mlb)
-        wb.add(ofx, oc)
+        wb.write(llx, llb)
+        wb.write(mlx, mlb)
+        wb.write(ofx, oc)
     ml_st.flush(wb)
     of_st.flush(wb)
     ll_st.flush(wb)
-    body += wb.close()
+    wb.write(1, 1)  # end-of-stream sentinel
+    body += wb.getvalue()
     return bytes(body) if len(body) < len(data) else None
 
 
@@ -1358,11 +1302,12 @@ def _huf_encode_literals(lits: bytes) -> bytes | None:
         head.append(hi | lo)
 
     def enc_stream(chunk: bytes) -> bytes:
-        wb = _WBits()
+        wb = LsbWriter()
         for b in reversed(chunk):
             c, nb = codes[b]
-            wb.add(c, nb)
-        return wb.close()
+            wb.write(c, nb)
+        wb.write(1, 1)  # end-of-stream sentinel
+        return wb.getvalue()
 
     regen = len(lits)
     if regen <= 1023:

@@ -17,9 +17,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from gfw_pixetl_spark.sources.bitio import LsbWriter as _BitWriter
 from gfw_pixetl_spark.sources.brotli import (
-    _BitWriter, _static_data, compress_store, decode_content_encoding,
-    decompress,
+    _static_data, compress_store, decode_content_encoding, decompress,
 )
 
 

@@ -7,8 +7,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from gfw_pixetl_spark.sources.bitio import MsbReader, MsbWriter
 from gfw_pixetl_spark.sources.flac import (
-    BitReader, BitWriter, crc8, crc16, decode_flac, encode_flac,
+    crc8, crc16, decode_flac, encode_flac,
 )
 
 
@@ -120,12 +121,12 @@ def test_streaminfo_md5_verified():
 
 
 def test_bitio_roundtrip():
-    w = BitWriter()
+    w = MsbWriter()
     vals = [(5, 3), (0, 1), (1023, 10), (1, 1), (0xABCDE, 20)]
     for v, n in vals:
         w.write(v, n)
     w.align()
-    r = BitReader(w.bytes())
+    r = MsbReader(w.getvalue(), "FLAC")
     for v, n in vals:
         assert r.read(v.bit_length() if False else n) == v
 

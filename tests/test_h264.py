@@ -9,6 +9,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from gfw_pixetl_spark.sources import h264
+from gfw_pixetl_spark.sources.bitio import MsbReader, MsbWriter
 from gfw_pixetl_spark.sources.bmff import encode_mp4_tracks, sample_ranges
 
 
@@ -27,22 +28,22 @@ def test_emulation_prevention_inserts():
 @settings(max_examples=200, deadline=None)
 @given(st.lists(st.integers(0, 100000), min_size=1, max_size=8))
 def test_expgolomb_ue_roundtrip(vals):
-    w = h264.BitWriter()
+    w = MsbWriter()
     for v in vals:
         w.ue(v)
-    w.rbsp_trailing()
-    r = h264.BitReader(w.tobytes())
+    w.write(1, 1)
+    r = MsbReader(w.getvalue(), "h264")
     assert [r.ue() for _ in vals] == vals
 
 
 @settings(max_examples=200, deadline=None)
 @given(st.lists(st.integers(-50000, 50000), min_size=1, max_size=8))
 def test_expgolomb_se_roundtrip(vals):
-    w = h264.BitWriter()
+    w = MsbWriter()
     for v in vals:
         w.se(v)
-    w.rbsp_trailing()
-    r = h264.BitReader(w.tobytes())
+    w.write(1, 1)
+    r = MsbReader(w.getvalue(), "h264")
     assert [r.se() for _ in vals] == vals
 
 
@@ -53,6 +54,17 @@ def test_expgolomb_se_roundtrip(vals):
 def test_sps_dimension_grid(w, h):
     sps = h264.parse_sps(h264.build_sps(w, h))
     assert (sps.width, sps.height) == (w, h)
+
+
+def test_truncated_headers_raise_value_error():
+    sps = h264.build_sps(640, 360)
+    for cut in range(1, len(sps)):
+        with pytest.raises(ValueError, match="truncated"):
+            h264.parse_sps(sps[:cut])
+    idr = h264.build_slice(True, 3, 4, b"", idr_pic_id=300)
+    for cut in range(1, len(idr)):
+        with pytest.raises(ValueError, match="truncated"):
+            h264.parse_slice_header(idr[:cut], 4)
 
 
 def test_sps_rejects_odd_dimensions():

@@ -4,6 +4,7 @@ sources/kafkalog.py."""
 from __future__ import annotations
 
 import struct
+import time
 
 import pytest
 from hypothesis import given, settings
@@ -84,6 +85,26 @@ def test_reserved_codec_refused():
     struct.pack_into(">I", seg, 17, crc32c(bytes(seg[21:end])))
     with pytest.raises(ValueError, match="reserved"):
         iter_segment(bytes(seg))
+
+
+def test_negative_header_key_length_refused(monkeypatch):
+    """A header key of length -2 after a length -1 byte would send the
+    parser back one byte per header: with 2^28 - 1 headers declared, a
+    73-byte CRC-valid segment loops for minutes instead of failing."""
+    from gfw_pixetl_spark.sources import kafkalog
+
+    def record(*_):
+        body = bytes([0, 0, 0, 1, 1])  # attrs, ts, offset, null key/value
+        body += bytes([0xFE, 0xFF, 0xFF, 0xFF, 0x01])  # 2^28 - 1 headers
+        body += bytes([0x03])  # header key length -2
+        return bytes([2 * len(body)]) + body
+
+    monkeypatch.setattr(kafkalog, "_encode_record", record)
+    seg = write_segment([(None, None, [])])
+    t0 = time.perf_counter()
+    with pytest.raises(ValueError, match="null header key"):
+        iter_segment(seg)
+    assert time.perf_counter() - t0 < 1.0
 
 
 def test_damaged_compressed_batch_resyncs():

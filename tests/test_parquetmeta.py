@@ -17,6 +17,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from gfw_pixetl_spark.sources import parquetmeta as pm
+from gfw_pixetl_spark.sources.bitio import read_uvarint, unzigzag
 
 SF = "/root/testdata/sf0.001"
 
@@ -155,8 +156,8 @@ def test_prune_row_groups(tmp_path) -> None:
 def test_thrift_compact_primitives() -> None:
     """Hand-encoded compact-protocol fragments decode exactly."""
     # varint + zigzag
-    assert pm._read_varint(b"\xac\x02", 0) == (300, 2)
-    assert pm._zigzag(0) == 0 and pm._zigzag(1) == -1 and pm._zigzag(2) == 1
+    assert read_uvarint(b"\xac\x02", 0, "parquet") == (300, 2)
+    assert unzigzag(0) == 0 and unzigzag(1) == -1 and unzigzag(2) == 1
     # struct {1: i32 5, 2: binary "hi", 3: bool true} — deltas 1,1,1
     buf = bytes([0x15, 0x0A,            # fid 1, i32, zigzag(5)=10
                  0x18, 0x02]) + b"hi" + bytes([

@@ -1,7 +1,7 @@
 """WebP lossless (VP8L) codec tests — sources/webp.py.
 
 Round trips cover every encoder path; hand-crafted streams (built with
-the module's own BitWriter on top of forward transforms computed here)
+the shared LsbWriter on top of forward transforms computed here)
 cover the decoder-only features: the predictor transform (all 14
 modes), the cross-channel color transform, and meta prefix codes.
 """
@@ -16,6 +16,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from gfw_pixetl_spark.sources import webp as W
+from gfw_pixetl_spark.sources.bitio import LsbReader, LsbWriter
 
 
 def rt(img, **kw):
@@ -96,7 +97,7 @@ def test_distance_roundtrip_through_plane_codes():
 def _craft(w, h, header_writer, body_pixels):
     """Build a VP8L stream: signature + dims + custom transform header
     bits + a plain literal body holding ``body_pixels``."""
-    bw = W.BitWriter()
+    bw = LsbWriter()
     bw.write(0x2F, 8)
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
@@ -107,7 +108,7 @@ def _craft(w, h, header_writer, body_pixels):
     bw.write(0, 1)  # no meta prefix
     W._encode_groups_and_pixels(
         bw, [("lit", p) for p in body_pixels], 0, w)
-    return bw.bytes()
+    return bw.getvalue()
 
 
 def _argb(arr):
@@ -190,7 +191,7 @@ def test_meta_prefix_groups():
     proves per-tile group selection."""
     w = h = 8
     red, blue = 0xFFFF0000, 0xFF0000FF
-    bw = W.BitWriter()
+    bw = LsbWriter()
     bw.write(0x2F, 8)
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
@@ -216,7 +217,7 @@ def test_meta_prefix_groups():
     simple_group(bw, (blue >> 8) & 0xFF, (blue >> 16) & 0xFF,
                  blue & 0xFF, 0xFF)     # group 1: blue only
     # all codes are trivial (0 bits) -> the pixel loop reads nothing
-    out = W.decode_vp8l(bw.bytes())
+    out = W.decode_vp8l(bw.getvalue())
     exp = np.zeros((h, w, 4), np.uint8)
     exp[:, :4] = [255, 0, 0, 255]
     exp[:, 4:] = [0, 0, 255, 255]
@@ -256,7 +257,7 @@ def test_errors():
 def test_backref_oob_rejected():
     """A backward reference pointing before the first pixel must raise,
     not wrap."""
-    bw = W.BitWriter()
+    bw = LsbWriter()
     bw.write(0x2F, 8)
     bw.write(3, 14)   # 4x1
     bw.write(0, 14)
@@ -274,28 +275,28 @@ def test_backref_oob_rejected():
     # emit symbol 256: length code 0 (length 1), distance code 0 -> 1
     gc = W._build_codes(g)
     c, ln = gc[256]
-    bw.write(W._reverse_bits(c, ln), ln)
+    bw.write_code(c, ln)
     dc = W._build_codes([1, 1] + [0] * 38)
     c, ln = dc[0]
-    bw.write(W._reverse_bits(c, ln), ln)
+    bw.write_code(c, ln)
     with pytest.raises(ValueError):
-        W.decode_vp8l(bw.bytes())
+        W.decode_vp8l(bw.getvalue())
 
 
 def test_prefix_value_codes():
     """Spec examples of the LZ77 prefix-value scheme."""
-    bw = W.BitWriter()
+    bw = LsbWriter()
     bw.write(0b10, 2)  # extra bits for code 4 (1 extra bit): value 0
-    br = W.BitReader(bw.bytes())
+    br = LsbReader(bw.getvalue(), "VP8L")
     assert W._prefix_value(0, br) == 1
     assert W._prefix_value(3, br) == 4
     assert W._prefix_value(4, br) == 5      # consumes 1 extra bit (0)
     assert W._prefix_value(5, br) == 8      # 2+(1)<<1 + 1(extra) + 1
     for v in (1, 2, 3, 4, 5, 6, 7, 100, 4096):
         code, extra, nbits = W._prefix_encode(v)
-        bw2 = W.BitWriter()
+        bw2 = LsbWriter()
         bw2.write(extra, nbits)
-        assert W._prefix_value(code, W.BitReader(bw2.bytes())) == v
+        assert W._prefix_value(code, LsbReader(bw2.getvalue(), "VP8L")) == v
 
 
 def test_select_ties_go_to_top():
