@@ -16,11 +16,12 @@ calling codec's error prefix.
 
 Varints are LEB128 (protobuf, Avro, Thrift compact, ORC, Kafka, Snappy):
 7 bits per byte, low group first, high bit set on every byte but the
-last. ``read_uvarint`` refuses more than 10 bytes (the 64-bit maximum),
-so hostile input costs at most 10 byte reads. ``zigzag``/``unzigzag``
-map signed integers to unsigned ones and back (0, -1, 1, -2 -> 0, 1, 2,
-3) for every Python int, matching the int64 ``(n << 1) ^ (n >> 63)``
-form on the int64 range.
+last. ``read_uvarint`` refuses more than 10 bytes (the 64-bit maximum)
+unless the caller names a wider bound, so hostile input costs at most
+that many byte reads. ``zigzag``/``unzigzag`` map signed integers to
+unsigned ones and back (0, -1, 1, -2 -> 0, 1, 2, 3) for every Python
+int, matching the int64 ``(n << 1) ^ (n >> 63)`` form on the int64
+range.
 """
 
 from __future__ import annotations
@@ -249,11 +250,15 @@ class MsbWriter:
 # --------------------------------------------------------------------------
 
 
-def read_uvarint(data: bytes, pos: int, name: str) -> tuple[int, int]:
-    """One LEB128 varint at ``pos`` -> (value, next pos). At most 10
-    bytes are read; more, or running out of data, raises ValueError."""
+def read_uvarint(data: bytes, pos: int, name: str,
+                 max_bytes: int = 10) -> tuple[int, int]:
+    """One LEB128 varint at ``pos`` -> (value, next pos). At most
+    ``max_bytes`` bytes are read (10 fits any 64-bit value; a format with
+    wider integers passes its own bound); more, or running out of data,
+    raises ValueError."""
     result = 0
     shift = 0
+    limit = 7 * max_bytes
     end = len(data)
     while pos < end:
         b = data[pos]
@@ -262,8 +267,8 @@ def read_uvarint(data: bytes, pos: int, name: str) -> tuple[int, int]:
             return result | (b << shift), pos
         result |= (b & 0x7F) << shift
         shift += 7
-        if shift == 70:
-            raise ValueError(f"{name}: varint longer than 10 bytes")
+        if shift == limit:
+            raise ValueError(f"{name}: varint longer than {max_bytes} bytes")
     raise ValueError(f"{name}: truncated varint")
 
 

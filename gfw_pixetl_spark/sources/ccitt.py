@@ -30,6 +30,8 @@ kernels — nothing touches Spark.
 
 from __future__ import annotations
 
+from bisect import bisect_right
+
 import numpy as np
 
 from .bitio import MsbReader, MsbWriter
@@ -136,15 +138,29 @@ _MODE_V = {0: (0b1, 1), 1: (0b011, 3), 2: (0b000011, 6),
            3: (0b0000011, 7), -1: (0b010, 3), -2: (0b000010, 6),
            -3: (0b0000010, 7)}
 
-# decoder lookups: code with a 1 bit above it ((1 << length) | code),
-# which keys every (length, code) pair apart -> value
-_WHITE_DEC = {(1 << n) | c: run for run, (c, n) in _WHITE_CODES.items()}
-_BLACK_DEC = {(1 << n) | c: run for run, (c, n) in _BLACK_CODES.items()}
-_MODE_DEC = {(1 << n) | c: ("v", d) for d, (c, n) in _MODE_V.items()}
-_MODE_DEC[(1 << 4) | 0b0001] = ("pass", 0)
-_MODE_DEC[(1 << 3) | 0b001] = ("h", 0)
+# decoder lookups: a flat table over every _WIN-bit window holding the
+# (value, bit_length) of the code word the window starts with, or None.
+# The longest T.4/T.6 code word is 13 bits, so one lookup decodes any.
+_WIN = 14
+
+
+def _lookup(codes) -> list:
+    table: list = [None] * (1 << _WIN)
+    for value, (code, n) in codes.items():
+        span = 1 << (_WIN - n)
+        start = code << (_WIN - n)
+        table[start:start + span] = [(value, n)] * span
+    return table
+
+
+_WHITE_DEC = _lookup(_WHITE_CODES)
+_BLACK_DEC = _lookup(_BLACK_CODES)
+_MODE_CODES = {("v", d): cn for d, cn in _MODE_V.items()}
+_MODE_CODES[("pass", 0)] = _MODE_PASS
+_MODE_CODES[("h", 0)] = _MODE_HORIZ
 # EOFB prefix: 000000000001 (the V-code space never reaches 12 zeros)
-_MODE_DEC[(1 << 12) | 0b000000000001] = ("eol", 0)
+_MODE_CODES[("eol", 0)] = (0b000000000001, 12)
+_MODE_DEC = _lookup(_MODE_CODES)
 
 
 def _put_run(bits: MsbWriter, run: int, table) -> None:
@@ -220,21 +236,18 @@ class _EndOfStream(ValueError):
     """The bits ran out before a code word was complete."""
 
 
-def _read_code(rd: MsbReader, table, max_len: int = 14):
+def _read_code(rd: MsbReader, table):
     avail = rd.end - rd.pos
-    if avail > max_len:
-        avail = max_len
-    # the next avail bits under a 1 bit: the top `length` bits of the
-    # window are then a table key for every length
-    window = rd.read(avail) | (1 << avail)
-    for rest in range(avail - 1, -1, -1):
-        v = table.get(window >> rest)
-        if v is not None:
-            rd.pos -= rest
-            return v
-    if avail < max_len:
-        raise _EndOfStream("ccitt: truncated bitstream")
-    raise ValueError("invalid T.6 code word")
+    if avail > _WIN:
+        avail = _WIN
+    # the next avail bits, zero-padded to a full window
+    hit = table[rd.read(avail) << (_WIN - avail)]
+    if hit is None or hit[1] > avail:
+        if avail < _WIN:
+            raise _EndOfStream("ccitt: truncated bitstream")
+        raise ValueError("invalid T.6 code word")
+    rd.pos -= avail - hit[1]
+    return hit[0]
 
 
 def _read_run(rd: MsbReader, white: bool) -> int:
@@ -255,6 +268,11 @@ def g4_decode(data: bytes, width: int, height: int) -> np.ndarray:
     out = np.zeros((height, width), dtype=bool)
     ref: list[int] = []
     for r in range(height):
+        # b1 is the first changing element of the reference line right of
+        # a0 with the opposite colour. Every well-formed stream has a
+        # sorted reference line, where bisection finds it; a malformed
+        # one keeps the linear scan.
+        ref_sorted = all(x <= y for x, y in zip(ref, ref[1:]))
         cur: list[int] = []
         a0 = -1
         color_white = True
@@ -268,9 +286,14 @@ def g4_decode(data: bytes, width: int, height: int) -> np.ndarray:
             if mode == "eol":
                 break
             want = 0 if color_white else 1
-            bi = 0
-            while bi < len(ref) and (ref[bi] <= a0 or bi % 2 != want):
-                bi += 1
+            if ref_sorted:
+                bi = bisect_right(ref, a0)
+                if bi % 2 != want:
+                    bi += 1
+            else:
+                bi = 0
+                while bi < len(ref) and (ref[bi] <= a0 or bi % 2 != want):
+                    bi += 1
             b1 = ref[bi] if bi < len(ref) else width
             b2 = ref[bi + 1] if bi + 1 < len(ref) else width
             if mode == "pass":

@@ -30,6 +30,7 @@ same way sources/deltalog.py and sources/iceberg.py do.
 
 from __future__ import annotations
 
+import decimal
 import struct
 import zlib
 from typing import Any, Iterable
@@ -569,6 +570,13 @@ def decode_int_stats(blob: bytes) -> dict[str, Any]:
 _TS_BASE = 1420070400  # 2015-01-01 00:00:00 UTC, the ORC timestamp epoch
 
 
+# DECIMAL mantissas have up to 38 digits: |m| < 10**38 < 2**127, so the
+# zigzag is below 2**128 and its varint at most 19 bytes. Scaling them
+# needs a context wider than decimal's default 28 digits.
+_DEC_VARINT_BYTES = 19
+_DEC_EXACT = decimal.Context(prec=decimal.MAX_PREC)
+
+
 class OrcColumn:
     def __init__(self, name: str, kind: int, precision: int = 18,
                  scale: int = 2) -> None:
@@ -655,14 +663,15 @@ def _encode_column(kind: int, values: list, compression: int,
         streams.append((S_SECONDARY, int_enc(nanos, signed=False)))
         stats = _generic_stats(values)
     elif kind == K_DECIMAL:
-        # DATA: unbounded zigzag-varint mantissas (one varint per
-        # value, NOT run-length encoded); SECONDARY: per-value scale.
-        from decimal import Decimal
-
+        # DATA: zigzag-varint mantissas of up to 38 digits (one varint
+        # per value, NOT run-length encoded); SECONDARY: per-value scale.
         body = bytearray()
         for v in present_vals:
-            q = Decimal(str(v)).scaleb(scale)
-            write_uvarint(body, zigzag(int(q)))
+            m = int(decimal.Decimal(str(v)).scaleb(scale, _DEC_EXACT))
+            if abs(m) >= 10 ** 38:
+                raise ValueError(
+                    f"orc: decimal {v} needs more than 38 digits")
+            write_uvarint(body, zigzag(m))
         streams.append((S_DATA, bytes(body)))
         streams.append((S_SECONDARY, int_enc(
             [scale] * len(present_vals), signed=True)))
@@ -971,18 +980,16 @@ class OrcFile:
                 out.append(abs_s * 1_000_000 + nanos // 1000)
             return out
         if kind == K_DECIMAL:
-            from decimal import Decimal
-
             raw = self._stream_bytes(specs[S_DATA])
             p = 0
             mants = []
             for _ in range(nv):
-                m, p = read_uvarint(raw, p, "orc")
+                m, p = read_uvarint(raw, p, "orc", _DEC_VARINT_BYTES)
                 mants.append(unzigzag(m))
             scales = int_rle_decode(
                 self._stream_bytes(specs[S_SECONDARY]), nv, True,
                 rle_ver)
-            return [Decimal(m).scaleb(-sc)
+            return [decimal.Decimal(m).scaleb(-sc, _DEC_EXACT)
                     for m, sc in zip(mants, scales)]
         if kind in (K_STRING, K_BINARY, K_VARCHAR, K_CHAR):
             if enc in (E_DICTIONARY, E_DICTIONARY_V2):

@@ -389,6 +389,13 @@ def _w_field(last_fid: int, fid: int, ctype: int) -> bytes:
     return bytes(out)
 
 
+def _w_binary(v: bytes) -> bytes:
+    """Thrift-compact binary: the varint length, then the bytes."""
+    out = bytearray()
+    write_uvarint(out, len(v))
+    return bytes(out + v)
+
+
 class _StructW:
     """Thrift-compact struct writer (fields must be added in id order)."""
 
@@ -409,9 +416,7 @@ class _StructW:
         return self
 
     def s(self, fid: int, v: bytes) -> "_StructW":
-        self.buf += _w_field(self.last, fid, _CT_BINARY)
-        write_uvarint(self.buf, len(v))
-        self.buf += v
+        self.buf += _w_field(self.last, fid, _CT_BINARY) + _w_binary(v)
         self.last = fid
         return self
 
@@ -553,14 +558,10 @@ def write_parquet(path: str, columns: list[PColumn],
             if present and col.ptype != "BOOLEAN":
                 stats.s(5, _stat_bytes(col.ptype, max(present)))
                 stats.s(6, _stat_bytes(col.ptype, min(present)))
-            name = bytearray()
-            write_uvarint(name, len(col.name.encode()))
-            name += col.name.encode()
             md = (_StructW()
                   .i(1, _W_TYPES[col.ptype], wide=False)
-                  # encodings PLAIN (0) and RLE (3): one-byte zigzag i32s
-                  .lst(2, _CT_I32, [bytes([zigzag(0)]), bytes([zigzag(3)])])
-                  .lst(3, _CT_BINARY, [bytes(name)])
+                  .lst(2, _CT_I32, [b"\x00", b"\x06"])  # PLAIN, RLE
+                  .lst(3, _CT_BINARY, [_w_binary(col.name.encode())])
                   .i(4, codec_id, wide=False)
                   .i(5, len(vals))
                   .i(6, len(header) + len(raw))

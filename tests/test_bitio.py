@@ -213,6 +213,16 @@ def test_uvarint_refuses_more_than_ten_bytes():
         read_uvarint(b"\x80" * 10 + b"\x01", 0, "codec")
 
 
+def test_uvarint_wider_bound():
+    # ORC decimal mantissas: the zigzag of a 38-digit value, 19 bytes
+    blob = bytearray()
+    write_uvarint(blob, 2**128 - 1)
+    assert len(blob) == 19
+    assert read_uvarint(blob, 0, "codec", 19) == (2**128 - 1, 19)
+    with pytest.raises(ValueError, match="codec: varint longer than 19"):
+        read_uvarint(b"\x80" * 19 + b"\x01", 0, "codec", 19)
+
+
 # --- hostile varints through the codec paths that read them --------------
 
 _RUN = b"\xff" * 100_000 + b"\x01"  # one 700,000-bit varint

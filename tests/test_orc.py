@@ -353,3 +353,27 @@ def test_decimal_roundtrip_and_interop(spark, tmp_path):
     po.write_table(
         pa.table({"d": pa.array(vals, pa.decimal128(18, 2))}), p2)
     assert o.read_orc(p2)["d"] == vals
+
+
+def test_decimal38_wide_mantissas_roundtrip(tmp_path):
+    # DECIMAL(38, s) mantissas need up to 19 varint bytes and more than
+    # the 28 digits of decimal's default context
+    from decimal import Decimal
+
+    vals = [Decimal("123456789012.0123456789"),
+            Decimal("-9999999999999999999999999999.9999999999"),
+            Decimal("1234567890123456789012345678.0123456789"),
+            None, Decimal("0E-10")]
+    p = str(tmp_path / "d.orc")
+    o.write_orc(p, [o.OrcColumn("d", o.K_DECIMAL, 38, 10)],
+                [(v,) for v in vals])
+    assert o.read_orc(p)["d"] == vals
+    assert po.read_table(p).column("d").to_pylist() == vals
+    p2 = str(tmp_path / "d2.orc")
+    po.write_table(
+        pa.table({"d": pa.array(vals, pa.decimal128(38, 10))}), p2)
+    assert o.read_orc(p2)["d"] == vals
+    with pytest.raises(ValueError, match="more than 38 digits"):
+        o.write_orc(str(tmp_path / "bad.orc"),
+                    [o.OrcColumn("d", o.K_DECIMAL, 38, 0)],
+                    [(Decimal(10 ** 38),)])

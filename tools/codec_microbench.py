@@ -2,10 +2,11 @@
 ``sources/bitio.py`` (bit streams and varints).
 
 For each codec it builds a payload from ``--seed``, then times its
-encoder and decoder ``--reps`` times each in this one process (no
-Spark, no worker pool) and reports the median milliseconds. It also
-reports the md5 of the encoder's output and of the decoder's result,
-so two checkouts can be compared for byte identity as well as speed.
+encoder and decoder ``--reps`` times each, after 8 warm-up calls, in
+this one process (no Spark, no worker pool) and reports the median
+milliseconds. It also reports the md5 of the encoder's output and of
+the decoder's result, so two checkouts can be compared for byte
+identity as well as speed.
 
 Usage:
     python tools/codec_microbench.py [--reps N] [--seed S] [codec ...]
@@ -249,8 +250,18 @@ CODECS = {
 }
 
 
+# CPython 3.11 specialises a function's bytecode once its calls and
+# unconditional backward jumps together reach 8. A function whose
+# only loop is ``while cond:`` (snappy's ``compress``) reaches that by
+# calls alone, so the timed reps start after 8 warm-up calls: the state
+# a codec called once per block or page runs in.
+_WARMUP_CALLS = 8
+
+
 def _time(fn, reps: int) -> tuple[float, object]:
-    out = fn()  # warm-up; its result is the one hashed
+    out = fn()  # its result is the one hashed
+    for _ in range(_WARMUP_CALLS - 1):
+        fn()
     times = []
     for _ in range(reps):
         t0 = time.perf_counter()
