@@ -15,7 +15,9 @@ tiles produced on different executors must align exactly
 
 from __future__ import annotations
 
+import bisect
 import contextlib
+import functools
 import math
 from dataclasses import dataclass
 from typing import Iterator
@@ -88,6 +90,23 @@ class Grid:
 
     def get_tile_bounds(self, tile_id: str) -> BoundingBox:
         raise NotImplementedError
+
+    def overlapping_tile_ids(self, footprint: BoundingBox) -> list[str]:
+        """Ids of the tiles that strictly overlap ``footprint``
+        (:meth:`BoundingBox.intersects` of the tile's
+        :meth:`get_tile_bounds`), in ``(row, col)`` order from the top
+        left. Each axis is two bisections over its ascending tile edges,
+        so the cost is the number of ids returned plus four log-time
+        searches, whatever the grid's size."""
+        raise NotImplementedError
+
+
+def _axis_span(edges, lo_key, hi_key, lo: float, hi: float) -> range:
+    """Indices ``i`` of an axis whose open interval
+    ``(lo_key(edges[i]), hi_key(edges[i]))`` overlaps ``(lo, hi)``:
+    both keys ascend along ``edges``."""
+    return range(bisect.bisect_right(edges, lo, key=hi_key),
+                 bisect.bisect_left(edges, hi, key=lo_key))
 
 
 class LatLngGrid(Grid):
@@ -178,7 +197,10 @@ class LatLngGrid(Grid):
         return lat
 
     def xy_to_tile_id(self, x: float, y: float) -> str:
-        lng, lat = self.xy_to_tile_origin(x, y)
+        return self._format_tile_id(*self.xy_to_tile_origin(x, y))
+
+    @staticmethod
+    def _format_tile_id(lng: int, lat: int) -> str:
         ew = f"{lng:03d}E" if lng >= 0 else f"{-lng:03d}W"
         ns = f"{lat:02d}N" if lat >= 0 else f"{-lat:02d}S"
         return f"{ns}_{ew}"
@@ -218,6 +240,20 @@ class LatLngGrid(Grid):
 
         xs, ys = self._seed_lattice()
         return snap_axis(self._origin_lng, xs), snap_axis(self._origin_lat, ys)
+
+    @functools.cached_property
+    def _origin_axes(self) -> tuple[tuple[int, ...], tuple[int, ...]]:
+        return tuple(tuple(axis) for axis in self.tile_origin_axes())
+
+    def overlapping_tile_ids(self, footprint: BoundingBox) -> list[str]:
+        lngs, lats = self._origin_axes
+        w, h = self.width, self.height
+        cols = _axis_span(lngs, lambda x: x, lambda x: x + w,
+                          footprint.left, footprint.right)
+        rows = _axis_span(lats, lambda y: y - h, lambda y: y,
+                          footprint.bottom, footprint.top)
+        return [self._format_tile_id(lngs[c], lats[r])
+                for r in reversed(rows) for c in cols]
 
     def get_tile_ids(self) -> set[str]:
         """All tile ids (``lat_lng_grid.py:119-141``): seed lattice of
@@ -279,6 +315,22 @@ class WebMercatorGrid(Grid):
         return {
             f"{r:03d}R_{c:03d}C" for r in range(side) for c in range(side)
         }
+
+    def overlapping_tile_ids(self, footprint: BoundingBox) -> list[str]:
+        # the edge expressions of get_tile_bounds; rows are indexed from
+        # the bottom here (row = side - 1 - i) so that both keys ascend
+        side = int(math.sqrt(self.nb_tiles))
+        b = self.bounds
+        tile_w = (b.right - b.left) / side
+        tile_h = (b.top - b.bottom) / side
+        cols = _axis_span(range(side), lambda c: b.left + c * tile_w,
+                          lambda c: b.left + (c + 1) * tile_w,
+                          footprint.left, footprint.right)
+        rows = _axis_span(range(side), lambda i: b.top - (side - i) * tile_h,
+                          lambda i: b.top - (side - 1 - i) * tile_h,
+                          footprint.bottom, footprint.top)
+        return [f"{side - 1 - i:03d}R_{c:03d}C"
+                for i in reversed(rows) for c in cols]
 
     def get_tile_bounds(self, tile_id: str) -> BoundingBox:
         side = int(math.sqrt(self.nb_tiles))

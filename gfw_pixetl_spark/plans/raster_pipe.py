@@ -4,39 +4,45 @@ SURVEY §3.1/§3.4).
 
 Dataflow (one linear plan, lazy until the status frame is consumed):
 
-    seed tiles (F1, spark.range + column math)  ->  subset filter (F2)
-    ->  target-exists anti-join (F5)  ->  broadcast join to the
-    intersecting source files of a local-relation catalog, which is also
-    the source-intersects prune (F3/F6)  ->  windows explode
-    (block-aligned, P5 replaced by fixed sizing)  ->  hash partition by
-    tile  ->  groupBy(tile_id) tile job: per window {read S4, empty-block
-    check F8, calc C1, cast+nodata C3} into the tile array, then the sink
-    (S8) that decides the tile's status (F9/F10)  ->  manifest (S10)
+    driver tile plan (:func:`plan_tiles`): F1 seed, F2 subset, F3
+    source-intersects prune, F5 target-exists skip and F6 per-tile file
+    lists, from the footprints the driver already holds, as a local
+    relation of one row per kept tile  ->  mapInPandas tile job: per
+    tile, per window {read S4, empty-block check F8, calc C1,
+    cast+nodata C3} into the tile array, then the sink (S8) that decides
+    the tile's status (F9/F10)  ->  manifest (S10)
 
-Everything before the tile job runs in the JVM: it is the only stage that
-starts a Python worker (each such stage costs ~0.2-0.3 s of fixed
-overhead on a 4-vCPU host before it does any work).
+The executed plan is ``LocalTableScan -> MapInPandas(tile_job)``: no
+exchange and one Python stage (each Python stage costs ~0.2-0.3 s of
+fixed overhead on a 4-vCPU host before it does any work). The scan
+splits k tiles into min(k, defaultParallelism) tasks, so up to that many
+tiles each run in their own task, and a tile is one row, so it has one
+writer by construction.
 
-Scale notes. Tiles and windows are metadata rows (a few dozen bytes), and
-only they shuffle: each tile job reads its windows one at a time straight
-into the tile array, so a task holds one tile plus one window and no
-pixel crosses an exchange. A 40000^2 tile is 10000 window rows, never one
-row. The file catalog is broadcast (it is tiny relative to pixel data),
-making the spatial prune map-only. The payload path
-(``transform_windows`` -> ``write_tiles``) runs the same window kernel
-and tile sink with the window arrays as Arrow rows between them; it is
-the vector pipe's sink and the tap that measures per-window volume, and
-its kernel re-chunks its output by bytes to stay under Arrow's 2 GB limit
-(SURVEY §7.4-4).
+Scale notes. The reference seeds and prunes its tile list on the driver
+too (``pipes/pipe.py:55-63``); here each footprint asks the grid for the
+tiles it overlaps (:meth:`Grid.overlapping_tile_ids`), so the driver
+plan is O(kept tiles + file x tile overlaps) and never enumerates the
+grid: the order of the per-tile status rows the report collects anyway.
+Each tile job reads its windows one at a time straight into the tile
+array, so a task holds one tile plus one window and no window row or
+pixel crosses an exchange. The Spark-side planners (:func:`seed_tiles`,
+:func:`prune_tiles`, :func:`tile_files`, :func:`plan_windows`) stay for
+whole-grid frames: the vector pipe, streaming, the grid queries and the
+payload path. The payload path (``transform_windows`` ->
+``write_tiles``) runs the same window kernel and tile sink with the
+window arrays as Arrow rows between them; it is the vector pipe's sink
+and the tap that measures per-window volume, and its kernel re-chunks
+its output by bytes to stay under Arrow's 2 GB limit (SURVEY §7.4-4).
 """
-
 from __future__ import annotations
 
 import io
 import json
 import os
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -44,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.calc import apply_calc, block_has_data, set_datatype
-from ..grids import Grid
+from ..grids import BoundingBox, Grid
 from ..models import LayerModel
 from ..session import local_frame
 from ..sources.geotiff import write_cog
@@ -58,6 +64,11 @@ WINDOW_PAYLOAD_COLS = [
 WINDOW_PAYLOAD_SCHEMA = (
     "tile_id string, row_off int, col_off int, height int, width int, "
     "bands int, dtype string, valid_pixels long, payload binary"
+)
+
+TILE_PLAN_SCHEMA = (
+    "tile_id string, tile_left double, tile_bottom double, "
+    "tile_right double, tile_top double, uris array<string>"
 )
 
 STATUS_COLS = ["tile_id", "status", "n_windows", "out_path"]
@@ -176,6 +187,12 @@ def tile_files(tiles: DataFrame, catalog: DataFrame) -> DataFrame:
     )
 
 
+def _window_grid(grid: Grid, blocks_per_window: int) -> tuple[int, int]:
+    """Window side in pixels and windows per tile side."""
+    win = grid.blockxsize * blocks_per_window
+    return win, (grid.cols + win - 1) // win
+
+
 def plan_windows(
     tiles_with_files: DataFrame, grid: Grid, blocks_per_window: int = 1
 ) -> DataFrame:
@@ -185,8 +202,7 @@ def plan_windows(
     Window size = blocks_per_window * block size on each axis; pure column
     math (sequence + explode), no UDF, no driver loop.
     """
-    win = grid.blockxsize * blocks_per_window
-    n = (grid.cols + win - 1) // win
+    win, n = _window_grid(grid, blocks_per_window)
     idx = F.explode(F.sequence(F.lit(0), F.lit(n * n - 1))).alias("widx")
     out = tiles_with_files.select("*", idx)
     wrow = (F.col("widx") / n).cast("int")
@@ -203,6 +219,74 @@ def plan_windows(
         height.cast("int").alias("height"),
         width.cast("int").alias("width"),
     )
+
+
+def plan_tiles(
+    spark: SparkSession,
+    grid: Grid,
+    files: list[dict],
+    subset: list[str] | None = None,
+    existing_tile_ids: list[str] | None = None,
+) -> DataFrame:
+    """F1 seed, F2 subset, F3 prune, F5 target-exists and F6 file lists,
+    planned on the driver from the lists it already holds: one
+    ``TILE_PLAN_SCHEMA`` row per kept tile, as a local relation (a
+    ``LocalTableScan``, no Python worker, no exchange).
+
+    Each footprint asks the grid for the tiles it strictly overlaps
+    (:meth:`Grid.overlapping_tile_ids`, :func:`_overlap`'s predicate), so
+    the driver does O(kept tiles + file x tile overlaps) work — the
+    order of the status rows the report collects anyway — and never
+    enumerates the grid. The rows equal
+    ``tile_files(select_tiles(seed_tiles(...), subset, existing), catalog)``:
+    bounds from :meth:`Grid.get_tile_bounds` (``seed_tiles``' double
+    expressions) and ``uris`` ordered by ``(band, uri)``, duplicates
+    kept. Rows are in tile-id order.
+    """
+    keep = set(subset) if subset else None
+    skip = set(existing_tile_ids or ())
+    per_tile: dict[str, list[tuple[int, str]]] = {}
+    for f in files:
+        footprint = BoundingBox(float(f["left"]), float(f["bottom"]),
+                                float(f["right"]), float(f["top"]))
+        for tid in grid.overlapping_tile_ids(footprint):
+            per_tile.setdefault(tid, []).append(
+                (int(f.get("band", 1)), f["uri"]))
+    rows = []
+    for tid in sorted(per_tile):
+        if (keep is not None and tid not in keep) or tid in skip:
+            continue
+        b = grid.get_tile_bounds(tid)
+        rows.append((tid, b.left, b.bottom, b.right, b.top,
+                     [uri for _, uri in sorted(per_tile[tid])]))
+    return local_frame(spark, rows, TILE_PLAN_SCHEMA)
+
+
+def window_layout(
+    grid: Grid, blocks_per_window: int = 1
+) -> list[tuple[int, int, int, int]]:
+    """``(row_off, col_off, height, width)`` of every window of a tile,
+    in ``(row_off, col_off)`` order: the rows :func:`plan_windows`
+    explodes for each tile."""
+    win, n = _window_grid(grid, blocks_per_window)
+    return [
+        (r * win, c * win, min(win, grid.rows - r * win),
+         min(win, grid.cols - c * win))
+        for r in range(n) for c in range(n)
+    ]
+
+
+class _Window(NamedTuple):
+    """One window of a tile, as :meth:`RasterPipe._window_transform`
+    reads it (the fields of a :func:`plan_windows` row it uses)."""
+
+    tile_left: float
+    tile_top: float
+    uris: Sequence[str]
+    row_off: int
+    col_off: int
+    height: int
+    width: int
 
 
 def _tile_writer(layer: LayerModel, grid: Grid, work_dir: str):
@@ -410,32 +494,39 @@ class RasterPipe:
 
         return _transform_window
 
-    def tile_jobs(self, windows: DataFrame) -> DataFrame:
-        """The production tile stage: one group per tile reads, calcs
-        and casts each planned window (in ``(row_off, col_off)``
-        order) straight into the tile array, then encodes, profiles and
-        writes the tile — the reference's one worker per tile with
-        in-memory window merge (``pipes/raster_pipe.py:43-52``,
-        ``tiles/raster_src_tile.py:212-298``). Only window metadata
-        shuffles, hash-partitioned by tile to an explicit count (the
-        session's shuffle partitions): the group reuses that
-        partitioning with no second exchange, and AQE cannot coalesce
-        the metadata-sized exchange into one task that would run every
-        tile in turn."""
+    def tile_jobs(self, tiles: DataFrame) -> DataFrame:
+        """The production tile stage: a ``mapInPandas`` over a tile frame
+        (``TILE_PLAN_SCHEMA``: :func:`plan_tiles`, or :func:`tile_files`
+        over a Spark-planned tile set) that, for each tile row, reads,
+        calcs and casts the tile's windows (:func:`window_layout`, in
+        ``(row_off, col_off)`` order) straight into the tile array, then
+        encodes, profiles and writes the tile — the reference's one
+        worker per tile with in-memory window merge
+        (``pipes/raster_pipe.py:43-52``,
+        ``tiles/raster_src_tile.py:212-298``). A tile is one row, so each
+        tile has a single writer by construction, and no window row is
+        materialised or shuffled. Over :func:`plan_tiles`' local
+        relation no exchange runs at all: the scan splits its k tiles
+        into min(k, defaultParallelism) tasks."""
         transform = self._window_transform()
         write_tile = _tile_writer(self.layer, self.grid_obj, self.work_dir)
+        layout = window_layout(self.grid_obj, self.blocks_per_window)
 
-        def tile_job(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(["row_off", "col_off"])
-            row = write_tile(pdf["tile_id"].iloc[0], (
-                (r.row_off, r.col_off, *transform(r)[:2])
-                for r in pdf.itertuples(index=False)
-            ))
-            return pd.DataFrame([row], columns=STATUS_COLS)
+        def windows(t) -> Iterator[tuple]:
+            for cell in layout:
+                w = _Window(t.tile_left, t.tile_top, t.uris, *cell)
+                yield (w.row_off, w.col_off, *transform(w)[:2])
 
-        n = int(windows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        return (windows.repartition(n, "tile_id").groupBy("tile_id")
-                .applyInPandas(tile_job, STATUS_SCHEMA))
+        def tile_job(
+            batches: Iterator[pd.DataFrame],
+        ) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                rows = [write_tile(t.tile_id, windows(t))
+                        for t in pdf.itertuples(index=False)]
+                if rows:
+                    yield pd.DataFrame(rows, columns=STATUS_COLS)
+
+        return tiles.mapInPandas(tile_job, STATUS_SCHEMA)
 
     def transform_windows(self, windows: DataFrame) -> DataFrame:
         """The window kernel alone, as a mapInPandas stage emitting the
@@ -496,24 +587,21 @@ class RasterPipe:
         """Full pipeline; returns the per-tile status DataFrame (F10).
 
         Statuses mirror ``pipes/pipe.py:137-162``: processed / skipped
-        (has no data) / failed, all decided by the tile job. Tiles
-        outside ``subset`` and ``existing`` tiles are filtered out before
-        any work and get no status row. ``existing`` takes a tile_id
-        DataFrame directly (e.g. ``object_store.existing_tiles``);
-        ``existing_tile_ids`` is the list-literal convenience.
+        (has no data) / failed, all decided by the tile job. The tile set
+        is planned on the driver (:func:`plan_tiles`) and runs as one
+        ``mapInPandas`` tile job (:meth:`tile_jobs`) with no exchange.
+        Tiles outside ``subset`` and ``existing`` tiles are filtered out
+        before any work and get no status row: ``subset`` and
+        ``existing_tile_ids`` on the driver, while ``existing`` takes a
+        tile_id DataFrame (e.g. ``object_store.existing_tiles``), which
+        :func:`select_tiles` anti-joins onto the local tile relation and
+        which then wins over ``existing_tile_ids``.
         """
-        grid = self.grid_obj
-        tiles = seed_tiles(spark, grid)
-        catalog = file_catalog(spark, files)
-        if existing is None and existing_tile_ids:
-            existing = local_frame(
-                spark, [(t,) for t in existing_tile_ids], "tile_id string")
-        # tile_files' inner join is the F3 prune; a semi join ahead of it
-        # would only add a broadcast job
-        windows = plan_windows(
-            tile_files(select_tiles(tiles, subset, existing), catalog),
-            grid, self.blocks_per_window)
-        return self.tile_jobs(windows)
+        if existing is not None:
+            existing_tile_ids = None
+        tiles = plan_tiles(spark, self.grid_obj, files, subset,
+                           existing_tile_ids)
+        return self.tile_jobs(select_tiles(tiles, existing=existing))
 
     def publish(
         self,

@@ -313,8 +313,68 @@ def read_header(data: bytes) -> tuple[dict, dict, bytes, int]:
         raise ValueError("avro: truncated sync marker")
     if "avro.schema" not in meta:
         raise ValueError("avro: missing avro.schema in metadata")
-    schema = json.loads(meta["avro.schema"])
+    try:
+        schema = json.loads(meta["avro.schema"])
+    except RecursionError:
+        raise ValueError("avro: schema JSON nests too deep") from None
+    check_schema(schema)
     return schema, meta, sync, pos + 16
+
+
+# Schema nesting bound: far past any real schema, well inside Python's
+# recursion limit for decode_value.
+_MAX_SCHEMA_DEPTH = 64
+
+
+def check_schema(schema, depth: int = 0) -> None:
+    """Refuse, with ValueError, a parsed schema that lacks a key
+    ``decode_value`` reads: ``type`` on every object, ``name`` and
+    ``fields`` (each with ``name`` and ``type``) on records, ``name``
+    and ``symbols`` on enums, ``name`` and ``size`` on fixed,
+    ``items``/``values`` on arrays/maps. Type names are not resolved
+    here; an unknown one raises when a value is decoded."""
+    if depth > _MAX_SCHEMA_DEPTH:
+        raise ValueError(
+            f"avro: schema nests deeper than {_MAX_SCHEMA_DEPTH}")
+    if isinstance(schema, str):
+        return
+    if isinstance(schema, list):
+        for branch in schema:
+            check_schema(branch, depth + 1)
+        return
+
+    def bad(what: str):
+        return ValueError(f"avro: malformed schema, {what}: {schema!r:.80}")
+
+    if not isinstance(schema, dict) or "type" not in schema:
+        raise bad("no type")
+    t = schema["type"]
+    if t in ("record", "enum", "fixed") and not isinstance(
+            schema.get("name"), str):
+        raise bad(f"{t} without a name")
+    if t == "record":
+        fields = schema.get("fields")
+        if not isinstance(fields, list):
+            raise bad("record without fields")
+        for f in fields:
+            if not (isinstance(f, dict) and isinstance(f.get("name"), str)
+                    and "type" in f):
+                raise bad("record field without a name or type")
+            check_schema(f["type"], depth + 1)
+    elif t == "enum":
+        symbols = schema.get("symbols")
+        if not (isinstance(symbols, list)
+                and all(isinstance(x, str) for x in symbols)):
+            raise bad("enum without symbols")
+    elif t == "fixed":
+        size = schema.get("size")
+        if type(size) is not int or size < 0:
+            raise bad("fixed without a size")
+    elif t in ("array", "map"):
+        key = "items" if t == "array" else "values"
+        if key not in schema:
+            raise bad(f"{t} without {key}")
+        check_schema(schema[key], depth + 1)
 
 
 def _inflate_block(blob: bytes, codec: str) -> bytes:

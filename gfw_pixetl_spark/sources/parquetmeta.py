@@ -70,57 +70,86 @@ REPETITION = {0: "REQUIRED", 1: "OPTIONAL", 2: "REPEATED"}
 # Thrift compact protocol — generic decoder
 # --------------------------------------------------------------------------
 
-def _read_value(buf: bytes, pos: int, ctype: int) -> tuple[Any, int]:
+# Nesting bound for structs and containers: FileMetaData nests about 6
+# deep, and a hostile footer must not reach Python's recursion limit.
+_MAX_DEPTH = 64
+
+
+def _byte(buf: bytes, pos: int) -> int:
+    if pos >= len(buf):
+        raise ValueError(f"parquet: footer truncated at byte {pos}")
+    return buf[pos]
+
+
+def _take(buf: bytes, pos: int, n: int) -> int:
+    """End of the ``n`` bytes at ``pos``, which must lie in ``buf``."""
+    if n > len(buf) - pos:
+        raise ValueError(
+            f"parquet: {n}-byte field at byte {pos} overruns the footer")
+    return pos + n
+
+
+def _read_value(buf: bytes, pos: int, ctype: int,
+                depth: int = 0) -> tuple[Any, int]:
     if ctype in (_CT_TRUE, _CT_FALSE):
         # Inside containers booleans occupy one byte (1=true, 2=false).
-        v = buf[pos]
-        return v == 1, pos + 1
+        return _byte(buf, pos) == 1, pos + 1
     if ctype == _CT_BYTE:
-        v = buf[pos]
+        v = _byte(buf, pos)
         return v - 256 if v >= 128 else v, pos + 1
     if ctype in (_CT_I16, _CT_I32, _CT_I64):
         n, pos = read_uvarint(buf, pos, "parquet")
         return unzigzag(n), pos
     if ctype == _CT_DOUBLE:
-        return struct.unpack_from("<d", buf, pos)[0], pos + 8
+        end = _take(buf, pos, 8)
+        return struct.unpack_from("<d", buf, pos)[0], end
     if ctype == _CT_BINARY:
         n, pos = read_uvarint(buf, pos, "parquet")
-        return bytes(buf[pos:pos + n]), pos + n
+        end = _take(buf, pos, n)
+        return bytes(buf[pos:end]), end
+    if depth >= _MAX_DEPTH:
+        raise ValueError(f"parquet: footer nests deeper than {_MAX_DEPTH}")
     if ctype in (_CT_LIST, _CT_SET):
-        header = buf[pos]
+        header = _byte(buf, pos)
         pos += 1
         size = header >> 4
         etype = header & 0x0F
         if size == 15:
             size, pos = read_uvarint(buf, pos, "parquet")
+        _take(buf, pos, size)  # every element takes at least one byte
         out = []
         for _ in range(size):
-            v, pos = _read_value(buf, pos, etype)
+            v, pos = _read_value(buf, pos, etype, depth + 1)
             out.append(v)
         return out, pos
     if ctype == _CT_MAP:
         size, pos = read_uvarint(buf, pos, "parquet")
         out = {}
         if size:
-            kv = buf[pos]
+            kv = _byte(buf, pos)
             pos += 1
+            _take(buf, pos, 2 * size)
             ktype, vtype = kv >> 4, kv & 0x0F
             for _ in range(size):
-                k, pos = _read_value(buf, pos, ktype)
-                v, pos = _read_value(buf, pos, vtype)
-                out[k] = v
+                k, pos = _read_value(buf, pos, ktype, depth + 1)
+                v, pos = _read_value(buf, pos, vtype, depth + 1)
+                try:
+                    out[k] = v
+                except TypeError:  # a container key
+                    raise ValueError("parquet: unhashable map key") from None
         return out, pos
     if ctype == _CT_STRUCT:
-        return _read_struct(buf, pos)
+        return _read_struct(buf, pos, depth + 1)
     raise ValueError(f"unknown thrift compact type {ctype} at {pos}")
 
 
-def _read_struct(buf: bytes, pos: int) -> tuple[dict[int, Any], int]:
+def _read_struct(buf: bytes, pos: int,
+                 depth: int = 0) -> tuple[dict[int, Any], int]:
     """Decode one struct into {field_id: value} (booleans inline)."""
     fields: dict[int, Any] = {}
     last_fid = 0
     while True:
-        b = buf[pos]
+        b = _byte(buf, pos)
         pos += 1
         if b == _CT_STOP:
             return fields, pos
@@ -137,7 +166,7 @@ def _read_struct(buf: bytes, pos: int) -> tuple[dict[int, Any], int]:
         elif ctype == _CT_FALSE:
             fields[fid] = False
         else:
-            fields[fid], pos = _read_value(buf, pos, ctype)
+            fields[fid], pos = _read_value(buf, pos, ctype, depth)
     # unreachable
 
 
@@ -203,8 +232,20 @@ def _map_schema_element(raw: dict[int, Any]) -> dict[str, Any]:
 
 
 def decode_footer(footer: bytes) -> dict[str, Any]:
-    """Decode a raw FileMetaData thrift blob into plain dicts."""
+    """Decode a raw FileMetaData thrift blob into plain dicts. A footer
+    that is truncated, overruns itself or does not have FileMetaData's
+    shape raises ValueError."""
     raw, _ = _read_struct(footer, 0)
+    try:
+        return _map_file_metadata(raw)
+    except (AttributeError, KeyError, TypeError) as e:
+        # the compact protocol is self-describing, not schema-checked: a
+        # field of the wrong wire type (an int where a struct or list
+        # belongs) surfaces as a shape error in the mapping
+        raise ValueError(f"parquet: malformed FileMetaData ({e})") from None
+
+
+def _map_file_metadata(raw: dict[int, Any]) -> dict[str, Any]:
     return {
         "version": raw.get(1),
         "schema": [_map_schema_element(s) for s in raw.get(2, [])],

@@ -137,6 +137,53 @@ def test_hostile_inputs_raise_cleanly():
         encode_value(["null", "string"], 3.5, out)
 
 
+def test_damaged_schema_raises_value_error():
+    """Seeded fuzz: one flipped bit anywhere in a container (the schema
+    JSON included) either still decodes or raises ValueError from the
+    strict reader, and never escapes the lenient scan."""
+    import json
+    import random
+
+    from gfw_pixetl_spark.sources.avro import MAGIC, check_schema
+
+    blob = write_container(_recs(20), REC, codec="null")
+    rng = random.Random(20261019)
+    raised = 0
+    for _ in range(400):
+        b = bytearray(blob)
+        k = rng.randrange(len(b) * 8)
+        b[k // 8] ^= 1 << (k % 8)
+        try:
+            list(iter_container(bytes(b)))
+        except ValueError:
+            raised += 1
+        scan_container(bytes(b))
+    assert raised
+    for schema in ({"name": "r", "fields": []},
+                   {"type": "record", "fields": []},
+                   {"type": "record", "name": "r"},
+                   {"type": "record", "name": "r",
+                    "fields": [{"type": "int"}]},
+                   {"type": "enum", "name": "e"},
+                   {"type": "fixed", "name": "f", "size": "4"},
+                   {"type": "array"}, {"type": "map", "values": [{}]}, 7):
+        with pytest.raises(ValueError, match="malformed schema"):
+            check_schema(schema)
+    deep = "[" * 100 + '"int"' + "]" * 100
+    with pytest.raises(ValueError, match="nests deeper"):
+        check_schema(json.loads(deep))
+    # a schema JSON past the parser's own recursion limit
+    out = bytearray(MAGIC)
+    write_long(out, 1)
+    for v in (b"avro.schema", b"[" * 100000):
+        write_long(out, len(v))
+        out += v
+    write_long(out, 0)
+    out += bytes(16)
+    with pytest.raises(ValueError):
+        read_header(bytes(out))
+
+
 def test_spark_shard_write_read(spark, tmp_path):
     from gfw_pixetl_spark.sources.avro import read_avro, write_avro_shards
 

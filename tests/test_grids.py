@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 
 from gfw_pixetl_spark.grids import (
-    LatLngGrid, WebMercatorGrid, grid_factory,
+    GRID_NAMES, BoundingBox, LatLngGrid, WebMercatorGrid, grid_factory,
 )
 
 
@@ -102,3 +102,38 @@ def test_bbox_intersects_not_touches():
     assert not a.intersects(BoundingBox(20, 20, 30, 30))
     assert a.intersection(BoundingBox(5, 5, 15, 15)) == BoundingBox(5, 5, 10, 10)
     assert a.intersection(BoundingBox(10, 0, 20, 10)) is None
+
+
+# every catalog grid up to zoom_16's 65,536 tiles (brute force
+# enumerates the grid)
+@pytest.mark.parametrize("name", GRID_NAMES[:GRID_NAMES.index("zoom_16") + 1])
+def test_overlapping_tile_ids_matches_brute_force(name):
+    """``overlapping_tile_ids`` returns exactly the tiles whose bounds
+    strictly overlap the footprint (``BoundingBox.intersects``), top-left
+    first: random boxes, boxes on tile edges, zero-width boxes and boxes
+    past the grid's bounds."""
+    import random
+
+    g = grid_factory(name)
+    bounds = {t: g.get_tile_bounds(t) for t in g.get_tile_ids()}
+    b = g.bounds
+    w, h = b.right - b.left, b.top - b.bottom
+    rng = random.Random(GRID_NAMES.index(name))
+    boxes = []
+    for _ in range(40):
+        x0 = rng.uniform(b.left - 0.1 * w, b.right)
+        y0 = rng.uniform(b.bottom - 0.1 * h, b.top)
+        boxes.append(BoundingBox(x0, y0, x0 + rng.uniform(0, 0.3) * w,
+                                 y0 + rng.uniform(0, 0.3) * h))
+    for t in rng.sample(sorted(bounds.values(), key=repr),
+                        min(10, len(bounds))):
+        boxes += [t, BoundingBox(t.left, t.bottom, t.left, t.top),
+                  BoundingBox(t.right, t.bottom, t.right + 0.1 * w, t.top)]
+    boxes.append(BoundingBox(b.left - w, b.bottom - h, b.right + w,
+                             b.top + h))
+    for box in boxes:
+        got = g.overlapping_tile_ids(box)
+        want = {t for t, tb in bounds.items() if tb.intersects(box)}
+        assert set(got) == want and len(got) == len(want), box
+        tops = [bounds[t].top for t in got]
+        assert tops == sorted(tops, reverse=True)

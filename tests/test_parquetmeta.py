@@ -178,3 +178,51 @@ def test_thrift_compact_primitives() -> None:
     body = bytes([0xF6]) + bytes([0x11]) + bytes([0x02]) * 17
     vals2, _ = pm._read_value(body, 0, 9)
     assert vals2 == [1] * 17
+
+
+def _pyarrow_footer() -> bytes:
+    import io
+
+    import pyarrow as pa
+
+    t = pa.table({
+        "a": pa.array(range(100), pa.int64()),
+        "s": pa.array([f"x{i}" for i in range(100)]),
+        "d": pa.array([i / 3 for i in range(100)]),
+        "l": pa.array([[i, i + 1] for i in range(100)]),
+    })
+    buf = io.BytesIO()
+    pq.write_table(t, buf, row_group_size=30)
+    data = buf.getvalue()
+    (flen,) = struct.unpack("<I", data[-8:-4])
+    return data[-8 - flen:-8]
+
+
+def test_hostile_footers_raise_value_error() -> None:
+    """Seeded fuzz: truncated and 1-bit-flipped pyarrow footers either
+    decode or raise ValueError, never an IndexError, TypeError,
+    AttributeError or RecursionError."""
+    import random
+
+    footer = _pyarrow_footer()
+    pm.decode_footer(footer)
+    rng = random.Random(20261019)
+    outcomes = {"ok": 0, "ValueError": 0}
+    for _ in range(400):
+        b = bytearray(footer)
+        if rng.random() < 0.5:
+            b = b[:rng.randrange(len(b))]
+        else:
+            k = rng.randrange(len(b) * 8)
+            b[k // 8] ^= 1 << (k % 8)
+        try:
+            pm.decode_footer(bytes(b))
+            outcomes["ok"] += 1
+        except ValueError:
+            outcomes["ValueError"] += 1
+    assert outcomes["ok"] and outcomes["ValueError"]
+    # nesting past the bound and lengths past the end of the footer
+    for blob in (b"\x1c" * 5000, b"\x19" * 5000, b"\x17\x00\x00",
+                 b"\x18\xff\xff\xff\xff\x0f", b"\x19\xf8\xff\xff\xff\x0f"):
+        with pytest.raises(ValueError):
+            pm.decode_footer(blob)

@@ -9,9 +9,11 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from gfw_pixetl_spark.sources.crypto import (
+    _INV_SBOX,
     _decrypt_block,
     _encrypt_block,
     _expand_key,
+    _gmul,
     _SBOX,
     aes_cbc_decrypt,
     aes_cbc_encrypt,
@@ -129,12 +131,62 @@ def test_v5_unknown_revision_gated():
         PdfDocument(bytes(data))
 
 
+def _mix_single(col: list[int], inv: bool) -> list[int]:
+    a, b, c, d = col
+    if not inv:
+        return [
+            _gmul(a, 2) ^ _gmul(b, 3) ^ c ^ d,
+            a ^ _gmul(b, 2) ^ _gmul(c, 3) ^ d,
+            a ^ b ^ _gmul(c, 2) ^ _gmul(d, 3),
+            _gmul(a, 3) ^ b ^ c ^ _gmul(d, 2),
+        ]
+    return [
+        _gmul(a, 14) ^ _gmul(b, 11) ^ _gmul(c, 13) ^ _gmul(d, 9),
+        _gmul(a, 9) ^ _gmul(b, 14) ^ _gmul(c, 11) ^ _gmul(d, 13),
+        _gmul(a, 13) ^ _gmul(b, 9) ^ _gmul(c, 14) ^ _gmul(d, 11),
+        _gmul(a, 11) ^ _gmul(b, 13) ^ _gmul(c, 9) ^ _gmul(d, 14),
+    ]
+
+
+def _encrypt_block_slow(block: bytes, rk: list[list[int]]) -> bytes:
+    """Byte-wise reference cipher: FIPS-197's round functions one byte at
+    a time, the check on the T-table fast path."""
+    s = [b ^ k for b, k in zip(block, rk[0])]
+    nr = len(rk) - 1
+    for rnd in range(1, nr + 1):
+        s = [_SBOX[b] for b in s]
+        # ShiftRows on column-major state: byte i of column c comes
+        # from column (c + i) mod 4
+        s = [s[(4 * ((c + i) % 4)) + i] for c in range(4)
+             for i in range(4)]
+        if rnd != nr:
+            out = []
+            for c in range(4):
+                out += _mix_single(s[4 * c:4 * c + 4], False)
+            s = out
+        s = [b ^ k for b, k in zip(s, rk[rnd])]
+    return bytes(s)
+
+
+def _decrypt_block_slow(block: bytes, rk: list[list[int]]) -> bytes:
+    nr = len(rk) - 1
+    s = [b ^ k for b, k in zip(block, rk[nr])]
+    for rnd in range(nr - 1, -1, -1):
+        # InvShiftRows: byte i of column c comes from column (c - i)
+        s = [s[(4 * ((c - i) % 4)) + i] for c in range(4)
+             for i in range(4)]
+        s = [_INV_SBOX[b] for b in s]
+        s = [b ^ k for b, k in zip(s, rk[rnd])]
+        if rnd != 0:
+            out = []
+            for c in range(4):
+                out += _mix_single(s[4 * c:4 * c + 4], True)
+            s = out
+    return bytes(s)
+
+
 def test_fast_aes_matches_bytewise_reference():
     import os
-
-    from gfw_pixetl_spark.sources.crypto import (
-        _decrypt_block_slow, _encrypt_block_slow,
-    )
 
     for klen in (16, 24, 32):
         for _ in range(20):

@@ -309,7 +309,8 @@ def test_failed_tile_counts_data_and_error_windows(spark, tmp_path):
 
 def test_each_window_read_once_and_one_writer(spark, tmp_path):
     """The status frame is one linear plan: the reader runs once per
-    planned window, and the executed plan holds a single tile job."""
+    planned window, and the executed plan holds a single tile job with
+    no exchange under it."""
     grid = LatLngGrid(10, 544)
     spans = tmp_path / "spans"
     spans.mkdir()
@@ -323,26 +324,26 @@ def test_each_window_read_once_and_one_writer(spark, tmp_path):
     assert len(rows) == 4  # 2 processed + 2 skipped tiles, 4 windows each
     calls = sum(len(f.read_text().splitlines()) for f in spans.iterdir())
     assert calls == 16
-    plan = status._jdf.queryExecution().executedPlan().executedPlan()
-    assert plan.toString().count("FlatMapGroupsInPandas") == 1
+    plan = status._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == 1
+    assert "Exchange" not in plan
 
 
 def test_window_kernel_is_the_first_python_stage(spark, tmp_path):
-    """Tile seeding and the file catalog plan without Python workers:
-    the executed plan of a non-empty layer holds exactly one Python
-    node, the fused tile job that runs the window kernel inside the tile
-    writer, and no RDD scan."""
+    """The tile plan is a local relation built on the driver: the
+    executed plan of a non-empty layer holds exactly one Python node,
+    the fused tile job that runs the window kernel inside the tile
+    writer, over a ``LocalTableScan`` and no RDD scan."""
     grid = LatLngGrid(10, 160)
     pipe = make_pipe(tmp_path, grid)
     files = [{"uri": "m://a", "band": 1,
               "left": 0.0, "bottom": -10.0, "right": 10.0, "top": 10.0}]
     status = pipe.run(spark, files, existing_tile_ids=["10N_170E"])
     assert len(status.collect()) == 2
-    plan = status._jdf.queryExecution().executedPlan().executedPlan()
-    plan = plan.toString()  # the final plan of the adaptive query
+    plan = status._jdf.queryExecution().executedPlan().toString()
     assert re.findall(r"\w*(?:Python|InPandas|InArrow)\w*", plan) == [
-        "FlatMapGroupsInPandas"]
-    assert "tile_job(" in plan
+        "MapInPandas"]
+    assert re.match(r"MapInPandas tile_job\(.*\n\+- LocalTableScan ", plan)
     assert "Scan ExistingRDD" not in plan
 
 
@@ -380,7 +381,8 @@ class TwoFailReader(SyntheticReader):
 
 def test_failed_tile_reports_first_window_in_order(spark, tmp_path):
     """F10 names the failing window that comes first in (row_off,
-    col_off) order, on the fused path and on the payload path, whatever
+    col_off) order: on the fused path over the driver's tile plan and
+    over a Spark-planned tile frame, and on the payload path whatever
     order the windows arrive in."""
     grid = LatLngGrid(10, 544)  # 2x2 windows of 272 px = 5 degrees
     pipe = make_pipe(tmp_path, grid)
@@ -390,9 +392,11 @@ def test_failed_tile_reports_first_window_in_order(spark, tmp_path):
     want = "failed - OSError: top-left window"
     [row] = pipe.run(spark, files).collect()
     assert (row.status, row.n_windows) == (want, 4)
-    windows = _planned_windows(spark, pipe, files)
-    [row] = pipe.tile_jobs(windows).collect()
+    catalog = rp.file_catalog(spark, files)
+    [row] = pipe.tile_jobs(rp.tile_files(
+        rp.seed_tiles(spark, grid), catalog)).collect()
     assert (row.status, row.n_windows) == (want, 4)
+    windows = _planned_windows(spark, pipe, files)
     [row] = pipe.write_tiles(pipe.transform_windows(windows)).collect()
     assert (row.status, row.n_windows) == (want, 4)
 

@@ -11,16 +11,18 @@ a documented design decision, not a silence):
 * SINGLE_PART — `Exchange SinglePartition` feeding real work: a global
                 window/sort funneling fact-scale rows through one task.
                 Legitimate on dimension-sized inputs only.
-* SINK_TWICE  — more than one `FlatMapGroupsInPandas` node running a
-                tile sink: the fused raster tile job (`tile_job`) or the
-                payload writer (`writer`), counted together. A second
-                sink encodes, profiles and writes every tile again.
+* SINK_TWICE  — more than one Python node running a tile sink: the
+                fused raster tile job (`tile_job`, whichever operator
+                runs it; a `MapInPandas` today) or the payload writer
+                (`writer`, a `FlatMapGroupsInPandas`), counted
+                together. A second sink encodes, profiles and writes
+                every tile again.
 * PY_PLANNING — a Python-evaluated node or a `Scan ExistingRDD` leaf
-                beneath the first raster Python stage: the fused tile job
-                (`tile_job`) or the payload path's window kernel
-                (`window_kernel`). Tile seeding and the file catalog are
-                metadata, and each Python stage costs ~0.2-0.3 s before
-                it does any work.
+                beneath the first raster Python stage: the Python node
+                running the fused tile job (`tile_job`) or the payload
+                path's window kernel (`window_kernel`). Tile planning
+                and the file catalog are metadata, and each Python
+                stage costs ~0.2-0.3 s before it does any work.
 
 Besides every registered query, the sweep lints the raster tile job's
 unfiltered status frame: q71 keeps only processed tiles, and that filter
@@ -168,9 +170,11 @@ def _single_partition_consumers(plan: str) -> list[str]:
     return consumers
 
 
-def _udf_nodes(plan: str, op: str, udfs: tuple[str, ...]) -> set[str]:
-    """Node ids of the ``op`` nodes whose Arguments run one of ``udfs``
-    (a grouped node's Arguments open with its grouping keys)."""
+def _udf_nodes(plan: str, udfs: tuple[str, ...],
+               op: str = r"\w*(?:Python|InPandas|InArrow)\w*") -> set[str]:
+    """Node ids of the nodes whose operator matches ``op`` (by default
+    any Python node) and whose Arguments run one of ``udfs`` (a grouped
+    node's Arguments open with its grouping keys)."""
     names = "|".join(udfs)
     return {
         m.group(1) for block in plan.split("\n\n")
@@ -183,12 +187,9 @@ def _udf_nodes(plan: str, op: str, udfs: tuple[str, ...]) -> set[str]:
 def _python_below_first_stage(plan: str) -> list[str]:
     """Python-evaluated operators and RDD scans (``Scan ExistingRDD``,
     whose rows a Python task produces) in the subtree under the raster
-    pipe's first Python stage: the ``FlatMapGroupsInPandas`` running
-    ``tile_job``, or the ``MapInPandas`` running ``window_kernel``."""
-    kernel_ids = (
-        _udf_nodes(plan, "FlatMapGroupsInPandas", ("tile_job",))
-        | _udf_nodes(plan, "MapInPandas", ("window_kernel",))
-    )
+    pipe's first Python stage: the node running ``tile_job`` or
+    ``window_kernel``."""
+    kernel_ids = _udf_nodes(plan, ("tile_job", "window_kernel"))
     found = []
     nodes = _tree_nodes(plan)
     for i, (indent, _op, nid) in enumerate(nodes):
@@ -222,12 +223,10 @@ def lint_plan(name: str, plan: str) -> dict[str, str]:
         flags["SINGLE_PART"] = (
             f"single-partition exchange consumed by {sorted(set(bad))}"
         )
-    writers = len(_udf_nodes(plan, "FlatMapGroupsInPandas",
-                             ("writer", "tile_job")))
+    writers = len(_udf_nodes(plan, ("tile_job",))
+                  | _udf_nodes(plan, ("writer",), "FlatMapGroupsInPandas"))
     if writers > 1:
-        flags["SINK_TWICE"] = (
-            f"tile sink in {writers} FlatMapGroupsInPandas nodes"
-        )
+        flags["SINK_TWICE"] = f"tile sink in {writers} Python nodes"
     planning = _python_below_first_stage(plan)
     if planning:
         flags["PY_PLANNING"] = (
