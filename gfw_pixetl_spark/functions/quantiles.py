@@ -163,13 +163,8 @@ def _hist_select(
             else:
                 state.append([g, t, lo, hi, zero, n])
 
-    debug = os.environ.get("SPARK_GRAFT_QSEL_DEBUG") == "1"
     rounds = 0
     while state:
-        if debug:
-            import time as _time
-
-            _t0 = _time.time()
         rounds += 1
         if rounds > 200:  # ~log_B(full double range) with huge margin
             raise RuntimeError(
@@ -213,15 +208,8 @@ def _hist_select(
                             f"quantile target {t!r} not reachable in "
                             f"group {g!r}"
                         )
-            if debug:
-                print(
-                    f"[qsel] final: {len(cands)} intervals, "
-                    f"{len(rows)} values, {_time.time() - _t0:.2f}s"
-                )
             if not state:
                 break
-            if debug:
-                _t0 = _time.time()
 
         # Histogram round over the big intervals. Targets sharing one
         # (g, lo, hi) interval share its histogram.
@@ -256,11 +244,6 @@ def _hist_select(
             )
             .collect()
         )
-        if debug:
-            print(
-                f"[qsel] round {rounds}: {len(cands)} intervals, "
-                f"{len(hist)} buckets, {_time.time() - _t0:.2f}s"
-            )
         by_cid = {}
         for r in hist:
             by_cid.setdefault(r["cid"], []).append(

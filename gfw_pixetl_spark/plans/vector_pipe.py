@@ -8,19 +8,22 @@ out to ``gdal_rasterize``. Here the whole path is one dataflow:
       -> bbox derivation (pure column math over the coordinate arrays)
       -> broadcast tiles ⋈ features ON bbox-overlap (F4 existence probe
          and G3 clip combined — only intersecting pairs survive)
-      -> groupBy(tile_id).applyInPandas rasterize kernel (A1/A2):
-         features sorted by the ORDER BY key, burned last-wins
+      -> fan-out to the block-aligned windows each feature's bbox touches
+      -> groupBy(tile_id, row_off, col_off).applyInPandas per-window burn
+         (A1/A2): features sorted by the ORDER BY key, burned last-wins
          (or count mode), pixel-center coverage — semantics of
-         gdal_rasterize without GDAL (functions/rasterize_kernel.py)
+         gdal_rasterize without GDAL (functions/rasterize_kernel.py);
+         ``n_salts > 1`` shards each window's features and merges the
+         partial burns in one more stage
       -> shared write_tiles sink (S8) + status accounting (F10)
 
 Geometry travels as nested coordinate arrays
 (``array<array<array<double>>>`` = rings of [x, y]) — the engine-native
-polygon encoding; WKB decode would bolt on in the loader. The per-tile
-shuffle moves only features that intersect the tile (clipping to the
-tile happens implicitly in the burn: pixels outside are not in the tile
-array), so shuffle volume is bounded by feature-tile pairs, not the
-full feature table per tile.
+polygon encoding; WKB decode would bolt on in the loader. The per-window
+shuffle moves only features that intersect the window (clipping happens
+implicitly in the burn: pixels outside are not in the window array), so
+shuffle volume is bounded by feature-window pairs, not the full feature
+table per tile.
 
 Ordering note (SURVEY §7.4-3): last-wins is NOT commutative, so the
 kernel sorts the group by (order_key, feature_id) before burning —
@@ -48,15 +51,6 @@ from .raster_pipe import (
 
 GEOM_TYPE = "array<array<array<double>>>"
 
-PARTIAL_COLS = [
-    "tile_id", "row_off", "col_off", "height", "width", "ok", "err",
-    "payload",
-]
-PARTIAL_SCHEMA = (
-    "tile_id string, row_off int, col_off int, height int, width int, "
-    "ok int, err string, payload binary"
-)
-
 
 def with_bbox(features: DataFrame, geom_col: str = "geom") -> DataFrame:
     """Derive feature bounds from the coordinate arrays — JVM-side
@@ -68,6 +62,13 @@ def with_bbox(features: DataFrame, geom_col: str = "geom") -> DataFrame:
         "f_left": F.array_min(xs), "f_right": F.array_max(xs),
         "f_bottom": F.array_min(ys), "f_top": F.array_max(ys),
     })
+
+
+def feature_tiles(features: DataFrame, tiles: DataFrame) -> DataFrame:
+    """Every (feature, tile) pair whose bounds strictly overlap: the
+    features' bboxes ⋈ broadcast tiles on :func:`_overlap`, the F4
+    existence probe and the G3 clip in one join."""
+    return with_bbox(features).join(F.broadcast(tiles), _overlap())
 
 
 @dataclass
@@ -88,7 +89,7 @@ class VectorPipe:
     def grid_obj(self) -> Grid:
         return self.grid or self.layer.grid_obj
 
-    def rasterize_windows(self, pairs: DataFrame) -> DataFrame:
+    def burn_windows(self, pairs: DataFrame) -> DataFrame:
         """A1/A2 as a per-WINDOW aggregation: burn block-aligned windows
         independently so task memory is bounded by the window, never the
         tile — a 40000^2-px tile is ~10k window groups, exactly like the
@@ -99,180 +100,117 @@ class VectorPipe:
         with the WINDOW bbox), so last-wins ordering within the group is
         the global paint order restricted to that window — burn results
         compose exactly. Windows no feature touches never materialize.
+
+        One path serves every ``n_salts``: ``burn`` → ``finish``. With
+        ``n_salts > 1`` (pathological skew, ROADMAP #6) ``burn`` runs once
+        per feature shard of a window and a merge stage combines the ≤
+        ``n_salts`` partials before ``finish``: last-wins paint under a
+        total order is an argmax per pixel, so value partials carry the
+        winning sort key per pixel (:func:`rasterize_keyed`) and merge by
+        key (:func:`merge_keyed`); counts are additive and merge by
+        summation. Per-task feature count is bounded by ``total/n_salts``;
+        the result is bit-exact vs the single-shard burn by construction.
         """
-        layer = self.layer
         grid = self.grid_obj
         xres, yres = grid.xres, grid.yres
-        method = layer.rasterize_method or "value"
-        descending = (layer.order or "asc") == "desc"
-        dtype = layer.dtype_obj
-        nodata = dtype.no_data
-        fill = 0 if nodata is None else nodata
+        count = self.layer.rasterize_method == "count"
+        keyed = self.n_salts > 1 and not count
+        descending = (self.layer.order or "asc") == "desc"
+        dtype = self.layer.dtype_obj
+        fill = 0 if dtype.no_data is None else dtype.no_data
         np_dtype = dtype.data_type
+        keys = ["tile_id", "row_off", "col_off"]
 
-        def burn(pdf: pd.DataFrame) -> pd.DataFrame:
-            tile_id = pdf["tile_id"].iloc[0]
-            row_off = int(pdf["row_off"].iloc[0])
-            col_off = int(pdf["col_off"].iloc[0])
-            h = int(pdf["height"].iloc[0])
-            w = int(pdf["width"].iloc[0])
-            try:
-                pdf = pdf.sort_values(
-                    ["value", "feature_id"], ascending=[not descending, True]
-                )
-                # window origin in world coordinates
-                ox = float(pdf["tile_left"].iloc[0]) + col_off * xres
-                oy = float(pdf["tile_top"].iloc[0]) - row_off * yres
-                feats = [
-                    (float(v), [np.asarray(ring) for ring in geom])
-                    for v, geom in zip(pdf["value"], pdf["geom"])
-                ]
-                arr = rasterize(
-                    feats, (ox, oy, xres, yres), (h, w),
-                    method=method, fill=fill, dtype=np_dtype,
-                )
-            except Exception as e:  # noqa: BLE001
-                # per-tile error isolation (F10) — see raster_pipe kernel
-                return pd.DataFrame(
-                    [(tile_id, row_off, col_off, h, w, -1,
-                      f"{type(e).__name__}: {e}"[:200], 0, None)],
-                    columns=WINDOW_PAYLOAD_COLS,
-                )
-            if method != "count" and not (arr != fill).any():
+        def window(pdf: pd.DataFrame) -> tuple:
+            first = pdf.iloc[0]
+            return (first["tile_id"], int(first["row_off"]),
+                    int(first["col_off"]), int(first["height"]),
+                    int(first["width"]))
+
+        def failed(win: tuple, err: str) -> pd.DataFrame:
+            # per-window error isolation (F10) — see raster_pipe kernel
+            return pd.DataFrame([(*win, -1, err, 0, None)],
+                                columns=WINDOW_PAYLOAD_COLS)
+
+        def burn(pdf: pd.DataFrame, win: tuple):
+            _, row_off, col_off, h, w = win
+            pdf = pdf.sort_values(
+                ["value", "feature_id"], ascending=[not descending, True]
+            )
+            # window origin in world coordinates
+            origin = (float(pdf["tile_left"].iloc[0]) + col_off * xres,
+                      float(pdf["tile_top"].iloc[0]) - row_off * yres,
+                      xres, yres)
+            rings = [[np.asarray(r) for r in geom] for geom in pdf["geom"]]
+            values = [float(v) for v in pdf["value"]]
+            if keyed:
+                fids = [int(f) for f in pdf["feature_id"]]
+                return rasterize_keyed(list(zip(values, fids, rings)),
+                                       origin, (h, w), fill=fill,
+                                       dtype=np_dtype)
+            if count:  # exact int64 counts; finish casts to the layer dtype
+                return rasterize(list(zip(values, rings)), origin, (h, w),
+                                 method="count", fill=0, dtype="int64")
+            return rasterize(list(zip(values, rings)), origin, (h, w),
+                             fill=fill, dtype=np_dtype)
+
+        def finish(win: tuple, arr: np.ndarray) -> pd.DataFrame:
+            if count:
+                arr = (arr + fill).astype(np_dtype)
+            elif not (arr != fill).any():
                 return pd.DataFrame([], columns=WINDOW_PAYLOAD_COLS)
             buf = io.BytesIO()
-            np.save(buf, arr.reshape(1, h, w), allow_pickle=False)
+            np.save(buf, arr.reshape(1, *win[3:]), allow_pickle=False)
             return pd.DataFrame(
-                [(tile_id, row_off, col_off, h, w, 1, np_dtype,
-                  int((arr != fill).sum()), buf.getvalue())],
+                [(*win, 1, np_dtype, int((arr != fill).sum()),
+                  buf.getvalue())],
                 columns=WINDOW_PAYLOAD_COLS,
             )
 
-        return pairs.groupBy("tile_id", "row_off", "col_off").applyInPandas(
-            burn, WINDOW_PAYLOAD_SCHEMA
-        )
+        def guarded(step):
+            def run(pdf: pd.DataFrame) -> pd.DataFrame:
+                win = window(pdf)
+                try:
+                    return step(pdf, win)
+                except Exception as e:  # noqa: BLE001
+                    return failed(win, f"{type(e).__name__}: {e}"[:200])
+            return run
 
-    def rasterize_windows_salted(self, pairs: DataFrame) -> DataFrame:
-        """Skew-resistant two-phase burn (ROADMAP #6).
-
-        Last-wins paint under a total order is an argmax per pixel, so it
-        decomposes: phase 1 burns each of ``n_salts`` feature shards of a
-        window independently (recording the winning sort key per pixel,
-        :func:`rasterize_keyed`); phase 2 merges the ≤ ``n_salts`` keyed
-        partials (:func:`merge_keyed`). ``count`` mode is additive and
-        merges by summation. Per-task feature count is bounded by
-        ``total/n_salts`` — a window that one task would chew for hours
-        becomes ``n_salts`` parallel tasks plus an O(n_salts · window_px)
-        merge. Bit-exact vs the sequential burn by construction.
-        """
-        layer = self.layer
-        grid = self.grid_obj
-        xres, yres = grid.xres, grid.yres
-        method = layer.rasterize_method or "value"
-        descending = (layer.order or "asc") == "desc"
-        dtype = layer.dtype_obj
-        nodata = dtype.no_data
-        fill = 0 if nodata is None else nodata
-        np_dtype = dtype.data_type
-
-        def burn_partial(pdf: pd.DataFrame) -> pd.DataFrame:
-            tile_id = pdf["tile_id"].iloc[0]
-            row_off = int(pdf["row_off"].iloc[0])
-            col_off = int(pdf["col_off"].iloc[0])
-            h = int(pdf["height"].iloc[0])
-            w = int(pdf["width"].iloc[0])
-            try:
-                pdf = pdf.sort_values(
-                    ["value", "feature_id"], ascending=[not descending, True]
-                )
-                ox = float(pdf["tile_left"].iloc[0]) + col_off * xres
-                oy = float(pdf["tile_top"].iloc[0]) - row_off * yres
-                buf = io.BytesIO()
-                if method == "count":
-                    feats = [
-                        (float(v), [np.asarray(r) for r in geom])
-                        for v, geom in zip(pdf["value"], pdf["geom"])
-                    ]
-                    arr = rasterize(
-                        feats, (ox, oy, xres, yres), (h, w),
-                        method="count", fill=0, dtype="int64",
-                    )
-                    np.save(buf, arr, allow_pickle=False)
-                else:
-                    feats = [
-                        (float(v), int(fid), [np.asarray(r) for r in geom])
-                        for v, fid, geom in zip(
-                            pdf["value"], pdf["feature_id"], pdf["geom"]
-                        )
-                    ]
-                    val, kv, kf = rasterize_keyed(
-                        feats, (ox, oy, xres, yres), (h, w),
-                        fill=fill, dtype=np_dtype,
-                    )
-                    np.savez(buf, val=val, kv=kv, kf=kf)
-            except Exception as e:  # noqa: BLE001
-                return pd.DataFrame(
-                    [(tile_id, row_off, col_off, h, w, -1,
-                      f"{type(e).__name__}: {e}"[:200], None)],
-                    columns=PARTIAL_COLS,
-                )
-            return pd.DataFrame(
-                [(tile_id, row_off, col_off, h, w, 1, None, buf.getvalue())],
-                columns=PARTIAL_COLS,
+        if self.n_salts == 1:
+            return pairs.groupBy(*keys).applyInPandas(
+                guarded(lambda pdf, win: finish(win, burn(pdf, win))),
+                WINDOW_PAYLOAD_SCHEMA,
             )
 
-        def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-            tile_id = pdf["tile_id"].iloc[0]
-            row_off = int(pdf["row_off"].iloc[0])
-            col_off = int(pdf["col_off"].iloc[0])
-            h = int(pdf["height"].iloc[0])
-            w = int(pdf["width"].iloc[0])
-            errors = pdf[pdf["ok"] < 0]
+        def partial(pdf: pd.DataFrame, win: tuple) -> pd.DataFrame:
+            out = burn(pdf, win)
+            buf = io.BytesIO()
+            if keyed:
+                np.savez(buf, val=out[0], kv=out[1], kf=out[2])
+            else:
+                np.save(buf, out, allow_pickle=False)
+            return pd.DataFrame([(*win, 1, np_dtype, 0, buf.getvalue())],
+                                columns=WINDOW_PAYLOAD_COLS)
+
+        def merge(pdf: pd.DataFrame, win: tuple) -> pd.DataFrame:
+            errors = pdf["dtype"][pdf["bands"] < 0]
             if len(errors):
-                return pd.DataFrame(
-                    [(tile_id, row_off, col_off, h, w, -1,
-                      errors["err"].iloc[0], 0, None)],
-                    columns=WINDOW_PAYLOAD_COLS,
-                )
-            try:
-                if method == "count":
-                    total = np.zeros((h, w), dtype="int64")
-                    for p in pdf["payload"]:
-                        total += np.load(io.BytesIO(p), allow_pickle=False)
-                    arr = (total + fill).astype(np_dtype)
-                else:
-                    partials = []
-                    for p in pdf["payload"]:
-                        z = np.load(io.BytesIO(p), allow_pickle=False)
-                        partials.append((z["val"], z["kv"], z["kf"]))
-                    arr = merge_keyed(
-                        partials, (h, w), fill=fill, dtype=np_dtype,
-                        descending=descending,
-                    )
-            except Exception as e:  # noqa: BLE001
-                return pd.DataFrame(
-                    [(tile_id, row_off, col_off, h, w, -1,
-                      f"{type(e).__name__}: {e}"[:200], 0, None)],
-                    columns=WINDOW_PAYLOAD_COLS,
-                )
-            if method != "count" and not (arr != fill).any():
-                return pd.DataFrame([], columns=WINDOW_PAYLOAD_COLS)
-            buf = io.BytesIO()
-            np.save(buf, arr.reshape(1, h, w), allow_pickle=False)
-            return pd.DataFrame(
-                [(tile_id, row_off, col_off, h, w, 1, np_dtype,
-                  int((arr != fill).sum()), buf.getvalue())],
-                columns=WINDOW_PAYLOAD_COLS,
-            )
+                return failed(win, errors.iloc[0])
+            parts = [np.load(io.BytesIO(p), allow_pickle=False)
+                     for p in pdf["payload"]]
+            if count:
+                return finish(win, sum(parts))
+            return finish(win, merge_keyed(
+                [(z["val"], z["kv"], z["kf"]) for z in parts], win[3:],
+                fill=fill, dtype=np_dtype, descending=descending,
+            ))
 
-        salted = pairs.withColumn(
-            "salt", F.pmod(F.col("feature_id"), F.lit(self.n_salts))
-        )
-        partials = salted.groupBy(
-            "tile_id", "row_off", "col_off", "salt"
-        ).applyInPandas(burn_partial, PARTIAL_SCHEMA)
-        return partials.groupBy("tile_id", "row_off", "col_off").applyInPandas(
-            merge, WINDOW_PAYLOAD_SCHEMA
+        salt = F.pmod(F.col("feature_id"), F.lit(self.n_salts))
+        return (
+            pairs.groupBy(*keys, salt.alias("salt"))
+            .applyInPandas(guarded(partial), WINDOW_PAYLOAD_SCHEMA)
+            .groupBy(*keys)
+            .applyInPandas(guarded(merge), WINDOW_PAYLOAD_SCHEMA)
         )
 
     def plan_payloads(
@@ -287,7 +225,7 @@ class VectorPipe:
         exact point the write exchange consumes them."""
         grid = self.grid_obj
         tiles = select_tiles(seed_tiles(spark, grid), subset)
-        pairs = with_bbox(features).join(F.broadcast(tiles), _overlap())
+        pairs = feature_tiles(features, tiles)
 
         # each (feature, tile) pair fans out ONLY to the windows the
         # feature's bbox touches — the window index range is closed-form
@@ -337,9 +275,7 @@ class VectorPipe:
                 "feature_id", "value", "geom",
             )
         )
-        if self.n_salts > 1:
-            return self.rasterize_windows_salted(pairs)
-        return self.rasterize_windows(pairs)
+        return self.burn_windows(pairs)
 
     def run(
         self,

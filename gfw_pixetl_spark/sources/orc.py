@@ -31,6 +31,7 @@ same way sources/deltalog.py and sources/iceberg.py do.
 from __future__ import annotations
 
 import decimal
+import functools
 import struct
 import zlib
 from typing import Any, Iterable
@@ -268,7 +269,10 @@ class _Reader:
         self.pos = pos
 
     def byte(self) -> int:
-        b = self.data[self.pos]
+        try:
+            b = self.data[self.pos]
+        except IndexError:
+            raise ValueError("orc: RLE run past the end of its stream") from None
         self.pos += 1
         return b
 
@@ -827,18 +831,36 @@ def _merge_stats(stats: list[bytes]) -> bytes:
 # Reader
 # --------------------------------------------------------------------------
 
-class OrcFile:
-    """Decoded ORC file: metadata immediately, rows on demand."""
+# what damaged bytes raise inside the decoders: a short buffer, a missing
+# stream, a field of the wrong wire type, a corrupt deflate chunk
+_DAMAGE = (AttributeError, IndexError, KeyError, TypeError, struct.error,
+           zlib.error)
 
+
+def _damage_is_value_error(fn):
+    """Refuse a damaged file with ``ValueError`` at the ``OrcFile``
+    boundary, whichever decoder step trips over it."""
+    @functools.wraps(fn)
+    def guarded(*args, **kwargs):
+        try:
+            return fn(*args, **kwargs)
+        except _DAMAGE as exc:
+            raise ValueError(
+                f"corrupt ORC file ({type(exc).__name__}: {exc})") from exc
+    return guarded
+
+
+class OrcFile:
+    """Decoded ORC file: metadata immediately, rows on demand. A damaged
+    file raises ``ValueError``."""
+
+    @_damage_is_value_error
     def __init__(self, data: bytes) -> None:
         if not data.startswith(MAGIC):
             raise ValueError("not an ORC file (bad header magic)")
         self.data = data
         ps_len = data[-1]
-        try:
-            ps = pb_decode(data[-1 - ps_len:-1])
-        except (IndexError, struct.error) as exc:
-            raise ValueError("not an ORC file (corrupt postscript)") from exc
+        ps = pb_decode(data[-1 - ps_len:-1])
         self.compression = _one(ps, 2, C_NONE)
         magic = _one(ps, 8000, b"")
         if magic != MAGIC:
@@ -916,6 +938,7 @@ class OrcFile:
         raw = self.data[spec["offset"]:spec["offset"] + spec["length"]]
         return decompress_stream(raw, self.compression)
 
+    @_damage_is_value_error
     def read_stripe(self, si: int) -> dict[str, list]:
         info, streams = self._stripe_streams(si)
         encodings = info["encodings"]

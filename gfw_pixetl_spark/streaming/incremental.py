@@ -127,20 +127,13 @@ class IncrementalVectorTiler:
 
     def _affected_tiles(self, spark: SparkSession, new_feats: DataFrame) -> list[str]:
         from ..plans.raster_pipe import seed_tiles
-        from ..plans.vector_pipe import with_bbox
+        from ..plans.vector_pipe import feature_tiles
 
         tiles = seed_tiles(spark, self.pipe.grid_obj)
-        fb = with_bbox(new_feats)
-        overlap = (
-            (F.col("tile_left") < F.col("f_right"))
-            & (F.col("tile_right") > F.col("f_left"))
-            & (F.col("tile_bottom") < F.col("f_top"))
-            & (F.col("tile_top") > F.col("f_bottom"))
-        )
         # tile ids only — bounded by the lattice, not the feature count
         return [
             r.tile_id
-            for r in fb.join(F.broadcast(tiles), overlap)
+            for r in feature_tiles(new_feats, tiles)
             .select("tile_id").distinct().collect()
         ]
 

@@ -208,6 +208,41 @@ def test_bad_magic():
         o.OrcFile(b"ORCx" + os.urandom(64) + b"\x05")
 
 
+def test_hostile_files_raise_value_error(tmp_path):
+    """Seeded fuzz: truncated and 1-bit-flipped copies of writer-made
+    files (RLE v1/v2, zlib/none) either decode or raise ValueError, never
+    struct.error, zlib.error, KeyError, TypeError or IndexError."""
+    import random
+
+    rows = _sample_rows(300)
+    blobs = []
+    for rle in (1, 2):
+        for comp in (o.C_ZLIB, o.C_NONE):
+            p = str(tmp_path / f"f{rle}{comp}.orc")
+            o.write_orc(p, _SAMPLE_COLS, rows, stripe_rows=120,
+                        compression=comp, rle_version=rle)
+            blobs.append(open(p, "rb").read())
+            assert o.OrcFile(blobs[-1]).read_all()["a"] == [r[0] for r in rows]
+    rng = random.Random(20261019)
+    outcomes = {"ok": 0, "ValueError": 0}
+    for k in range(800):
+        b = bytearray(blobs[k % len(blobs)])
+        if rng.random() < 0.5:
+            b = b[:rng.randrange(len(b))]
+        else:
+            i = rng.randrange(len(b) * 8)
+            b[i // 8] ^= 1 << (i % 8)
+        try:
+            o.OrcFile(bytes(b)).read_all()
+            outcomes["ok"] += 1
+        except ValueError:
+            outcomes["ValueError"] += 1
+    assert outcomes["ok"] and outcomes["ValueError"]
+    # an RLE stream that ends inside a run
+    with pytest.raises(ValueError):
+        o.int_rle_decode(b"\x05", 8, False, 1)
+
+
 # --------------------------------------------------------- footer planning
 
 def test_prune_stripes(tmp_path):

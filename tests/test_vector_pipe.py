@@ -204,22 +204,39 @@ def test_keyed_merge_matches_sequential_burn():
 
 def test_vector_pipe_salted_matches_sequential(spark, tmp_path):
     """End-to-end: n_salts=3 produces byte-identical tiles to the
-    sequential burn for value (asc/desc) and count modes."""
+    sequential burn for value (asc/desc) and count modes, including a
+    uint8 count that wraps past 255, and the same status text for a
+    window that fails."""
     grid = LatLngGrid(10, 160)
-    for over in (
-        dict(order="asc"),
-        dict(order="desc"),
-        dict(rasterize_method="count", data_type="uint16"),
+    schema = f"feature_id long, value double, geom {GEOM_TYPE}"
+    square = [[[1.0, 1.0], [3.0, 1.0], [3.0, 3.0], [1.0, 3.0], [1.0, 1.0]]]
+    # a hole ring with no vertices makes the burn of its window raise
+    holed = spark.createDataFrame(
+        [(3, 5.0, [square[0], []])], schema).unionByName(_features(spark))
+    stacked = spark.createDataFrame(
+        [(fid, 1.0, square) for fid in range(300)], schema)
+    for over, feats in (
+        (dict(order="asc"), _features(spark)),
+        (dict(order="desc"), _features(spark)),
+        (dict(rasterize_method="count", data_type="uint16"), _features(spark)),
+        (dict(order="asc"), holed),
+        (dict(rasterize_method="count"), stacked),
     ):
         seq = VectorPipe(layer=_vector_layer(**over),
                          work_dir=str(tmp_path / "seq"), grid=grid)
         sal = VectorPipe(layer=_vector_layer(**over),
                          work_dir=str(tmp_path / "sal"), grid=grid, n_salts=3)
-        r1 = seq.run(spark, _features(spark), subset=["10N_000E"]).collect()
-        r2 = sal.run(spark, _features(spark), subset=["10N_000E"]).collect()
-        assert [r.status for r in r1] == [r.status for r in r2] == ["processed"]
-        a, _ = read_tile(r1[0].out_path)
-        b, _ = read_tile(r2[0].out_path)
+        [r1] = seq.run(spark, feats, subset=["10N_000E"]).collect()
+        [r2] = sal.run(spark, feats, subset=["10N_000E"]).collect()
+        assert r1.status == r2.status
+        if feats is holed:
+            assert r1.status.startswith("failed - IndexError")
+            continue
+        assert r1.status == "processed"
+        a, _ = read_tile(r1.out_path)
+        b, _ = read_tile(r2.out_path)
+        if feats is stacked:  # 300 covers wrap to 44 in uint8
+            assert a[0, 128, 32] == 300 % 256
         np.testing.assert_array_equal(a, b)
 
 
