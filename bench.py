@@ -21,7 +21,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from gfw_pixetl_spark import harness
-from gfw_pixetl_spark.session import get_spark
+from gfw_pixetl_spark.session import DEFAULT_CPUS, get_spark
 
 # Headline set: one per operator family; heavy dedup/similarity included
 # because they are the scale-critical paths.
@@ -462,6 +462,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("gfw_pixetl_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     # JVM/codegen warm-up on the smallest SF so steady-state throughput is
     # what gets measured, not first-query classloading.
@@ -607,6 +608,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf),
+        "cpus": cpus,
         "reps": reps, "warmup_rounds": warmup,
         "aggregation": "median_per_query",
         "scale_stress": stress,
@@ -617,7 +619,10 @@ def main() -> None:
         "scale_stress_lakehouse": stress_lakehouse,
     }
     repo = Path(__file__).resolve().parent
-    detail_path = repo / "BENCH_DETAIL.json"
+    # A run off the session's default core count is not comparable with
+    # the default runs, so it writes its own files and leaves theirs.
+    tag = "" if cpus == DEFAULT_CPUS else f"_c{cpus}"
+    detail_path = repo / f"BENCH_DETAIL{tag}.json"
     detail_path.write_text(json.dumps(detail, indent=1) + "\n")
     # Also archive per-round (BENCH_DETAIL.json is overwritten in place,
     # which made cross-round per-query diffs require git archaeology —
@@ -625,13 +630,13 @@ def main() -> None:
     rounds = [int(p.stem.split("_r")[-1]) for p in repo.glob("BENCH_r*.json")
               if p.stem.split("_r")[-1].isdigit()]
     rnd = max(rounds) + 1 if rounds else 1
-    rnd_path = repo / f"BENCH_DETAIL_r{rnd:02d}.json"
+    rnd_path = repo / f"BENCH_DETAIL_r{rnd:02d}{tag}.json"
     # never clobber an already-archived round (multiple bench runs can
     # happen within one round; the earlier archive stays authoritative
     # and later runs get a letter suffix)
     suffix = ord("b")
     while rnd_path.exists():
-        rnd_path = repo / f"BENCH_DETAIL_r{rnd:02d}{chr(suffix)}.json"
+        rnd_path = repo / f"BENCH_DETAIL_r{rnd:02d}{chr(suffix)}{tag}.json"
         suffix += 1
     rnd_path.write_text(json.dumps(detail, indent=1) + "\n")
 
@@ -653,6 +658,7 @@ def main() -> None:
                 "n_failed": sum(1 for t in timings.values() if t < 0),
                 "p50": p50,
                 "sf": float(sf),
+                "cpus": cpus,
                 "reps": reps, "warmup_rounds": warmup,
                 "aggregation": "median_per_query",
                 "scale_stress": stress,

@@ -433,7 +433,7 @@ def connected_components(
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
     local_contract: bool = True,
-    local_resolve_max_edges: int | None = None,
+    local_resolve_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """Resolve near-dup pairs into clusters: min-label propagation to
     fixpoint over the undirected pair graph. Returns (doc_id, component)
@@ -466,9 +466,8 @@ def connected_components(
     form is the production default and executor-local the fast
     single-node path).
 
-    ``local_resolve_max_edges`` (default ``$SPARK_GRAFT_CC_LOCAL_EDGES``
-    or 2M): when the contracted forest is at most this many edges, the
-    global loop is skipped entirely and ONE task union-finds the forest
+    ``local_resolve_max_edges`` (default 2M): when the contracted forest
+    is at most this many edges, the global loop is skipped entirely and ONE task union-finds the forest
     (``_uf_resolve_min_labels``) — identical labels (union-by-min makes
     every root the min reachable id), but 1 job instead of 3-4 jobs per
     propagation round. The forest has <= one edge per distinct node, so
@@ -476,12 +475,6 @@ def connected_components(
     graphs whose contraction still exceeds the gate (a 100 TB corpus
     has billions of nodes) take the unchanged iterative path.
     """
-    if local_resolve_max_edges is None:
-        import os
-
-        local_resolve_max_edges = int(
-            os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "2000000")
-        )
     if checkpoint_dir is not None:
         edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
@@ -785,7 +778,6 @@ def prefix_jaccard_pairs(
     id_col: str = "doc_id",
     threshold: float = 0.6,
     tokens: Column | None = None,
-    max_verify_tokens: int | None = None,
 ) -> DataFrame:
     """Exact all-pairs Jaccard >= threshold WITHOUT blocking keys, via
     prefix filtering (the SSJoin/PPJoin candidate rule).
@@ -802,21 +794,11 @@ def prefix_jaccard_pairs(
     Unlike q27's formulation this needs no application blocking column —
     rare-first ordering makes the prefix join itself the blocker.
 
-    ``max_verify_tokens`` is the scale relief valve (verdict r1 item 8):
-    when set, the exact verify on full token sets is replaced by the
-    bottom-k sketch estimate of Jaccard, bounding verify cost per pair
-    at O(k) regardless of document length. The estimator is the proper
-    one (Broder): |A_k ∩ B_k ∩ bottom-k(A_k ∪ B_k)| / |bottom-k(...)| —
-    intersecting with the union's bottom-k is what makes it consistent;
-    naively comparing the two sketches directly is biased with
-    unbounded error. When k >= |A ∪ B| it degrades to exact Jaccard.
-    Default None = exact (the oracle-checked contract).
-
-    The exact path dictionary-encodes tokens to int64 ids before the
-    joins: a bijection (bucketed dense ids from the frequency table —
-    NOT a hash, so no collision can ever change a count) that makes the
-    candidate equi-join key and the verify arrays fixed-width ints
-    instead of shingle strings. It also applies the two PPJoin candidate
+    Tokens are dictionary-encoded to int64 ids before the joins: a
+    bijection (bucketed dense ids from the frequency table — NOT a hash,
+    so no collision can ever change a count) that makes the candidate
+    equi-join key and the verify arrays fixed-width ints instead of
+    shingle strings. It also applies the two PPJoin candidate
     prunes — the length filter (J <= min/max sizes) and the positional
     filter (overlap left of a shared prefix token is bounded by the
     shorter remaining tail) — both against threshold - 1e-6 so a pair
@@ -827,162 +809,98 @@ def prefix_jaccard_pairs(
     from pyspark.sql import Window
 
     t_ = threshold - 1e-6  # conservative against round(J, 6) >= t verify
-    if max_verify_tokens is None:
-        # ---------------- exact path (dictionary-encoded) ----------------
-        # One explode of the distinct token sets feeds BOTH the frequency
-        # build and the ranked table; checkpoint so tokenization runs once.
-        toks = df.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.array_distinct(token_expr)).alias("w"),
-        ).localCheckpoint(eager=False)
-        freq = toks.groupBy("w").agg(F.count("*").alias("df_w"))
-        # Bijective int64 ids without a global sort: row_number inside 64
-        # hash buckets of the vocabulary (scale-safe window), offset by
-        # bucket * 2^40. Only bijectivity matters for the intersect —
-        # rare-first ORDER comes from the per-doc window below.
-        vocab = freq.withColumn(
-            "bk", F.pmod(F.xxhash64("w"), F.lit(64))
-        ).select(
-            "w",
-            "df_w",
-            (
-                F.col("bk") * F.lit(1 << 40)
-                + F.row_number().over(Window.partitionBy("bk").orderBy("w"))
-            ).alias("wid"),
-        )
-        ranked = toks.join(F.broadcast(vocab), "w").withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("id")
-                .orderBy(F.col("df_w").asc(), F.col("w").asc())
-            ),
-        )
-        # Per-doc rare-first id arrays: the groupBy reuses the window's
-        # hash partitioning by id (no extra Exchange); sorting the
-        # (rn, wid) structs pins rare-first order deterministically.
-        # Checkpointed: read three times (prefix explode + both verify
-        # sides).
-        arrs = (
-            ranked.groupBy("id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("rn", "wid"))),
-                    lambda s: s["wid"],
-                ).alias("ids")
-            )
-            .withColumn("sz", F.size("ids"))
-            .localCheckpoint(eager=False)
-        )
-        prefix_len = F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-        prefix = arrs.select(
-            "id",
-            "sz",
-            F.posexplode(F.slice("ids", F.lit(1), prefix_len)).alias(
-                "pos", "wid"
-            ),
-        )
-        # PPJoin length filter: J(a,b) <= min(|a|,|b|)/max(|a|,|b|), so
-        # J >= t forces the sizes within a factor t of each other.
-        len_ok = (
-            F.least(F.col("a.sz"), F.col("b.sz")).cast("double")
-            >= F.lit(t_) * F.greatest(F.col("a.sz"), F.col("b.sz"))
-        )
-        # PPJoin positional filter: meeting at 0-based prefix positions
-        # (pa, pb), the overlap can't exceed 1 + min of the remaining
-        # tails, which must reach alpha = ceil(t/(1+t) * (|a|+|b|)) for
-        # J >= t. The pair's FIRST shared prefix token gives the loosest
-        # bound, so filtering per joined row then distinct-ing pairs
-        # keeps every true survivor.
-        alpha = F.ceil(F.lit(t_ / (1.0 + t_)) * (F.col("a.sz") + F.col("b.sz")))
-        pos_ok = (
-            1
-            + F.least(
-                F.col("a.sz") - 1 - F.col("a.pos"),
-                F.col("b.sz") - 1 - F.col("b.pos"),
-            )
-            >= alpha
-        )
-        cands = (
-            prefix.alias("a")
-            .join(prefix.alias("b"), F.col("a.wid") == F.col("b.wid"))
-            .filter((F.col("a.id") < F.col("b.id")) & len_ok & pos_ok)
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct()
-        )
-        va = arrs.select(
-            F.col("id").alias("id_a"),
-            F.col("ids").alias("ws_a"),
-            F.col("sz").alias("sz_a"),
-        )
-        vb = arrs.select(
-            F.col("id").alias("id_b"),
-            F.col("ids").alias("ws_b"),
-            F.col("sz").alias("sz_b"),
-        )
-        inter = F.size(F.array_intersect("ws_a", "ws_b"))
-        union = F.col("sz_a") + F.col("sz_b") - inter
-        return (
-            cands.join(va, "id_a")
-            .join(vb, "id_b")
-            .withColumn("jaccard", F.round(inter / union, 6))
-            .filter(F.col("jaccard") >= threshold)
-            .select(
-                F.col("id_a").alias("doc_id_a"),
-                F.col("id_b").alias("doc_id_b"),
-                "jaccard",
-            )
-        )
-    # ---------------- bottom-k sketch path (relief valve) ----------------
-    # Kept on the original string-keyed formulation WITHOUT the length /
-    # positional prunes: those bound the TRUE Jaccard, while this path's
-    # contract is the sketch ESTIMATE over all prefix candidates (an
-    # estimate may exceed the true value, so true-J prunes could drop
-    # pairs this path is defined to emit).
-    base = df.select(
+    # One explode of the distinct token sets feeds BOTH the frequency
+    # build and the ranked table; checkpoint so tokenization runs once.
+    toks = df.select(
         F.col(id_col).alias("id"),
-        F.array_sort(F.array_distinct(token_expr)).alias("ws"),
-    ).filter(F.size("ws") > 0).localCheckpoint(eager=False)
-    toks = base.select("id", F.size("ws").alias("sz"), F.explode("ws").alias("w"))
+        F.explode(F.array_distinct(token_expr)).alias("w"),
+    ).localCheckpoint(eager=False)
     freq = toks.groupBy("w").agg(F.count("*").alias("df_w"))
-    ranked = toks.join(F.broadcast(freq), "w").withColumn(
+    # Bijective int64 ids without a global sort: row_number inside 64
+    # hash buckets of the vocabulary (scale-safe window), offset by
+    # bucket * 2^40. Only bijectivity matters for the intersect —
+    # rare-first ORDER comes from the per-doc window below.
+    vocab = freq.withColumn(
+        "bk", F.pmod(F.xxhash64("w"), F.lit(64))
+    ).select(
+        "w",
+        "df_w",
+        (
+            F.col("bk") * F.lit(1 << 40)
+            + F.row_number().over(Window.partitionBy("bk").orderBy("w"))
+        ).alias("wid"),
+    )
+    ranked = toks.join(F.broadcast(vocab), "w").withColumn(
         "rn",
         F.row_number().over(
-            Window.partitionBy("id").orderBy(F.col("df_w").asc(), F.col("w").asc())
+            Window.partitionBy("id")
+            .orderBy(F.col("df_w").asc(), F.col("w").asc())
         ),
     )
-    prefix_len = F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-    # The prefix table is referenced on BOTH sides of the candidate
-    # self-join; without a checkpoint the whole explode+freq+window
-    # subtree above executes once per side.
-    prefix = (
-        ranked.filter(F.col("rn") <= prefix_len)
-        .select("id", "w")
+    # Per-doc rare-first id arrays: the groupBy reuses the window's
+    # hash partitioning by id (no extra Exchange); sorting the
+    # (rn, wid) structs pins rare-first order deterministically.
+    # Checkpointed: read three times (prefix explode + both verify
+    # sides).
+    arrs = (
+        ranked.groupBy("id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("rn", "wid"))),
+                lambda s: s["wid"],
+            ).alias("ids")
+        )
+        .withColumn("sz", F.size("ids"))
         .localCheckpoint(eager=False)
+    )
+    prefix_len = F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
+    prefix = arrs.select(
+        "id",
+        "sz",
+        F.posexplode(F.slice("ids", F.lit(1), prefix_len)).alias(
+            "pos", "wid"
+        ),
+    )
+    # PPJoin length filter: J(a,b) <= min(|a|,|b|)/max(|a|,|b|), so
+    # J >= t forces the sizes within a factor t of each other.
+    len_ok = (
+        F.least(F.col("a.sz"), F.col("b.sz")).cast("double")
+        >= F.lit(t_) * F.greatest(F.col("a.sz"), F.col("b.sz"))
+    )
+    # PPJoin positional filter: meeting at 0-based prefix positions
+    # (pa, pb), the overlap can't exceed 1 + min of the remaining
+    # tails, which must reach alpha = ceil(t/(1+t) * (|a|+|b|)) for
+    # J >= t. The pair's FIRST shared prefix token gives the loosest
+    # bound, so filtering per joined row then distinct-ing pairs
+    # keeps every true survivor.
+    alpha = F.ceil(F.lit(t_ / (1.0 + t_)) * (F.col("a.sz") + F.col("b.sz")))
+    pos_ok = (
+        1
+        + F.least(
+            F.col("a.sz") - 1 - F.col("a.pos"),
+            F.col("b.sz") - 1 - F.col("b.pos"),
+        )
+        >= alpha
     )
     cands = (
         prefix.alias("a")
-        .join(prefix.alias("b"), F.col("a.w") == F.col("b.w"))
-        .filter(F.col("a.id") < F.col("b.id"))
+        .join(prefix.alias("b"), F.col("a.wid") == F.col("b.wid"))
+        .filter((F.col("a.id") < F.col("b.id")) & len_ok & pos_ok)
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    # bottom-k sketch: k smallest element hashes stand in for the set
-    verify_col = F.slice(
-        F.array_sort(F.transform("ws", lambda w: F.xxhash64(w))),
-        1, max_verify_tokens,
+    va = arrs.select(
+        F.col("id").alias("id_a"),
+        F.col("ids").alias("ws_a"),
+        F.col("sz").alias("sz_a"),
     )
-    va = base.select(F.col("id").alias("id_a"), verify_col.alias("ws_a"))
-    vb = base.select(F.col("id").alias("id_b"), verify_col.alias("ws_b"))
-    # Broder bottom-k: restrict to the k smallest hashes of the
-    # UNION, count how many live in both sketches
-    union_k = F.slice(
-        F.array_sort(F.array_union("ws_a", "ws_b")),
-        1, max_verify_tokens,
+    vb = arrs.select(
+        F.col("id").alias("id_b"),
+        F.col("ids").alias("ws_b"),
+        F.col("sz").alias("sz_b"),
     )
-    inter = F.size(
-        F.array_intersect(F.array_intersect("ws_a", "ws_b"), union_k)
-    )
-    union = F.size(union_k)
+    inter = F.size(F.array_intersect("ws_a", "ws_b"))
+    union = F.col("sz_a") + F.col("sz_b") - inter
     return (
         cands.join(va, "id_a")
         .join(vb, "id_b")

@@ -13,7 +13,7 @@ histogram selection):
    target unit ranks follow (rank = p*(n-1), the interpolation lattice
    Spark's Percentile and DuckDB's quantile_cont share);
 2. while a target's interval holds more than a constant weight
-   (``SPARK_GRAFT_QSEL_COLLECT``), one refinement round buckets the
+   (``_COLLECT_MAX``), one refinement round buckets the
    interval's values through a MONOTONE affine map and aggregates
    per-bucket (weight, min, max) — a map-side-combinable aggregation
    whose shuffle carries only #buckets-sized partials, never data rows;
@@ -45,22 +45,21 @@ quantiles over NaN-bearing data are garbage-in-garbage-out either way.
 from __future__ import annotations
 
 import math
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Buckets per refinement round: with the final collect pass resolving
-# intervals under SPARK_GRAFT_QSEL_COLLECT weight, 1024 buckets reach
-# ~67M-row groups in one round while keeping each scan task's partial
-# hash (and the exchange) tiny.
-_HIST_BUCKETS = int(os.environ.get("SPARK_GRAFT_QSEL_BUCKETS", "1024"))
+# intervals under _COLLECT_MAX weight, 1024 buckets reach ~67M-row
+# groups in one round while keeping each scan task's partial hash (and
+# the exchange) tiny.
+_HIST_BUCKETS = 1024
 # An interval whose total weight is under this constant is resolved by
 # one aggregate-and-collect pass instead of further histogram rounds.
 # Constant-bounded by construction — corpus growth adds rounds, not
 # collected rows.
-_COLLECT_MAX = int(os.environ.get("SPARK_GRAFT_QSEL_COLLECT", "65536"))
+_COLLECT_MAX = 65536
 # Intervals per round above which the candidate table is broadcast-joined
 # instead of exploded from an inline literal array (explode multiplies
 # every row by the candidate count before the filter).

@@ -1041,31 +1041,9 @@ def q135(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q142(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from ..functions.quantiles import grouped_exact_quantile_values
 
     li = load(spark, sf_dir, "lineitem")
-    if os.environ.get("SPARK_GRAFT_APPROX_QUANTILES") == "1":
-        # scale relief valve (documented approximate mode): single-pass
-        # percentile_approx per group instead of the exact two-level
-        # distributed selection — same plan shape, ~2x fewer passes; the
-        # exact default stays the oracle-checked contract.
-        med = li.groupBy(F.col("l_returnflag").alias("g")).agg(
-            F.percentile_approx("l_extendedprice", 0.5, 10000).alias("m")
-        )
-        dev = li.join(F.broadcast(med), li.l_returnflag == med.g).withColumn(
-            "adev", F.abs(F.col("l_extendedprice") - F.col("m"))
-        )
-        mad = dev.groupBy(F.col("g").alias("g2")).agg(
-            F.percentile_approx("adev", 0.5, 10000).alias("mad")
-        )
-        return (
-            dev.join(F.broadcast(mad), dev.g == mad.g2)
-            .filter(F.col("adev") > 1.8 * F.col("mad"))
-            .groupBy("g")
-            .agg(F.count("*").alias("n_outliers"))
-        )
     # ONE scan of the fact table builds the (group, value) counts; the
     # median, the MAD median and the outlier tally all run over that
     # ~3x smaller table with exact unit-weighted ranks (bit-identical

@@ -480,14 +480,9 @@ _SHINGLES_SQL = """list_distinct(CASE WHEN len({w}) >= 3 THEN
     """,
 )
 def q136(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     docs = load(spark, sf_dir, "documents")
-    cap = os.environ.get("SPARK_GRAFT_SSJOIN_MAXTOK")
     return D.prefix_jaccard_pairs(
-        docs, threshold=0.6, tokens=D.shingle_set("text"),
-        max_verify_tokens=int(cap) if cap else None,
-    )
+        docs, threshold=0.6, tokens=D.shingle_set("text"))
 
 
 # --------------------------------------------------------------------------

@@ -156,13 +156,11 @@ def _overlap():
     )
 
 
-def select_tiles(tiles: DataFrame, subset: list[str] | None = None,
-                 existing: DataFrame | None = None) -> DataFrame:
-    """F2 subset + F5 target-exists filters."""
+def select_tiles(tiles: DataFrame,
+                 subset: list[str] | None = None) -> DataFrame:
+    """F2 subset filter."""
     if subset:
         tiles = tiles.filter(F.col("tile_id").isin(subset))
-    if existing is not None:
-        tiles = tiles.join(existing, "tile_id", "left_anti")
     return tiles
 
 
@@ -238,10 +236,12 @@ def plan_tiles(
     the driver does O(kept tiles + file x tile overlaps) work — the
     order of the status rows the report collects anyway — and never
     enumerates the grid. The rows equal
-    ``tile_files(select_tiles(seed_tiles(...), subset, existing), catalog)``:
-    bounds from :meth:`Grid.get_tile_bounds` (``seed_tiles``' double
-    expressions) and ``uris`` ordered by ``(band, uri)``, duplicates
-    kept. Rows are in tile-id order.
+    ``tile_files(select_tiles(seed_tiles(...), subset), catalog)`` less
+    the ``existing_tile_ids`` (F5, the sorted id list
+    ``object_store.existing_tiles`` returns): bounds from
+    :meth:`Grid.get_tile_bounds` (``seed_tiles``' double expressions) and
+    ``uris`` ordered by ``(band, uri)``, duplicates kept. Rows are in
+    tile-id order.
     """
     keep = set(subset) if subset else None
     skip = set(existing_tile_ids or ())
@@ -582,26 +582,20 @@ class RasterPipe:
         files: list[dict],
         subset: list[str] | None = None,
         existing_tile_ids: list[str] | None = None,
-        existing: DataFrame | None = None,
     ) -> DataFrame:
         """Full pipeline; returns the per-tile status DataFrame (F10).
 
         Statuses mirror ``pipes/pipe.py:137-162``: processed / skipped
         (has no data) / failed, all decided by the tile job. The tile set
         is planned on the driver (:func:`plan_tiles`) and runs as one
-        ``mapInPandas`` tile job (:meth:`tile_jobs`) with no exchange.
-        Tiles outside ``subset`` and ``existing`` tiles are filtered out
-        before any work and get no status row: ``subset`` and
-        ``existing_tile_ids`` on the driver, while ``existing`` takes a
-        tile_id DataFrame (e.g. ``object_store.existing_tiles``), which
-        :func:`select_tiles` anti-joins onto the local tile relation and
-        which then wins over ``existing_tile_ids``.
+        ``mapInPandas`` tile job (:meth:`tile_jobs`), so the executed
+        plan is always ``LocalTableScan -> MapInPandas(tile_job)``: no
+        exchange, no join. Tiles outside ``subset`` and the
+        ``existing_tile_ids`` (F5, e.g. ``object_store.existing_tiles``)
+        are dropped on the driver before any work and get no status row.
         """
-        if existing is not None:
-            existing_tile_ids = None
-        tiles = plan_tiles(spark, self.grid_obj, files, subset,
-                           existing_tile_ids)
-        return self.tile_jobs(select_tiles(tiles, existing=existing))
+        return self.tile_jobs(plan_tiles(spark, self.grid_obj, files, subset,
+                                         existing_tile_ids))
 
     def publish(
         self,

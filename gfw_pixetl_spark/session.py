@@ -17,6 +17,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
+# Local cores when SPARK_GRAFT_CPUS is unset.
+DEFAULT_CPUS = 32
+
 
 def _default_driver_memory() -> str:
     """Size the driver heap to the machine: in ``local[N]`` the driver
@@ -49,7 +52,7 @@ def get_spark(
     ``shuffle_partitions`` defaults to the parallelism of the master; on a
     real cluster you would size it to ~2-3x total cores and let AQE coalesce.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(DEFAULT_CPUS))
     master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)

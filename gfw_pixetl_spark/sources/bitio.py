@@ -22,9 +22,17 @@ that many byte reads. ``zigzag``/``unzigzag`` map signed integers to
 unsigned ones and back (0, -1, 1, -2 -> 0, 1, 2, 3) for every Python
 int, matching the int64 ``(n << 1) ^ (n >> 63)`` form on the int64
 range.
+
+``refuse_damage`` wraps a container decoder's entry point so that any
+damaged file is refused with ``ValueError``, whichever decoder step
+trips over it.
 """
 
 from __future__ import annotations
+
+import functools
+import struct
+import zlib
 
 # Writers move whole bytes out of their accumulator once it holds this
 # many bits, so each write costs O(1) whatever the stream length.
@@ -289,3 +297,30 @@ def zigzag(n: int) -> int:
 
 def unzigzag(u: int) -> int:
     return (u >> 1) ^ -(u & 1)
+
+
+# --------------------------------------------------------------------------
+# damaged input
+# --------------------------------------------------------------------------
+
+# What damaged bytes raise inside a decoder: a short buffer, a missing
+# field or stream, a field of the wrong type, a zero extent, a corrupt
+# deflate chunk.
+DAMAGE = (AttributeError, IndexError, KeyError, TypeError, ZeroDivisionError,
+          struct.error, zlib.error)
+
+
+def refuse_damage(what: str):
+    """Decorator for a decoder's entry point: a ``DAMAGE`` error becomes
+    ``ValueError("<what> (<error type>: <message>)")``, chained to the
+    original."""
+    def wrap(fn):
+        @functools.wraps(fn)
+        def guarded(*args, **kwargs):
+            try:
+                return fn(*args, **kwargs)
+            except DAMAGE as exc:
+                raise ValueError(
+                    f"{what} ({type(exc).__name__}: {exc})") from exc
+        return guarded
+    return wrap

@@ -37,6 +37,8 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
+from .bitio import refuse_damage
+
 # --- TIFF tag ids -----------------------------------------------------------
 T_NEW_SUBFILE_TYPE = 254
 T_IMAGE_WIDTH = 256
@@ -93,6 +95,7 @@ def _lzw_encode(data: bytes) -> bytes:
         while nbits >= 8:
             nbits -= 8
             out.append((bitbuf >> nbits) & 0xFF)
+        bitbuf &= (1 << nbits) - 1  # keep the buffer short: O(1) shifts
 
     table = {bytes([i]): i for i in range(256)}
     next_code, width = 258, 9
@@ -146,7 +149,8 @@ def _lzw_decode(data: bytes) -> bytes:
             pos += 1
             nbits += 8
         nbits -= width
-        code = (bitbuf >> nbits) & ((1 << width) - 1)
+        code = bitbuf >> nbits
+        bitbuf &= (1 << nbits) - 1  # keep the buffer short: O(1) shifts
         if code == EOI:
             return bytes(out)
         if code == CLEAR:
@@ -644,6 +648,7 @@ class GeoTiff:
 
     ``read_window`` touches only the tiles intersecting the window — on a
     range-request filesystem this is the COG partial-read property.
+    Opening or reading a damaged file raises ``ValueError``.
     """
 
     path: str
@@ -688,6 +693,7 @@ class GeoTiff:
         return cls.from_file(io.BytesIO(buf), path)
 
     @classmethod
+    @refuse_damage("corrupt GeoTIFF")
     def from_file(cls, f, path: str) -> "GeoTiff":
         head = f.read(8)
         if head[:2] == b"II":
@@ -910,6 +916,7 @@ class GeoTiff:
                     arr[..., s]))
         return arr.astype(self.dtype)
 
+    @refuse_damage("corrupt GeoTIFF")
     def read_window(
         self,
         col_off: int,

@@ -32,10 +32,8 @@ import os
 from collections.abc import Iterator
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.functions import col as F_col
-
-from ..session import local_frame
 
 try:  # boto3 ships in this container; gate anyway for minimal installs
     import boto3
@@ -131,17 +129,13 @@ def list_files(cfg: S3Config, bucket: str, pattern: str) -> list[str]:
     return keys
 
 
-def existing_tiles(
-    spark: SparkSession, cfg: S3Config, bucket: str, prefix: str
-) -> DataFrame:
-    """F5 incremental-skip input: DataFrame of tile_ids already present
-    under the destination prefix (``pipes/pipe.py:90-109``). Key scheme is
+def existing_tiles(cfg: S3Config, bucket: str, prefix: str) -> list[str]:
+    """F5 incremental-skip input: the sorted tile_ids already present
+    under the destination prefix (``pipes/pipe.py:90-109``), for
+    ``RasterPipe.run(existing_tile_ids=...)``. Key scheme is
     ``{prefix}/{tile_id}.{ext}`` (``layers.py:55-81``)."""
     keys = list_files(cfg, bucket, prefix.rstrip("/") + "/")
-    ids = sorted(
-        {os.path.splitext(os.path.basename(k))[0] for k in keys}
-    )
-    return local_frame(spark, [(t,) for t in ids], "tile_id string")
+    return sorted({os.path.splitext(os.path.basename(k))[0] for k in keys})
 
 
 def fetch_cog_profile(

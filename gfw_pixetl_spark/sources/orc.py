@@ -31,12 +31,13 @@ same way sources/deltalog.py and sources/iceberg.py do.
 from __future__ import annotations
 
 import decimal
-import functools
 import struct
 import zlib
 from typing import Any, Iterable
 
-from .bitio import read_uvarint, unzigzag, write_uvarint, zigzag
+from .bitio import (
+    read_uvarint, refuse_damage, unzigzag, write_uvarint, zigzag,
+)
 
 MAGIC = b"ORC"
 
@@ -831,30 +832,12 @@ def _merge_stats(stats: list[bytes]) -> bytes:
 # Reader
 # --------------------------------------------------------------------------
 
-# what damaged bytes raise inside the decoders: a short buffer, a missing
-# stream, a field of the wrong wire type, a corrupt deflate chunk
-_DAMAGE = (AttributeError, IndexError, KeyError, TypeError, struct.error,
-           zlib.error)
-
-
-def _damage_is_value_error(fn):
-    """Refuse a damaged file with ``ValueError`` at the ``OrcFile``
-    boundary, whichever decoder step trips over it."""
-    @functools.wraps(fn)
-    def guarded(*args, **kwargs):
-        try:
-            return fn(*args, **kwargs)
-        except _DAMAGE as exc:
-            raise ValueError(
-                f"corrupt ORC file ({type(exc).__name__}: {exc})") from exc
-    return guarded
-
 
 class OrcFile:
     """Decoded ORC file: metadata immediately, rows on demand. A damaged
     file raises ``ValueError``."""
 
-    @_damage_is_value_error
+    @refuse_damage("corrupt ORC file")
     def __init__(self, data: bytes) -> None:
         if not data.startswith(MAGIC):
             raise ValueError("not an ORC file (bad header magic)")
@@ -938,7 +921,7 @@ class OrcFile:
         raw = self.data[spec["offset"]:spec["offset"] + spec["length"]]
         return decompress_stream(raw, self.compression)
 
-    @_damage_is_value_error
+    @refuse_damage("corrupt ORC file")
     def read_stripe(self, si: int) -> dict[str, list]:
         info, streams = self._stripe_streams(si)
         encodings = info["encodings"]

@@ -21,6 +21,8 @@ import zlib
 
 import numpy as np
 
+from .bitio import refuse_damage
+
 _SIG = b"\x89PNG\r\n\x1a\n"
 
 # color type -> channels
@@ -158,9 +160,10 @@ def _unfilter(raw: bytes, height: int, stride: int, bpp: int,
     return out
 
 
+@refuse_damage("corrupt PNG")
 def decode_png(data: bytes) -> np.ndarray:
     """Decode PNG bytes to (h, w, channels) uint8/uint16; palette images
-    come back expanded to RGB."""
+    come back expanded to RGB. Damaged bytes raise ``ValueError``."""
     if data[:8] != _SIG:
         raise ValueError("not a PNG (bad signature)")
     pos = 8

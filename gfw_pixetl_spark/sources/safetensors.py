@@ -20,6 +20,8 @@ import struct
 
 import numpy as np
 
+from .bitio import refuse_damage
+
 _DTYPES = {
     "F64": np.float64, "F32": np.float32, "F16": np.float16,
     "I64": np.int64, "I32": np.int32, "I16": np.int16, "I8": np.int8,
@@ -60,8 +62,10 @@ def write_safetensors(tensors: dict[str, np.ndarray],
     return struct.pack("<Q", len(head)) + head + bytes(payload)
 
 
+@refuse_damage("corrupt safetensors")
 def read_safetensors(data: bytes) -> tuple[dict, dict]:
-    """-> ({name: ndarray}, metadata dict). Strict validation."""
+    """-> ({name: ndarray}, metadata dict). Strict validation: damaged
+    bytes raise ``ValueError``."""
     if len(data) < 8:
         raise ValueError("safetensors: truncated length prefix")
     (hlen,) = struct.unpack("<Q", data[:8])

@@ -28,6 +28,8 @@ import struct
 
 import numpy as np
 
+from .bitio import refuse_damage
+
 _FMT_PCM, _FMT_ALAW, _FMT_MULAW, _FMT_IMA = 1, 6, 7, 0x11
 
 # IMA ADPCM step-size table (IMA Digital Audio Focus Group, "Recommended
@@ -263,11 +265,13 @@ def encode_wav(
     return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
 
+@refuse_damage("corrupt WAV")
 def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
     """Decode WAV bytes -> ((n, channels) int16 samples, sample_rate).
 
     8-bit PCM decodes at its native scale (``byte - 128``); G.711
-    payloads expand through the mu-law/A-law tables.
+    payloads expand through the mu-law/A-law tables. Damaged bytes raise
+    ``ValueError``.
     """
     if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE stream")

@@ -10,7 +10,6 @@ aggregations (A2-A5) run incrementally.
 from __future__ import annotations
 
 import contextlib
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,15 +27,13 @@ def stream_shuffle_partitions(spark: SparkSession):
     dimension-sized (event types x hourly windows — thousands of keys,
     not events), so 32 state stores are pure per-batch overhead:
     measured 32 -> 8 halves every availableNow drain at sf0.1 while the
-    SCAN parallelism (file-source splits) is unaffected. On a cluster
-    you size this to state volume, not core count — hence the env knob;
-    the default stays deliberately modest rather than tracking
-    SPARK_GRAFT_CPUS, because state, unlike input, does not grow with
-    the executor count.
+    SCAN parallelism (file-source splits) is unaffected. The count is
+    sized to state volume, not core count: it stays at 8 rather than
+    tracking SPARK_GRAFT_CPUS, because state, unlike input, does not
+    grow with the executor count.
     """
-    n = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         yield
     finally:

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import random
 import sys
 from pathlib import Path
 
@@ -40,3 +41,26 @@ def duck():
     register_duckdb_views(con, SF_SMOKE)
     yield con
     con.close()
+
+
+def refusal_counts(decode, blob: bytes, n: int, seed: int) -> dict:
+    """Hostile-input fuzz: decode ``n`` damaged copies of the valid file
+    ``blob``, each cut at a random length or with 1-3 random bits
+    flipped (``random.Random(seed)``). Returns how many decoded and how
+    many raised ``ValueError``; any other exception propagates."""
+    rng = random.Random(seed)
+    counts = {"ok": 0, "ValueError": 0}
+    for _ in range(n):
+        b = bytearray(blob)
+        if rng.random() < 0.5:
+            b = b[:rng.randrange(len(b))]
+        else:
+            for _ in range(rng.randint(1, 3)):
+                i = rng.randrange(len(b) * 8)
+                b[i // 8] ^= 1 << (i % 8)
+        try:
+            decode(bytes(b))
+            counts["ok"] += 1
+        except ValueError:
+            counts["ValueError"] += 1
+    return counts

@@ -21,6 +21,8 @@ from gfw_pixetl_spark.sources.geotiff import (
     validate_cog,
     write_cog,
 )
+from gfw_pixetl_spark.sources.raster import GeoTIFFReader
+from tests.conftest import refusal_counts
 
 TRANSFORM = (-10.0, 0.25, 60.0, 0.25)
 
@@ -442,6 +444,22 @@ def test_lzw_packbits_roundtrip(tmp_path, compress):
         data[:, 51:131, 37:137])
 
 
+def test_lzw_cost_is_linear_in_block_size():
+    """A 256 KiB block round-trips through the LZW codec in well under a
+    second. A bit buffer that keeps every bit shifted into it makes each
+    shift cost O(bytes so far) and a block O(n^2): about 50 s per
+    direction at this size on a 4-vCPU Xeon."""
+    import time
+
+    from gfw_pixetl_spark.sources.geotiff import _lzw_decode, _lzw_encode
+
+    raw = np.random.default_rng(1).integers(
+        0, 256, 1 << 18).astype(np.uint8).tobytes()
+    t0 = time.perf_counter()
+    assert _lzw_decode(_lzw_encode(raw)) == raw
+    assert time.perf_counter() - t0 < 10
+
+
 def test_lzw_with_predictor(tmp_path):
     data = np.cumsum(
         np.ones((1, 128, 128), dtype="uint16"), axis=2).astype("uint16")
@@ -685,3 +703,25 @@ def test_palette_gates(tmp_path):
     with pytest.raises(ValueError, match="out of range"):
         write_cog(p, rgb[:1], transform=(0.0, 0.1, 10.0, 0.1),
                   colormap={300: (1, 1, 1)})
+
+
+@pytest.mark.parametrize("compress", ["DEFLATE", "LZW", "NONE", "PACKBITS"])
+def test_hostile_files_raise_value_error(tmp_path, compress):
+    """Seeded fuzz through the raster pipe's reader: truncated and
+    bit-flipped copies of a writer-made COG (DEFLATE with overviews)
+    either read or raise ValueError, never struct.error, zlib.error,
+    KeyError, IndexError or ZeroDivisionError."""
+    src = str(tmp_path / "src.tif")
+    write_cog(src, _data("uint16", rows=64, cols=64),
+              transform=(0.0, 1 / 64, 1.0, 1 / 64), nodata=0,
+              blockxsize=32, compress=compress,
+              overviews=compress == "DEFLATE")
+    dst = str(tmp_path / "damaged.tif")
+
+    def read(blob):
+        with open(dst, "wb") as f:
+            f.write(blob)
+        GeoTIFFReader()([dst], (0.0, 0.0, 1.0, 1.0), (64, 64), 1)
+
+    counts = refusal_counts(read, open(src, "rb").read(), 200, seed=11)
+    assert counts["ok"] and counts["ValueError"]

@@ -88,10 +88,10 @@ def test_upload_tiles_and_manifest(spark, tmp_path, s3cfg):
     assert profile["crs"] == "EPSG:4326" and profile["tiled"]
 
     # F5 incremental skip now sees the destination as populated
-    ex = existing_tiles(spark, s3cfg, BUCKET, prefix)
-    assert {r.tile_id for r in ex.collect()} == {"00N_000E", "10N_000E"}
+    ex = existing_tiles(s3cfg, BUCKET, prefix)
+    assert ex == ["00N_000E", "10N_000E"]
     status2 = pipe.run(
-        spark, files, subset=["00N_000E", "10N_000E"], existing=ex
+        spark, files, subset=["00N_000E", "10N_000E"], existing_tile_ids=ex
     )
     assert status2.count() == 0
 
@@ -109,9 +109,8 @@ def test_upload_tiles_and_manifest(spark, tmp_path, s3cfg):
     assert len(doc["features"]) == 2
 
 
-def test_existing_tiles_empty_prefix(spark, s3cfg):
-    df = existing_tiles(spark, s3cfg, BUCKET, "nothing/here")
-    assert df.count() == 0 and df.columns == ["tile_id"]
+def test_existing_tiles_empty_prefix(s3cfg):
+    assert existing_tiles(s3cfg, BUCKET, "nothing/here") == []
 
 
 def test_retry_helper_recovers_and_gives_up():

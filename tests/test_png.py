@@ -11,6 +11,7 @@ import pytest
 
 from gfw_pixetl_spark.functions.multimodal import decode_image, png_payload
 from gfw_pixetl_spark.sources.png import decode_png, encode_png
+from tests.conftest import refusal_counts
 
 
 @pytest.mark.parametrize("filter_type", [0, 1, 2, 3, 4])
@@ -157,3 +158,12 @@ def test_decode_image_gif_local_palette():
     assert out.shape == (2, 2, 3)
     assert tuple(out[0, 0]) == (9, 8, 7)
     assert tuple(out[0, 1]) == (1, 2, 3)
+
+
+def test_hostile_files_raise_value_error():
+    """Seeded fuzz: truncated and bit-flipped PNGs raise ValueError,
+    never struct.error."""
+    img = np.random.default_rng(7).integers(
+        0, 256, size=(16, 16, 3)).astype(np.uint8)
+    counts = refusal_counts(decode_png, encode_png(img), 300, seed=7)
+    assert counts["ValueError"]

@@ -352,12 +352,9 @@ def _planned_windows(spark, pipe, files, existing_tile_ids=None):
     (``transform_windows`` -> ``write_tiles``) over the same input."""
     from pyspark.sql import functions as F
 
-    existing = None
+    tiles = rp.seed_tiles(spark, pipe.grid_obj)
     if existing_tile_ids:
-        existing = spark.createDataFrame(
-            [(t,) for t in existing_tile_ids], "tile_id string")
-    tiles = rp.select_tiles(rp.seed_tiles(spark, pipe.grid_obj),
-                            existing=existing)
+        tiles = tiles.filter(~F.col("tile_id").isin(existing_tile_ids))
     windows = rp.plan_windows(
         rp.tile_files(tiles, rp.file_catalog(spark, files)), pipe.grid_obj)
     # reverse window order, so a writer that kept arrival order would

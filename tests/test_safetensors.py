@@ -14,6 +14,7 @@ from gfw_pixetl_spark.sources.safetensors import (
     read_safetensors,
     write_safetensors,
 )
+from tests.conftest import refusal_counts
 
 
 @given(st.integers(0, 2**32 - 1), st.integers(1, 5), st.integers(1, 8))
@@ -89,3 +90,13 @@ def test_hole_between_spans_rejected():
     bad = struct.pack("<Q", len(h2)) + h2 + b"\0" * 6
     with pytest.raises(ValueError, match="overlap or"):
         read_safetensors(bad)
+
+
+def test_hostile_files_raise_value_error():
+    """Seeded fuzz: truncated and bit-flipped files decode or raise
+    ValueError, never KeyError (a flipped ``data_offsets`` key)."""
+    data = write_safetensors(
+        {"a": np.arange(6, dtype=np.float32).reshape(2, 3),
+         "b": np.arange(4, dtype=np.int64)}, {"k": "v"})
+    counts = refusal_counts(read_safetensors, data, 300, seed=7)
+    assert counts["ok"] and counts["ValueError"]

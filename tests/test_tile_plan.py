@@ -106,8 +106,9 @@ def test_plan_tiles_equals_spark_planned_frame(spark, name):
 
 @pytest.mark.parametrize("name", ["10/40000", "8/32000", "zoom_12"])
 def test_plan_tiles_subset_and_existing(spark, name):
-    """F2 and F5 on the driver keep exactly the rows ``select_tiles``
-    keeps on the Spark-planned frame."""
+    """F2 and F5 on the driver keep exactly the rows that ``select_tiles``
+    and an anti-join on the existing ids keep on the Spark-planned
+    frame."""
     grid = grid_factory(name)
     files = seeded_files(grid, seed=7)
     ids = [r[0] for r in _rows(rp.plan_tiles(spark, grid, files))]
@@ -115,8 +116,9 @@ def test_plan_tiles_subset_and_existing(spark, name):
     existing = ids[::3]
     catalog = rp.file_catalog(spark, files)
     frame = spark.createDataFrame([(t,) for t in existing], "tile_id string")
-    want = _rows(rp.tile_files(rp.select_tiles(
-        rp.seed_tiles(spark, grid), subset, frame), catalog))
+    tiles = rp.select_tiles(rp.seed_tiles(spark, grid), subset)
+    want = _rows(rp.tile_files(
+        tiles.join(frame, "tile_id", "left_anti"), catalog))
     got = _rows(rp.plan_tiles(spark, grid, files, subset, existing))
     assert got == want
     assert {r[0] for r in got} == set(ids[::2]) - set(existing)
@@ -195,9 +197,8 @@ def test_tiles_land_in_distinct_partitions(spark, tmp_path):
 
 
 def test_plan_without_existing_has_no_exchange(spark, tmp_path):
-    """Without an ``existing`` frame the executed status plan is the
-    local tile relation under the tile job: no exchange, no join. An
-    ``existing`` frame is anti-joined onto the local relation."""
+    """Whatever the subset and existing ids, the executed status plan is
+    the local tile relation under the tile job: no exchange, no join."""
     grid = LatLngGrid(10, 160)
     pipe = make_pipe(tmp_path, grid)
     files = [_file("m://a", (-10.0, -10.0, 10.0, 10.0))]
@@ -208,9 +209,7 @@ def test_plan_without_existing_has_no_exchange(spark, tmp_path):
         plan = status._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan and "Join" not in plan, kwargs
         assert plan.startswith("MapInPandas tile_job("), plan
-    existing = spark.createDataFrame([("10N_000E",)], "tile_id string")
-    rows = pipe.run(spark, files, existing=existing,
-                    existing_tile_ids=["00N_000E"]).collect()
+    rows = pipe.run(spark, files, existing_tile_ids=["10N_000E"]).collect()
     assert sorted(r.tile_id for r in rows) == [
         "00N_000E", "00N_010W", "10N_010W"]
 

@@ -12,6 +12,7 @@ from gfw_pixetl_spark.sources.wav import (
     alaw_decode, alaw_encode, decode_wav, encode_wav, mulaw_decode,
     mulaw_encode,
 )
+from tests.conftest import refusal_counts
 
 
 @given(st.integers(0, 2**32 - 1), st.integers(1, 500),
@@ -107,3 +108,12 @@ def test_unknown_chunks_skipped_and_errors():
         bad = bytearray(encode_wav(np.zeros(4, np.int16)))
         bad[12 + 8 + 14] = 24
         decode_wav(bytes(bad))
+
+
+def test_hostile_files_raise_value_error():
+    """Seeded fuzz: truncated and bit-flipped WAVs decode or raise
+    ValueError, never struct.error."""
+    snd = np.random.default_rng(7).integers(
+        -3000, 3000, size=(400, 2)).astype(np.int16)
+    counts = refusal_counts(decode_wav, encode_wav(snd), 300, seed=7)
+    assert counts["ok"] and counts["ValueError"]
