@@ -19,3 +19,9 @@ predicates, the safe ``calc`` compiler).
 """
 
 __version__ = "0.1.0"
+
+from . import _zipcache
+
+# Every engine UDF imports this package when it is unpickled in a Python
+# worker: keep the worker's zip-import directories across its tasks.
+_zipcache.install()

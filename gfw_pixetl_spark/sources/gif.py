@@ -17,7 +17,8 @@ Implemented:
   screen per the disposal method (none/keep and restore-to-background).
 
 Corrupt input raises ValueError (truncated sub-blocks, bad LZW codes,
-missing trailer) — never hangs or mis-slices. Per-file work runs in
+missing trailer, and through ``bitio.refuse_damage`` any short header
+or out-of-range field) — never hangs or mis-slices. Per-file work runs in
 Arrow ``mapInPandas`` kernels; q387 value-checks a doc-parameterized
 animation (frame count, dims, loop count, per-frame palette-index
 probes) against an analytic oracle — exact because GIF is lossless.
@@ -28,6 +29,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+from .bitio import refuse_damage
 
 
 # --------------------------------------------------------------------------
@@ -220,6 +223,7 @@ def encode_gif(frames: list[dict], palette: np.ndarray,
     return bytes(out)
 
 
+@refuse_damage("corrupt GIF")
 def decode_gif(data: bytes) -> dict:
     """{'width', 'height', 'palette', 'loop', 'frames': [{'left',
     'top', 'pixels' (region index array), 'delay_cs', 'transparent',

@@ -13,6 +13,7 @@ import pytest
 from gfw_pixetl_spark.sources.gif import (
     decode_gif, encode_gif, gif_to_rgb, lzw_decode, lzw_encode,
 )
+from tests.conftest import refusal_counts
 
 
 def _pal(n=16):
@@ -33,7 +34,7 @@ def test_lzw_roundtrip(mcs):
                                      len(rep)), rep)
 
 
-def test_container_roundtrip_and_compositing():
+def _two_frames():
     f0 = (np.arange(40 * 60).reshape(40, 60) % 16).astype(np.uint8)
     f1 = ((np.arange(20 * 30).reshape(20, 30) * 3) % 16).astype(np.uint8)
     gif = encode_gif(
@@ -41,6 +42,11 @@ def test_container_roundtrip_and_compositing():
          {"pixels": f1, "left": 10, "top": 5, "delay_cs": 20,
           "transparent": 3}],
         _pal(), loop=7)
+    return f0, f1, gif
+
+
+def test_container_roundtrip_and_compositing():
+    f0, f1, gif = _two_frames()
     d = decode_gif(gif)
     assert (d["width"], d["height"], d["loop"]) == (60, 40, 7)
     assert np.array_equal(d["frames"][0]["pixels"], f0)
@@ -84,6 +90,13 @@ def test_truncation_and_bad_codes_raise():
         decode_gif(gif[:-8])
     with pytest.raises(ValueError, match="out of table|pixels|EOI"):
         lzw_decode(b"\xff\xff\xff", 2, 64)
+
+
+def test_hostile_files_raise_value_error():
+    """Seeded fuzz: truncated and bit-flipped two-frame GIFs raise
+    ValueError, never struct.error or IndexError."""
+    counts = refusal_counts(decode_gif, _two_frames()[2], 300, seed=7)
+    assert counts["ValueError"] and counts["ok"]
 
 
 def test_disposal_3_restores_previous_canvas():
