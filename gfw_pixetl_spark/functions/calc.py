@@ -160,14 +160,12 @@ def set_datatype(
     return np.ma.filled(array, nodata_value).astype(datatype)
 
 
+def valid_count(band_arrays: np.ma.MaskedArray) -> int:
+    """Unmasked pixels over all bands."""
+    mask = np.ma.getmaskarray(band_arrays)
+    return mask.size - int(np.count_nonzero(mask))
+
+
 def block_has_data(band_arrays: np.ma.MaskedArray) -> bool:
     """Empty-block predicate (``array_utils.py:44-58``)."""
-    if band_arrays.ndim == 2:
-        band_arrays = band_arrays.reshape(1, *band_arrays.shape)
-    if band_arrays.shape[1] == 0 or band_arrays.shape[2] == 0:
-        return False
-    valid = 0
-    for band in band_arrays:
-        mask = np.ma.getmaskarray(band)
-        valid += int((~mask).sum())
-    return valid != 0
+    return valid_count(band_arrays) != 0

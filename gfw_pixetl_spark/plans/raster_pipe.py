@@ -49,7 +49,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.calc import apply_calc, block_has_data, set_datatype
+from ..functions.calc import apply_calc, set_datatype, valid_count
 from ..grids import BoundingBox, Grid
 from ..models import LayerModel
 from ..session import local_frame
@@ -481,10 +481,12 @@ class RasterPipe:
                 )
                 arr = reader(list(r.uris), bounds, (r.height, r.width),
                              band_count)
-                if not block_has_data(arr):
+                valid = valid_count(arr)
+                if not valid:
                     return 0, None, 0
-                arr = apply_calc(arr, calc_expr, band_count)
-                valid = int((~np.ma.getmaskarray(arr)).sum())
+                if calc_expr:  # calc may mask more pixels
+                    arr = apply_calc(arr, calc_expr, band_count)
+                    valid = valid_count(arr)
                 filled = set_datatype(arr, nodata, np_dtype)
             except Exception as e:  # noqa: BLE001
                 # a bad window marks its tile failed instead of killing

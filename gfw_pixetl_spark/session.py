@@ -10,6 +10,7 @@ naive-parquet producers.
 from __future__ import annotations
 
 import os
+import stat
 
 import pandas as pd
 import pyarrow as pa
@@ -41,6 +42,32 @@ def _default_driver_memory() -> str:
     return "8g"
 
 
+def _python_socket_dir() -> str | None:
+    """A short directory, private to this user, for the Unix domain
+    sockets between the JVM and its Python workers; None if it cannot
+    be had. It is fixed under ``/tmp`` and reused by every session,
+    whatever ``TMPDIR`` or ``java.io.tmpdir`` say: a socket path
+    ``<dir>/.<uuid4>.sock`` must fit ``AF_UNIX``'s 107 bytes, and a
+    directory under a deep checkout does not. Spark removes each
+    socket file when its server closes. A path that is not a directory
+    of this user's (a file, a link, another user's) is not used."""
+    if os.name != "posix":
+        return None
+    path = f"/tmp/gfw_pixetl_spark-{os.getuid()}"
+    try:
+        os.mkdir(path, 0o700)
+    except FileExistsError:
+        pass
+    except OSError:
+        return None
+    st = os.lstat(path)
+    if not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid():
+        return None
+    if stat.S_IMODE(st.st_mode) != 0o700:
+        os.chmod(path, 0o700)
+    return path
+
+
 def get_spark(
     app_name: str = "gfw_pixetl_spark",
     master: str | None = None,
@@ -59,6 +86,14 @@ def get_spark(
     ``wall_s`` 3.65 -> 3.24 s over 6 pairs on 4 vCPUs). The cost is that
     analysis errors no longer carry PySpark's DataFrame call-site
     context.
+
+    On a ``local`` master, where the driver JVM is the executor, Python
+    workers talk to the JVM over Unix domain sockets
+    (``spark.python.unix.domain.socket.enabled``) in
+    :func:`_python_socket_dir`. Over TCP, Spark's Python runner leaves
+    Nagle's algorithm on, and it meets the worker's delayed ACK: every
+    Python task waited ~40 ms for its first Arrow batch (4 vCPUs; ~1.5
+    ms over a Unix socket). Other masters keep Spark's default transport.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(DEFAULT_CPUS))
     master = master or f"local[{cpus}]"
@@ -95,6 +130,14 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
+    sock_dir = (_python_socket_dir()
+                if master == "local" or master.startswith("local[")
+                else None)
+    if sock_dir is not None:
+        builder = (
+            builder.config("spark.python.unix.domain.socket.enabled", "true")
+            .config("spark.python.unix.domain.socket.dir", sock_dir)
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

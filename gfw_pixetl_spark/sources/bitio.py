@@ -304,10 +304,10 @@ def unzigzag(u: int) -> int:
 # --------------------------------------------------------------------------
 
 # What damaged bytes raise inside a decoder: a short buffer, a missing
-# field or stream, a field of the wrong type, a zero extent, a corrupt
-# deflate chunk.
-DAMAGE = (AttributeError, IndexError, KeyError, TypeError, ZeroDivisionError,
-          struct.error, zlib.error)
+# field or stream, a field of the wrong type, a zero extent, a value too
+# wide for its array, a corrupt deflate chunk.
+DAMAGE = (AttributeError, IndexError, KeyError, OverflowError, TypeError,
+          ZeroDivisionError, struct.error, zlib.error)
 
 
 def refuse_damage(what: str):

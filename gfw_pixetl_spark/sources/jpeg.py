@@ -33,6 +33,8 @@ import struct
 
 import numpy as np
 
+from .bitio import refuse_damage
+
 # zigzag scan order: position in the zigzag sequence -> raster index
 ZIGZAG = np.array([
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -222,11 +224,13 @@ def _extend(v: int, t: int) -> int:
     return v - ((1 << t) - 1) if v < (1 << (t - 1)) else v
 
 
+@refuse_damage("corrupt JPEG")
 def decode_jpeg(data: bytes) -> np.ndarray:
     """Decode baseline JPEG bytes to (h, w, channels) uint8.
 
     Grayscale comes back (h, w, 1); 3-component scans are converted
     YCbCr->RGB per JFIF (BT.601 coefficients, rounded and clipped).
+    A damaged file raises ``ValueError``.
     """
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")

@@ -77,6 +77,12 @@ class GeoTIFFReader(WindowReader):
     resampling/reprojection between grids is ``WarpReader``'s job (C4).
     Only tiles intersecting the window are decompressed, so a 100 TB
     mosaic costs range-reads proportional to the window, not the files.
+
+    The mosaic is built on plain arrays: each file's window data and
+    mask (``read_window``'s mask, or'd with ``data == src_nodata``), the
+    first file's adopted without a copy and later files copied in where
+    the mosaic is still masked. One ``MaskedArray`` wraps the result, so
+    no masked-array operation runs per file.
     """
 
     def __init__(self, src_nodata=None) -> None:
@@ -99,21 +105,20 @@ class GeoTIFFReader(WindowReader):
                     "cross-grid reads"
                 )
             arr = src.read_window(c0, r0, cols, rows)
+            data, mask = np.ma.getdata(arr), np.ma.getmaskarray(arr)
             if self.src_nodata is not None:
-                arr = np.ma.masked_equal(arr, self.src_nodata)
-            if arr.shape[0] >= band_count:
-                arr = arr[:band_count]
+                mask = mask | (data == self.src_nodata)
+            if data.shape[0] >= band_count:
+                data, mask = data[:band_count], mask[:band_count]
             else:  # single-band source feeding a multiband calc (C1)
-                reps = -(-band_count // arr.shape[0])
-                arr = np.ma.concatenate([arr] * reps)[:band_count]
-            data = np.ma.getdata(arr)
-            mask = np.ma.getmaskarray(arr)
+                bands = np.arange(band_count) % data.shape[0]
+                data, mask = data[bands], mask[bands]
             if accum_data is None:
-                accum_data = data.copy()
-                accum_mask = mask.copy()
+                # the window's arrays are fresh: adopt them, no copy
+                accum_data, accum_mask = data, mask
             else:
-                take = accum_mask & ~mask
-                accum_data[take] = data[take]
+                np.copyto(accum_data, data, casting="unsafe",
+                          where=accum_mask & ~mask)
                 accum_mask &= mask
         if accum_data is None:
             accum_data = np.zeros((band_count, rows, cols), dtype="float64")

@@ -19,6 +19,7 @@ pixels are already in memory there), never as a second read pass over
 
 from __future__ import annotations
 
+import math
 import os
 
 import numpy as np
@@ -26,6 +27,12 @@ import numpy as np
 from .geotiff import GeoTiff
 
 HIST_BUCKETS = 256
+
+# How far, relatively, NumPy's pairwise sum over a band's pixels can put
+# the std from the counted one: its worst case for a 40000^2 band (~43
+# roundings of the variance) is 2.4e-15; measured on random 16-bit
+# bands, under 4e-16.
+_TIE = 2.5e-15
 
 
 def _valid_pixels(arr: np.ndarray, nodata) -> np.ndarray:
@@ -41,44 +48,94 @@ def _valid_pixels(arr: np.ndarray, nodata) -> np.ndarray:
     return arr[keep]
 
 
-def band_stats(arr: np.ndarray, nodata=None) -> dict | None:
-    """min/max/mean/std_dev over valid pixels (``BandStats`` shape,
-    models/pydantic.py:88-92); None when the band is all-nodata (the
-    reference skips stats for empty tiles)."""
-    valid = _valid_pixels(arr, nodata)
-    if valid.size == 0:
-        return None
-    v = valid.astype("float64")
-    return {
-        "min": float(v.min()),
-        "max": float(v.max()),
-        "mean": float(v.mean()),
-        "std_dev": float(v.std()),
-    }
+def _value_counts(arr: np.ndarray, nodata) -> tuple[np.ndarray, np.ndarray]:
+    """``(values, counts)`` of an integer band of at most 16 bits: its
+    distinct valid values as float64, ascending, and how many pixels
+    hold each. One ``bincount`` over the band; nodata's bucket is
+    cleared, which is ``arr != nodata`` for every nodata the band can
+    hold (a NaN, fractional or out-of-range nodata excludes nothing)."""
+    info = np.iinfo(arr.dtype)
+    idx = arr.ravel()
+    if info.min:  # signed: flip the sign bit, so index = value - min
+        unsigned = np.dtype(f"u{arr.dtype.itemsize}")
+        idx = idx.view(unsigned) ^ unsigned.type(-info.min)
+    counts = np.bincount(idx, minlength=info.max - info.min + 1)
+    if nodata is not None:
+        nd = float(nodata)
+        if nd.is_integer() and info.min <= nd <= info.max:
+            counts[int(nd) - info.min] = 0
+    offsets = np.flatnonzero(counts)
+    return (offsets + info.min).astype("float64"), counts[offsets]
 
 
-def band_histogram(arr: np.ndarray, nodata=None) -> dict | None:
-    """gdalinfo -hist convention (the A5 operator's convention too):
-    256 buckets spanning [min-0.5, max+0.5] for integer data, [min, max]
-    for floats; ``Histogram`` shape (models/pydantic.py:81-85)."""
-    stats = band_stats(arr, nodata)
-    if stats is None:
-        return None
-    lo, hi = stats["min"], stats["max"]
+def band_summary(
+    arr: np.ndarray, nodata=None, histogram: bool = True,
+) -> tuple[dict | None, dict | None]:
+    """``(stats, histogram)`` of one band from one pass over its pixels,
+    what ``gdalinfo -stats -hist`` reports (``utils/gdal.py:170-238``);
+    ``(None, None)`` when the band is all-nodata (the reference skips
+    stats for empty tiles), and no histogram unless ``histogram``.
+
+    stats: min/max/mean/std_dev over valid pixels (``BandStats`` shape,
+    models/pydantic.py:88-92). histogram: the gdalinfo -hist convention
+    (the A5 operator's too), 256 buckets spanning [min-0.5, max+0.5]
+    for integer data, [min, max] for floats (``Histogram`` shape,
+    models/pydantic.py:81-85).
+
+    An integer band of at most 16 bits is reduced to per-value counts
+    (:func:`_value_counts`) and everything derives from those: the sum
+    of integers is exact, so the mean equals NumPy's over the pixels,
+    the histogram weighs each value by its count into the same buckets,
+    and the std sums the same squared deviations, count times each,
+    with ``math.fsum``. That sum is within ``_TIE`` of NumPy's pairwise
+    one, so the sidecar's 14-digit std reads the same, except near a
+    rounding edge, where the pixels are summed NumPy's way.
+    Other bands take their valid pixels once, as float64."""
+    if arr.dtype.kind in "ui" and arr.dtype.itemsize <= 2:
+        values, counts = _value_counts(arr, nodata)
+        if values.size == 0:
+            return None, None
+        n = int(counts.sum())
+        mean = float(np.dot(counts, values.astype("int64"))) / n
+        dev = values - mean
+        std = math.sqrt(math.fsum((counts * (dev * dev)).tolist()) / n)
+        if f"{std * (1 - _TIE):.14g}" != f"{std * (1 + _TIE):.14g}":
+            # too close to a rounding edge of the sidecar's 14 digits:
+            # take NumPy's own sum over the pixels
+            std = float(_valid_pixels(arr, nodata).astype("float64").std())
+        lo, hi = float(values[0]), float(values[-1])
+    else:
+        values = _valid_pixels(arr, nodata).astype("float64")
+        if values.size == 0:
+            return None, None
+        counts = None
+        mean, std = float(values.mean()), float(values.std())
+        lo, hi = float(values.min()), float(values.max())
+    stats = {"min": lo, "max": hi, "mean": mean, "std_dev": std}
+    if not histogram:
+        return stats, None
     if arr.dtype.kind in "ui":
         lo, hi = lo - 0.5, hi + 0.5
     elif hi == lo:
         hi = lo + 1.0
-    valid = _valid_pixels(arr, nodata)
-    counts, _ = np.histogram(
-        valid.astype("float64"), bins=HIST_BUCKETS, range=(lo, hi)
-    )
-    return {
+    buckets, _ = np.histogram(
+        values, bins=HIST_BUCKETS, range=(lo, hi), weights=counts)
+    return stats, {
         "count": HIST_BUCKETS,
-        "min": float(lo),
-        "max": float(hi),
-        "buckets": [int(c) for c in counts],
+        "min": lo,
+        "max": hi,
+        "buckets": [int(c) for c in buckets],
     }
+
+
+def band_stats(arr: np.ndarray, nodata=None) -> dict | None:
+    """The stats half of :func:`band_summary`."""
+    return band_summary(arr, nodata, histogram=False)[0]
+
+
+def band_histogram(arr: np.ndarray, nodata=None) -> dict | None:
+    """The histogram half of :func:`band_summary`."""
+    return band_summary(arr, nodata)[1]
 
 
 def metadata_from_array(
@@ -114,10 +171,10 @@ def metadata_from_array(
             "stats": None,
             "histogram": None,
         }
-        if compute_stats:
-            band["stats"] = band_stats(data[b], nodata)
-        if compute_histogram:
-            band["histogram"] = band_histogram(data[b], nodata)
+        if compute_stats or compute_histogram:
+            stats, hist = band_summary(data[b], nodata, compute_histogram)
+            band["stats"] = stats if compute_stats else None
+            band["histogram"] = hist
         meta["bands"].append(band)
     return meta
 

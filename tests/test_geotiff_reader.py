@@ -85,6 +85,59 @@ def test_reader_rejects_cross_grid(sources, tmp_path):
         GeoTIFFReader()([path], (0.0, 0.0, 10.0, 10.0), (160, 160), 1)
 
 
+def _masked_equal_mosaic(uris, bounds, shape, band_count, src_nodata):
+    """The mosaic as the reader built it with ``np.ma.masked_equal`` per
+    file and ``np.ma.concatenate`` for a multiband calc over fewer
+    source bands."""
+    rows, cols = shape
+    acc_data, acc_mask = None, np.ones((band_count, rows, cols), bool)
+    for uri in uris:
+        src = GeoTiff.open(uri)
+        c0, r0, _, _ = src.window_from_bounds(bounds)
+        arr = src.read_window(c0, r0, cols, rows)
+        if src_nodata is not None:
+            arr = np.ma.masked_equal(arr, src_nodata)
+        if arr.shape[0] >= band_count:
+            arr = arr[:band_count]
+        else:
+            arr = np.ma.concatenate([arr] * band_count)[:band_count]
+        data, mask = np.ma.getdata(arr), np.ma.getmaskarray(arr)
+        if acc_data is None:
+            acc_data, acc_mask = data.copy(), mask.copy()
+        else:
+            take = acc_mask & ~mask
+            acc_data[take] = data[take]
+            acc_mask &= mask
+    return acc_data, acc_mask
+
+
+@pytest.mark.parametrize("src_nodata", [None, 0, 40])
+@pytest.mark.parametrize("band_count", [1, 2, 3])
+@pytest.mark.parametrize("bounds,shape", [
+    ((0.0, 0.0, 10.0, 10.0), (160, 160)),   # the whole tile
+    ((2.5, 2.5, 7.5, 7.5), (80, 80)),       # across src_a's east edge
+    ((-2.5, 5.0, 2.5, 10.0), (80, 80)),     # hangs off every source
+])
+def test_reader_matches_masked_equal_mosaic(sources, tmp_path, src_nodata,
+                                            band_count, bounds, shape):
+    """Plain-mask mosaic == the masked-array one, data and mask, over
+    overlapping files: a, b (nodata 0) and a two-band source c with no
+    nodata tag; a single-band source feeds a multiband calc."""
+    path_c = str(tmp_path / "c.tif")
+    c = np.stack([_ramp(160, 160, base=3), _ramp(160, 160, base=50)])
+    write_cog(path_c, c, transform=(0.0, GRID.xres, 10.0, GRID.xres),
+              nodata=None, blockxsize=80, overviews=False)
+    for uris in ([sources["a"][0], sources["b"][0]],
+                 [sources["a"][0], path_c, sources["b"][0]],
+                 [path_c, sources["a"][0]]):
+        out = GeoTIFFReader(src_nodata)(uris, bounds, shape, band_count)
+        data, mask = _masked_equal_mosaic(uris, bounds, shape, band_count,
+                                          src_nodata)
+        assert out.dtype == data.dtype
+        np.testing.assert_array_equal(np.ma.getdata(out), data)
+        np.testing.assert_array_equal(np.ma.getmaskarray(out), mask)
+
+
 def test_pipe_cog_to_cog(spark, tmp_path, sources):
     """Full raster job with real GeoTIFF at both ends."""
     layer = LayerModel(

@@ -17,6 +17,7 @@ from gfw_pixetl_spark.sources.jpeg import (
     _AC_CHR, _AC_LUM, _DC_CHR, _DC_LUM, _BitWriter, _encode_codes,
     _magnitude, decode_jpeg, encode_jpeg, encode_jpeg_progressive,
 )
+from tests.conftest import refusal_counts
 
 
 def test_dc_only_grayscale_exact_roundtrip():
@@ -394,3 +395,17 @@ def test_progressive_rejects_bad_scripts():
         encode_jpeg_progressive(img, ac_bands=[(0, 63)])
     with pytest.raises(ValueError, match="al_levels"):
         encode_jpeg_progressive(img, al_levels=-1)
+
+
+def test_hostile_files_raise_value_error():
+    """Seeded fuzz: truncated and bit-flipped copies of a 32x32 RGB
+    baseline and progressive JPEG raise ValueError, never IndexError
+    (short scan data), KeyError (a missing Huffman code or table),
+    OverflowError (a coefficient too wide for int32) or struct.error
+    (a short segment length)."""
+    yy, xx = np.mgrid[0:32, 0:32]
+    img = np.stack([xx * 8, yy * 8, np.full_like(xx, 100)], -1).astype(
+        np.uint8)
+    for encode in (encode_jpeg, encode_jpeg_progressive):
+        counts = refusal_counts(decode_jpeg, encode(img), 300, seed=7)
+        assert counts["ValueError"] and counts["ok"]

@@ -7,12 +7,15 @@ from __future__ import annotations
 import re
 
 import numpy as np
+import pytest
 
 from gfw_pixetl_spark.sources.geotiff import write_cog
 from gfw_pixetl_spark.sources.raster_meta import (
     band_histogram,
     band_stats,
+    band_summary,
     get_metadata,
+    metadata_from_array,
     write_stats_sidecar,
 )
 
@@ -155,3 +158,91 @@ def test_nan_excluded_with_finite_nodata():
                  "std_dev": 1.0}
     h = band_histogram(arr, nodata=-9999.0)
     assert sum(h["buckets"]) == 2
+
+
+def _old_summary(arr, nodata):
+    """The stats and histogram as two NumPy passes over the valid
+    pixels computed them, before the one-pass ``band_summary``."""
+    keep = np.ones(arr.shape, dtype=bool)
+    if arr.dtype.kind == "f":
+        keep &= ~np.isnan(arr)
+    if nodata is not None and not (
+            isinstance(nodata, float) and np.isnan(nodata)):
+        keep &= arr != nodata
+    v = arr[keep].astype("float64")
+    if v.size == 0:
+        return None, None
+    stats = {"min": float(v.min()), "max": float(v.max()),
+             "mean": float(v.mean()), "std_dev": float(v.std())}
+    lo, hi = stats["min"], stats["max"]
+    if arr.dtype.kind in "ui":
+        lo, hi = lo - 0.5, hi + 0.5
+    elif hi == lo:
+        hi = lo + 1.0
+    counts, _ = np.histogram(v, bins=256, range=(lo, hi))
+    return stats, {"count": 256, "min": float(lo), "max": float(hi),
+                   "buckets": [int(c) for c in counts]}
+
+
+def _band(dtype, seed):
+    """A (64, 96) band spread over much of ``dtype``'s range, with ties."""
+    rng = np.random.default_rng(seed)
+    if np.dtype(dtype).kind == "f":
+        arr = rng.normal(50.0, 20.0, (64, 96)).astype(dtype)
+        arr[8:][rng.random((56, 96)) < 0.05] = np.nan  # row 0 stays finite
+        return arr
+    info = np.iinfo(dtype)
+    lo, hi = max(info.min, -40000), min(info.max, 40000)
+    return rng.integers(lo, hi, (64, 96), endpoint=True).astype(dtype)
+
+
+@pytest.mark.parametrize("dtype", [
+    "uint8", "int8", "uint16", "int16",  # per-value counts
+    "int32", "float32", "float64",       # valid pixels
+])
+@pytest.mark.parametrize("nodata_kind", ["in_data", "outside", "nan", "none"])
+def test_band_summary_matches_two_pass_numpy(tmp_path, dtype, nodata_kind):
+    arr = _band(dtype, seed=7)
+    nodata = {"in_data": arr.flat[5].item(), "outside": -99999,
+              "nan": float("nan"), "none": None}[nodata_kind]
+    if nodata_kind == "in_data" and dtype.startswith("float"):
+        arr[:8] = nodata  # a whole strip of nodata pixels
+    old_stats, old_hist = _old_summary(arr, nodata)
+    stats, hist = band_summary(arr, nodata)
+    assert (band_stats(arr, nodata), band_histogram(arr, nodata)) == (
+        stats, hist)
+    for key in ("min", "max", "mean"):
+        assert stats[key] == old_stats[key]
+    assert stats["std_dev"] == pytest.approx(old_stats["std_dev"],
+                                             rel=1e-12)
+    assert hist == old_hist
+    # the sidecar, the bytes a consumer sees, is unchanged
+    new_md = metadata_from_array(arr[None], {"nodata": nodata}, TRANSFORM,
+                                 compute_stats=True, compute_histogram=True)
+    old_md = {"bands": [{"stats": old_stats, "histogram": old_hist}]}
+    new_path = write_stats_sidecar(str(tmp_path / "new.tif"), new_md)
+    old_path = write_stats_sidecar(str(tmp_path / "old.tif"), old_md)
+    assert open(new_path, "rb").read() == open(old_path, "rb").read()
+
+
+@pytest.mark.parametrize("dtype", ["uint8", "int16", "int32", "float32"])
+def test_band_summary_all_nodata_is_none(dtype):
+    arr = np.full((4, 5), 7, dtype=dtype)
+    assert band_summary(arr, 7) == (None, None)
+    assert band_stats(arr, 7) is None and band_histogram(arr, 7) is None
+
+
+def test_band_summary_stats_only_skips_histogram():
+    arr = _band("uint16", seed=3)
+    stats, hist = band_summary(arr, 0, histogram=False)
+    assert hist is None and stats == band_summary(arr, 0)[0]
+
+
+def test_band_summary_rounding_edge_takes_numpy_sum(monkeypatch):
+    """Near a rounding edge of the sidecar's 14 digits the std is NumPy's
+    own pairwise sum over the pixels, bit for bit."""
+    from gfw_pixetl_spark.sources import raster_meta
+
+    monkeypatch.setattr(raster_meta, "_TIE", 0.5)  # every std is "near"
+    arr = _band("int16", seed=5)
+    assert band_summary(arr, 0)[0] == _old_summary(arr, 0)[0]

@@ -9,12 +9,19 @@ does):
 * ``map_1row_s``: a 1-row identity ``mapInPandas`` (one Python task);
 * ``map_nrow_s``: an N-row identity ``mapInPandas`` (N Python tasks);
 
-plus ``worker_invalidate_ms``, the median worker-side time of one
-``importlib.invalidate_caches()`` call, the call PySpark makes before
-every task (``pyspark/worker_util.py::setup_spark_files``). Each job
-is materialised with a ``noop`` write after two warm-up runs. The
-difference ``map_1row_s - jvm_only_s`` is the fixed price of
-one Python stage.
+and two worker-side medians from a 1-row ``mapInPandas``:
+
+* ``first_batch_ms``: the wait from the UDF's first line to its first
+  Arrow batch. It shows the JVM<->worker transport: ~40 ms is TCP's
+  Nagle algorithm meeting delayed ACK, ~2 ms a Unix domain socket
+  (4 vCPUs);
+* ``worker_invalidate_ms``: one ``importlib.invalidate_caches()``, the
+  call PySpark makes before every task
+  (``pyspark/worker_util.py::setup_spark_files``).
+
+Each job is materialised with a ``noop`` write after two warm-up runs.
+The difference ``map_1row_s - jvm_only_s`` is the fixed price of one
+Python stage.
 
 Usage:
   python tools/python_task_floor.py [--reps 9] [--cores N]
@@ -44,18 +51,23 @@ def _identity(batches):
     yield from batches
 
 
-def _invalidate_ms(batches):
+def _worker_ms(batches):
+    t0 = time.perf_counter()
     import importlib
 
     import pandas as pd
 
     import gfw_pixetl_spark  # noqa: F401
 
-    for _ in batches:
+    it = iter(batches)
+    next(it, None)
+    first_batch = (time.perf_counter() - t0) * 1e3
+    for _ in it:
         pass
     t0 = time.perf_counter()
     importlib.invalidate_caches()
-    yield pd.DataFrame({"ms": [(time.perf_counter() - t0) * 1e3]})
+    yield pd.DataFrame({"first_batch_ms": [first_batch],
+                        "invalidate_ms": [(time.perf_counter() - t0) * 1e3]})
 
 
 def _timed(df, reps: int) -> float:
@@ -93,9 +105,11 @@ def main(argv=None) -> int:
         "map_nrow_s": _timed(many.mapInPandas(_identity, "i long"),
                              args.reps),
     }
-    ms = [r.ms for _ in range(args.reps + 2)
-          for r in one.mapInPandas(_invalidate_ms, "ms double").collect()]
-    res["worker_invalidate_ms"] = median(ms[2:])
+    probe = one.mapInPandas(
+        _worker_ms, "first_batch_ms double, invalidate_ms double")
+    rows = [r for _ in range(args.reps + 2) for r in probe.collect()][2:]
+    res["first_batch_ms"] = median(r.first_batch_ms for r in rows)
+    res["worker_invalidate_ms"] = median(r.invalidate_ms for r in rows)
     print(json.dumps({k: round(v, 4) if isinstance(v, float) else v
                       for k, v in res.items()}))
     spark.stop()
